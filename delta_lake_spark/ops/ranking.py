@@ -76,7 +76,13 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType, LongType, StructField, StructType
+from pyspark.sql.types import (
+    IntegerType,
+    IntegralType,
+    LongType,
+    StructField,
+    StructType,
+)
 
 _PID = "_gr_pid"
 _OFF = "_gr_offset"
@@ -364,6 +370,20 @@ def _null_key(g):
     return g
 
 
+def _integral_value(df: DataFrame, value: str | Column) -> Column:
+    """The cumsum value column widened to long.  Only integral types are
+    accepted: casting a decimal or double to long would silently truncate
+    every value, so those raise instead."""
+    val = F.col(value) if isinstance(value, str) else value
+    dtype = df.select(val).schema.fields[0].dataType
+    if not isinstance(dtype, IntegralType):
+        raise TypeError(
+            f"cumsum value must be an integral column, got {dtype.simpleString()}"
+            " — scale decimals/doubles to an integral unit (e.g. cents) first"
+        )
+    return val.cast("long")
+
+
 def _cumsum_one_exchange() -> bool:
     """Form switch for the running-sum step (r10, measured both ways).
 
@@ -402,7 +422,8 @@ def global_cumsum(
     per-partition partial sums as offsets, partition-local running sum).
     ``order_by`` must be a unique key; ascending only.  ``value`` must be an
     integral, effectively non-null column (SQL SUM skips NULLs; they
-    contribute 0 here) for the result to be order-independent and exact.
+    contribute 0 here) for the result to be order-independent and exact;
+    any other type raises ``TypeError``.
 
     The running-sum step takes one of two measured forms (see
     :func:`_cumsum_one_exchange`): the default pid-window (fastest on a
@@ -416,9 +437,8 @@ def global_cumsum(
         # scales with the cluster, which is all the prefix sum needs
         num_partitions = spark.sparkContext.defaultParallelism
     cols = [F.col(c) if isinstance(c, str) else c for c in order_by]
-    val = F.col(value) if isinstance(value, str) else value
     ranged = (
-        df.withColumn("_gc_v", val.cast("long"))
+        df.withColumn("_gc_v", _integral_value(df, value))
         .repartitionByRange(num_partitions, *cols)
         .withColumn(_PID, F.spark_partition_id())
         .persist()
@@ -510,7 +530,8 @@ def global_cumsum_grouped(
     Same contracts as the grouped ranking: ``order_by`` unique per group,
     ``group_col`` a small bounded tag (the stats collect is P x #groups
     driver rows), NULL groups handled.  ``value`` integral non-null (NULLs
-    contribute 0).  Returns ``(df, totals)`` with each group's exact sum.
+    contribute 0; other types raise ``TypeError``).  Returns ``(df,
+    totals)`` with each group's exact sum.
 
     The running-sum step follows the same two measured forms as
     :func:`global_cumsum` (see :func:`_cumsum_one_exchange`): default
@@ -520,9 +541,8 @@ def global_cumsum_grouped(
     if num_partitions is None:
         num_partitions = spark.sparkContext.defaultParallelism
     cols = [F.col(c) if isinstance(c, str) else c for c in order_by]
-    val = F.col(value) if isinstance(value, str) else value
     ranged = (
-        df.withColumn("_gc_v", val.cast("long"))
+        df.withColumn("_gc_v", _integral_value(df, value))
         .repartitionByRange(num_partitions, F.col(group_col), *cols)
         .withColumn(_PID, F.spark_partition_id())
         .persist()

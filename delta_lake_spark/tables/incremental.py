@@ -59,6 +59,12 @@ def anti_join_append(
     no target rewrite at all — the cheapest possible incremental write when
     the target is append-only (e.g. date-keyed daily marts).
 
+    Precondition: the source is append-only per key — rows under a key
+    that has already landed never change.  A key already in the target is
+    never revisited, so a later correction to its rows (an updated or moved
+    order feeding an aggregate) is silently dropped; a source whose landed
+    keys can change needs a MERGE or a recompute-and-replace instead.
+
     Keys compare NULL-SAFELY: under plain SQL equality a NULL key "never
     exists", so a NULL-keyed row (e.g. the out-of-range date bucket of a
     daily mart) would re-append on EVERY run — unbounded duplicate growth

@@ -12,6 +12,9 @@ from hypothesis import strategies as st
 import contextlib
 import io
 
+import pytest
+from pyspark.sql import functions as F
+
 from delta_lake_spark.ops import ranking as ranking_mod
 from delta_lake_spark.ops.ranking import (
     global_cumsum,
@@ -158,3 +161,19 @@ def test_offsets_literal_array_below_partition_ceiling(spark):
     assert got == {kv: i + 1 for i, kv in enumerate(sorted(rows))}
     plan = _plan_of(ranked)
     assert "Join" not in plan, plan
+
+
+def test_global_cumsum_rejects_non_integral_values(spark):
+    """A decimal or double value column would be truncated by the long
+    running sum, so both cumsums refuse it instead of summing wrong."""
+    df = spark.createDataFrame(
+        [(0, 1, 1.5), (0, 2, 2.25)], "g int, id long, d double"
+    ).withColumn("dec", F.col("d").cast("decimal(10,2)"))
+    for col in ["d", "dec", F.col("d") * 2]:
+        with pytest.raises(TypeError, match="integral"):
+            global_cumsum(df, col, ["id"])
+        with pytest.raises(TypeError, match="integral"):
+            global_cumsum_grouped(df, "g", col, ["id"])
+    # integral inputs narrower than long still widen and sum exactly
+    got = [r.cumsum for r in global_cumsum(df, F.col("id").cast("int"), ["id"]).collect()]
+    assert sorted(got) == [1, 3]

@@ -106,20 +106,24 @@ class MedallionPipeline:
         rows violating hard invariants are routed to
         ``silver/orders_quarantine`` (tagged with the failed rule names)
         instead of failing the build or polluting the marts — count
-        reconciliation stays exact (kept + quarantined == bronze).
+        reconciliation stays exact (kept + quarantined == bronze).  The
+        batch build derives the whole quarantine from bronze, so it
+        replaces the quarantine rather than appending to it: rebuilding a
+        lake never double-counts a bad row.
 
         ``include_orders=False`` builds only the dimension-side Silver
         tables (customer/nation/rates) — the setup for a lake whose fact
         table arrives exclusively through :meth:`stream_ingest_orders`.
         """
-        from delta_lake_spark.quality import expect_or_quarantine
+        from delta_lake_spark.quality import split_by_expectations
 
         if include_orders:
-            orders = expect_or_quarantine(
-                self.read("bronze", "orders"),
-                ORDERS_EXPECTATIONS,
-                self._t("silver", "orders_quarantine"),
+            orders, bad = split_by_expectations(
+                self.read("bronze", "orders"), ORDERS_EXPECTATIONS
             )
+            quarantine = self._t("silver", "orders_quarantine")
+            if ManagedTable.is_managed_table(quarantine.path) or bad.limit(1).count():
+                quarantine.write(bad)
             self._t("silver", "orders").write(
                 self.silver_orders_transform(orders), partition_by=["order_year"]
             )

@@ -705,11 +705,10 @@ class ManagedTable:
         mt._commit(
             {
                 "operation": "convert",
+                "read_version": None,
                 "files": files,
                 "partition_by": partition_by,
                 "schema": json.loads(schema.json()),
-                "num_files": len(files),
-                "added_files": len(files),
             }
         )
         return mt
@@ -820,23 +819,42 @@ class ManagedTable:
         return snap
 
     def _commit(self, entry: dict[str, Any]) -> int:
-        """Commit ``entry`` (carrying the complete post-commit ``files``
-        list) as the next version.  The log entry stores only the diff vs
-        the previous snapshot; a full checkpoint lands every
-        ``_CHECKPOINT_INTERVAL`` commits."""
+        """Build the log entry of one operation and commit it — the only
+        code that knows the entry format.
+
+        ``entry`` holds the ``operation`` name, the fields the operation
+        changes, and ``read_version``: the snapshot version the operation
+        read (Delta's ``commitInfo.readVersion``; ``None`` when it found no
+        table).  Everything else comes from that snapshot: ``files``
+        defaults to its file list (a metadata-only commit passes none),
+        ``partition_by``, ``schema`` and the table-level metadata keys carry
+        over unless set, ``num_files`` is ``len(files)`` and
+        ``added_files`` counts the added records whose path is new.
+
+        The commit lands as ``read_version + 1`` through a put-if-absent
+        link, so a commit that landed after the operation's read raises
+        :class:`ConcurrentWriteError` instead of being silently dropped.
+        Without a ``read_version`` key the head is used.  The log entry
+        stores only the diff vs the read snapshot; a full checkpoint lands
+        every ``_CHECKPOINT_INTERVAL`` commits."""
         os.makedirs(os.path.join(self.path, _LOG_DIR), exist_ok=True)
-        latest = self.latest_version()
-        version = 0 if latest is None else latest + 1
-        new_files: list[dict[str, Any]] = entry.pop("files")
-        prev: dict[str, dict[str, Any]] = (
-            {}
-            if latest is None
-            else {f["path"]: f for f in self._entry(latest)["files"]}
+        read_version = (
+            entry.pop("read_version")
+            if "read_version" in entry
+            else self.latest_version()
         )
-        # CHECK constraints / generated-column exprs / identity high-water
-        # are table-level metadata: carry them across commits unless the
-        # committing operation sets them explicitly
+        version = 0 if read_version is None else read_version + 1
+        snap = {} if read_version is None else self._entry(read_version)
+        prev = {f["path"]: f for f in snap.get("files", ())}
+        new_files: list[dict[str, Any]] = (
+            entry.pop("files") if "files" in entry else list(prev.values())
+        )
+        # layout, schema, CHECK constraints, generated-column exprs,
+        # identity high-water, ... are table-level metadata: carry them
+        # across commits unless the committing operation sets them
         for meta_key in (
+            "partition_by",
+            "schema",
             "constraints",
             "generated",
             "identity",
@@ -851,13 +869,14 @@ class ManagedTable:
             "clustering_by",
             "user_props",
         ):
-            if meta_key not in entry and latest is not None:
-                carried = self._entry(latest).get(meta_key)
-                if carried:
-                    entry[meta_key] = carried
+            if meta_key not in entry and snap.get(meta_key):
+                entry[meta_key] = snap[meta_key]
+        entry.setdefault("partition_by", [])
         new_paths = {f["path"] for f in new_files}
         entry["add"] = [f for f in new_files if prev.get(f["path"]) != f]
         entry["remove"] = sorted(p for p in prev if p not in new_paths)
+        entry["num_files"] = len(new_files)
+        entry["added_files"] = sum(1 for f in entry["add"] if f["path"] not in prev)
         rt_assigned: list[dict[str, Any]] = []
         if entry.get("row_tracking"):
             # assign each NEW file its fresh-row-id base from the table's
@@ -1000,19 +1019,21 @@ class ManagedTable:
         types must match; old files read back with nulls for new columns).
         ``overwrite`` always replaces the schema (``overwriteSchema``).
 
-        Optimistic concurrency: appends and overwrites don't read table
-        DATA, so when another writer wins the version race the commit is
-        re-prepared against the new snapshot and retried (up to
-        ``max_retries`` times) — Delta's WriteSerializable behavior, where
-        blind appends never conflict and concurrent overwrites are
-        last-writer-wins.  A retry re-validates schema/layout against the
-        competitor's commit: a concurrently-changed partition layout (or
-        an incompatible concurrent schema change) still raises, because
-        the data files were already laid out under the old assumptions.
-        Read-modify-write operations (merge/delete/update/optimize) keep
-        failing fast with :class:`ConcurrentWriteError` — their read
-        snapshot may be logically invalidated, which needs the caller to
-        re-run the whole operation.
+        Optimistic concurrency: every commit is validated against the
+        version its operation read, so a commit that landed in between is
+        never dropped.  Appends and overwrites don't read table DATA, so
+        when another writer lands first the commit is re-prepared against
+        the new snapshot and retried (up to ``max_retries`` times) —
+        Delta's WriteSerializable behavior, where blind appends never
+        conflict and concurrent overwrites are last-writer-wins.  A retry
+        re-validates schema/layout against the competitor's commit: a
+        concurrently-changed partition layout (or an incompatible
+        concurrent schema change) still raises, because the data files
+        were already laid out under the old assumptions.  Read-modify-write
+        operations (merge/delete/update/optimize/analyze/...) raise
+        :class:`ConcurrentWriteError` instead — their read snapshot may be
+        logically invalidated, so the caller re-runs the whole operation
+        (:meth:`merge_with_retry`, :meth:`optimize_with_retry`).
         """
         if mode not in ("overwrite", "append"):
             raise ValueError(f"mode must be overwrite|append, got {mode!r}")
@@ -1024,8 +1045,9 @@ class ManagedTable:
         identity_update: dict[str, Any] | None = None
         ident_cache: DataFrame | None = None
         meta_extra: dict[str, Any] = {}
-        if self.latest_version() is not None:
-            cur = self._entry()
+        read_version = self.latest_version()
+        cur = None if read_version is None else self._entry(read_version)
+        if cur is not None:
             if mode == "append":
                 df, identity_update, ident_cache = (
                     self._apply_write_metadata(df, cur)
@@ -1061,20 +1083,18 @@ class ManagedTable:
                 return self.latest_version()  # type: ignore[return-value]
         self._enforce_constraints(df, f"{mode} write")
 
-        def prep() -> tuple[
+        def prep(read_version: int | None) -> tuple[
             list[dict[str, Any]],
             list[str] | None,
             StructType,
             dict[str, str] | None,
         ]:
+            prev = None if read_version is None else self._entry(read_version)
             prev_files: list[dict[str, Any]] = []
             pb = requested_pb
             schema = df.schema
-            cur_map: dict[str, str] | None = None
-            if self.latest_version() is not None:
-                cur_map = self._entry().get("column_mapping")
-            if mode == "append" and self.latest_version() is not None:
-                prev = self._entry()
+            cur_map = None if prev is None else prev.get("column_mapping")
+            if mode == "append" and prev is not None:
                 prev_files = prev["files"]
                 existing_pb = prev.get("partition_by") or None
                 if pb is None:
@@ -1118,9 +1138,9 @@ class ManagedTable:
             return prev_files, pb, schema, new_map
 
         try:
-            prev_files, partition_by, schema, write_map = prep()
-            if optimize_write is None and self.latest_version() is not None:
-                optimize_write = bool(self._entry().get("optimize_write"))
+            prev_files, partition_by, schema, write_map = prep(read_version)
+            if optimize_write is None and cur is not None:
+                optimize_write = bool(cur.get("optimize_write"))
             if optimize_write and partition_by:
                 # Delta optimizeWrite analog: shuffle rows to their target
                 # partition BEFORE the write so each partition value lands
@@ -1141,6 +1161,7 @@ class ManagedTable:
                 version = self._commit(
                     {
                         "operation": mode,
+                        "read_version": read_version,
                         **(
                             {"txn": {"app": txn_app, "batch": int(txn_batch)}}
                             if txn_app is not None
@@ -1149,8 +1170,6 @@ class ManagedTable:
                         "files": prev_files + files,
                         "partition_by": partition_by or [],
                         "schema": json.loads(schema.json()),
-                        "num_files": len(prev_files) + len(files),
-                        "added_files": len(files),
                         **meta_extra,
                         **(
                             {"column_mapping": write_map}
@@ -1183,7 +1202,9 @@ class ManagedTable:
                         # the RACING writer was our own replay twin: its
                         # commit already carries this batch — drop ours
                         return self.latest_version()  # type: ignore[return-value]
-                new_prev, new_pb, schema, new_map = prep()  # re-validate vs winner
+                # re-validate against the winner's snapshot
+                read_version = self.latest_version()
+                new_prev, new_pb, schema, new_map = prep(read_version)
                 if write_map is not None or new_map is not None:
                     stable = {
                         k: v
@@ -1273,34 +1294,15 @@ class ManagedTable:
             version = self.version_at(timestamp)
         version = self._resolve_version(version)
         entry = self._entry(version)
-        self._check_time_travel_files(entry, version)
+        if version is not None and version != self.latest_version():
+            self._require_files_exist(entry["files"], f"time travel to version {version}")
         return self._read_files(entry, entry["files"])
 
-    def _check_time_travel_files(
-        self, entry: dict[str, Any], version: int | None
-    ) -> None:
-        """Driver-side existence probe, ONLY for explicit time travel to a
-        non-head version (the head's files are live by the vacuum contract,
-        so the hot path pays nothing)."""
-        if version is None or version == self.latest_version():
-            return
-        missing = [
-            p
-            for f in entry["files"]
-            for p in [f["path"], *_rec_dvs(f)]
-            if not os.path.exists(os.path.join(self.path, p))
-        ]
-        if missing:
-            raise VacuumedVersionError(
-                f"cannot time-travel to version {version}: {len(missing)} of "
-                f"{len(entry['files'])} data file(s) were removed by vacuum "
-                f"(e.g. {missing[0]}). Increase vacuum retain_hours to keep "
-                "historical versions readable."
-            )
-
     def _require_files_exist(self, recs: list[dict[str, Any]], what: str) -> None:
-        """Clear VacuumedVersionError (not a mid-execution Spark
-        file-not-found) when a historical read needs vacuumed files."""
+        """Driver-side existence probe for a historical read: a clear
+        VacuumedVersionError at plan time (not a mid-execution Spark
+        file-not-found) when ``recs`` name data or DV files removed by
+        vacuum."""
         missing = [
             p
             for f in recs
@@ -1309,9 +1311,9 @@ class ManagedTable:
         ]
         if missing:
             raise VacuumedVersionError(
-                f"{what} needs {len(missing)} data file(s) removed by vacuum "
-                f"(e.g. {missing[0]}). Increase vacuum retain_hours to keep "
-                "the range readable."
+                f"{what} needs {len(missing)} of {len(recs)} file(s) removed "
+                f"by vacuum (e.g. {missing[0]}). Increase vacuum retain_hours "
+                "to keep historical versions readable."
             )
 
     def to_df(self) -> DataFrame:
@@ -1332,7 +1334,8 @@ class ManagedTable:
         reference's Z-order benefit (deltalake.ipynb:8354-8356).
         """
         entry = self._entry(version)
-        self._check_time_travel_files(entry, version)
+        if version is not None and version != self.latest_version():
+            self._require_files_exist(entry["files"], f"time travel to version {version}")
         _skipped, live = self._split_files(entry, filters)
         df = self._read_files(entry, live)
         return df.filter(_filters_expr(filters))
@@ -1596,6 +1599,7 @@ class ManagedTable:
         table_cols = [f.name for f in existing_schema.fields]
         read_entry = {**entry, "schema": schema_json}
         row_tracked = bool(entry.get("row_tracking"))
+        cdf_on = bool(entry.get("cdf"))
 
         # The source plan feeds every downstream consumer (the pruning
         # aggregate/distinct below plus both branches of the merge shape);
@@ -1668,11 +1672,7 @@ class ManagedTable:
                 keep_files, affected = [], []
                 for f in entry["files"]:
                     (affected if not filters or _file_may_match(f, filters) else keep_files).append(f)
-            target = (
-                self._read_files_tracked(read_entry, affected)
-                if row_tracked
-                else self._read_files(read_entry, affected)
-            )
+            target = self._read_scope(read_entry, affected)
 
             # WHEN NOT MATCHED BY SOURCE (Delta 2.3+ clause): transform the
             # unmatched-target branch BEFORE the standard matched/insert
@@ -1697,10 +1697,10 @@ class ManagedTable:
                 # vanish from the postimage filter)
                 t2 = target.join(hit, keys, "left").withColumn("_bys", cond)
                 applies = F.col("_bys")
-                if self.cdf_enabled() or with_metrics:
+                if cdf_on or with_metrics:
                     bysource_touched = t2.filter(applies).count()
                 if when_not_matched_by_source == "delete":
-                    if self.cdf_enabled():
+                    if cdf_on:
                         bysource_cdc = (
                             t2.filter(applies)
                             .select(*table_cols)
@@ -1713,7 +1713,7 @@ class ManagedTable:
                         ~F.coalesce(applies, F.lit(False))
                     ).drop("_src_hit", "_bys")
                 else:  # update
-                    pre = t2.filter(applies) if self.cdf_enabled() else None
+                    pre = t2.filter(applies) if cdf_on else None
                     upd = t2
                     for col_, e in (not_matched_by_source_set or {}).items():
                         expr_ = F.expr(e) if isinstance(e, str) else e
@@ -1823,7 +1823,7 @@ class ManagedTable:
                 }
 
             cdc_files = None
-            if self.cdf_enabled():
+            if cdf_on:
                 cdc = self._merge_cdc(
                     target,
                     src,
@@ -1841,7 +1841,7 @@ class ManagedTable:
                     # (deleted rows left the target; updated rows have no
                     # source match), so their images union in here
                     cdc = cdc.unionByName(bysource_cdc)
-                cdc_files = self._write_cdc_dir(cdc)
+                cdc_files = self._write_sidecar_dir(cdc, "cdc")
             if partition_by and bool(entry.get("optimize_write")):
                 # Delta optimizeWrite applies to MERGE rewrites too:
                 # without it every shuffle task of the rewrite writes a
@@ -1855,9 +1855,10 @@ class ManagedTable:
             _dir, files = self._write_commit_dir(merged, partition_by or None)
         finally:
             src.unpersist()
-        self._commit(
+        return self._commit(
             {
                 "operation": "merge",
+                "read_version": entry["version"],
                 **(
                     {"txn": {"app": txn_app, "batch": int(txn_batch)}}
                     if txn_app is not None
@@ -1870,15 +1871,11 @@ class ManagedTable:
                     else {}
                 ),
                 "files": keep_files + files,
-                "partition_by": partition_by,
                 "schema": schema_json,
-                "num_files": len(keep_files) + len(files),
-                "added_files": len(files),
                 "pruned": prune,
                 "skipped_files": len(keep_files),
             }
         )
-        return self.latest_version()  # type: ignore[return-value]
 
     def _conditional_merge_plan(
         self,
@@ -2130,11 +2127,7 @@ class ManagedTable:
         entry = self._entry()
         partition_by: list[str] = entry.get("partition_by") or []
         keep_files, affected = self._split_files(entry, filters)
-        scope = (
-            self._read_files_tracked(entry, affected)
-            if entry.get("row_tracking")
-            else self._read_files(entry, affected)
-        )
+        scope = self._read_scope(entry, affected)
         # SQL DELETE semantics: a row is removed only when the predicate is
         # TRUE.  A NULL predicate (null in a filtered column) must KEEP the
         # row — the raw complement ~expr is also NULL there, which would
@@ -2142,37 +2135,35 @@ class ManagedTable:
         # (row-loss, caught by test_delete_keeps_null_predicate_rows).
         remaining = scope.filter(~F.coalesce(_filters_expr(filters), F.lit(False)))
         cdc_files = None
-        if self.cdf_enabled():
-            cdc_files = self._write_cdc_dir(
+        if entry.get("cdf"):
+            cdc_files = self._write_sidecar_dir(
                 scope.filter(_filters_expr(filters))
                 .drop(_ROW_ID)
-                .withColumn(_CDC_COL, F.lit("delete"))
+                .withColumn(_CDC_COL, F.lit("delete")),
+                "cdc",
             )
         _dir, files = self._write_commit_dir(remaining, partition_by or None)
-        self._commit(
+        return self._commit(
             {
                 "operation": "delete",
+                "read_version": entry["version"],
                 **({"cdc_files": cdc_files} if cdc_files is not None else {}),
                 "files": keep_files + files,
-                "partition_by": partition_by,
-                "schema": entry["schema"],
-                "num_files": len(keep_files) + len(files),
-                "added_files": len(files),
                 "skipped_files": len(keep_files),
             }
         )
-        return self.latest_version()  # type: ignore[return-value]
 
-    def _write_dv_dir(self, dv_df: DataFrame) -> list[str]:
-        """Distributed write of one commit's deletion-vector sidecar;
-        returns the table-relative parquet paths."""
+    def _write_sidecar_dir(self, df: DataFrame, kind: str) -> list[str]:
+        """Distributed write of one commit's ``kind`` sidecar (``dv``:
+        deletion vectors, ``cdc``: change data — all table columns +
+        ``_change_type``); returns the table-relative parquet paths."""
         latest = self.latest_version()
         commit_dir = (
             f"c{(0 if latest is None else latest + 1):06d}"
-            f"-dv-{uuid.uuid4().hex[:8]}"
+            f"-{kind}-{uuid.uuid4().hex[:8]}"
         )
         out = os.path.join(self.path, commit_dir)
-        dv_df.write.mode("errorifexists").parquet(out)
+        df.write.mode("errorifexists").parquet(out)
         return sorted(
             os.path.relpath(os.path.join(dirpath, name), self.path)
             for dirpath, _dirs, names in os.walk(out)
@@ -2196,18 +2187,13 @@ class ManagedTable:
             )
         partition_by: list[str] = entry.get("partition_by") or []
         keep_files, affected = self._split_files(entry, filters)
-        row_tracked = bool(entry.get("row_tracking"))
         hits = (
-            (
-                self._read_files_tracked(entry, affected, with_pos=True)
-                if row_tracked
-                else self._read_files(entry, affected, with_pos=True)
-            )
+            self._read_scope(entry, affected, with_pos=True)
             .filter(_filters_expr(filters))
             .persist()
         )
         try:
-            dv_paths = self._write_dv_dir(hits.select(_DV_FILE, _DV_POS))
+            dv_paths = self._write_sidecar_dir(hits.select(_DV_FILE, _DV_POS), "dv")
             # bounded collect: one row per affected FILE, never per row
             counts = {
                 r[_DV_FILE]: r["cnt"]
@@ -2216,7 +2202,7 @@ class ManagedTable:
                 .collect()
             }
             new_data_files: list[dict[str, Any]] = []
-            cdf_on = self.cdf_enabled()
+            cdf_on = bool(entry.get("cdf"))
             cdc_files = None
             if assignments is not None:
                 # row tracking: the reassigned images carry their original
@@ -2229,23 +2215,25 @@ class ManagedTable:
                         col, expr.cast(field.dataType)
                     )
                 if cdf_on:
-                    cdc_files = self._write_cdc_dir(
+                    cdc_files = self._write_sidecar_dir(
                         hits.drop(_DV_FILE, _DV_POS, _ROW_ID)
                         .withColumn(_CDC_COL, F.lit("update_preimage"))
                         .unionByName(
                             updated.drop(_ROW_ID).withColumn(
                                 _CDC_COL, F.lit("update_postimage")
                             )
-                        )
+                        ),
+                        "cdc",
                     )
                 _dir, new_data_files = self._write_commit_dir(
                     updated, partition_by or None
                 )
             elif cdf_on:
-                cdc_files = self._write_cdc_dir(
+                cdc_files = self._write_sidecar_dir(
                     hits.drop(_DV_FILE, _DV_POS, _ROW_ID).withColumn(
                         _CDC_COL, F.lit("delete")
-                    )
+                    ),
+                    "cdc",
                 )
             recs = []
             scope = []
@@ -2262,27 +2250,21 @@ class ManagedTable:
                     )
                 else:
                     recs.append(rec)
-            total = sum(counts.values())
-            all_files = keep_files + recs + new_data_files
-            self._commit(
+            return self._commit(
                 {
                     "operation": "delete" if assignments is None else "update",
+                    "read_version": entry["version"],
                     **({"cdc_files": cdc_files} if cdc_files is not None else {}),
                     "mode": "merge_on_read",
                     "dv_added": dv_paths,
                     "dv_scope": scope,
-                    "files": all_files,
-                    "partition_by": partition_by,
-                    "schema": entry["schema"],
-                    "num_files": len(all_files),
-                    "added_files": len(new_data_files),
+                    "files": keep_files + recs + new_data_files,
                     "skipped_files": len(keep_files),
-                    "num_deleted_rows": total,
+                    "num_deleted_rows": sum(counts.values()),
                 }
             )
         finally:
             hits.unpersist()
-        return self.latest_version()  # type: ignore[return-value]
 
     def purge_deletes(
         self, target_file_bytes: int = 128 * 1024 * 1024
@@ -2299,27 +2281,18 @@ class ManagedTable:
         clean = [f for f in entry["files"] if not _rec_dvs(f)]
         total = sum(f["size"] for f in dirty) or 1
         n_files = max(1, -(-total // target_file_bytes))
-        df = (
-            self._read_files_tracked(entry, dirty)
-            if entry.get("row_tracking")
-            else self._read_files(entry, dirty)
-        )
+        df = self._read_scope(entry, dirty)
         if n_files < len(dirty):
             df = df.coalesce(n_files)
         _dir, files = self._write_commit_dir(df, partition_by or None)
-        all_files = clean + files
-        self._commit(
+        return self._commit(
             {
                 "operation": "optimize",
+                "read_version": entry["version"],
                 "purged_dv_rows": sum(f.get("dv_rows", 0) for f in dirty),
-                "files": all_files,
-                "partition_by": partition_by,
-                "schema": entry["schema"],
-                "num_files": len(all_files),
-                "added_files": len(files),
+                "files": clean + files,
             }
         )
-        return self.latest_version()  # type: ignore[return-value]
 
     def add_bloom_filters(
         self,
@@ -2409,18 +2382,14 @@ class ManagedTable:
             }
             for rec in files
         ]
-        self._commit(
+        return self._commit(
             {
                 "operation": "bloom",
+                "read_version": entry["version"],
                 "bloom_columns": list(cols),
                 "files": recs,
-                "partition_by": entry.get("partition_by") or [],
-                "schema": entry["schema"],
-                "num_files": len(recs),
-                "added_files": 0,
             }
         )
-        return self.latest_version()  # type: ignore[return-value]
 
     def update_where(
         self,
@@ -2441,24 +2410,21 @@ class ManagedTable:
         entry = self._entry()
         partition_by: list[str] = entry.get("partition_by") or []
         keep_files, affected = self._split_files(entry, filters)
-        df = (
-            self._read_files_tracked(entry, affected)
-            if entry.get("row_tracking")
-            else self._read_files(entry, affected)
-        )
+        df = self._read_scope(entry, affected)
         cond = _filters_expr(filters)
         schema = StructType.fromJson(entry["schema"])
         cdc_files = None
-        if self.cdf_enabled():
+        if entry.get("cdf"):
             pre = df.filter(cond).drop(_ROW_ID)
             post = pre
             for col, expr in assignments.items():
                 field = next(f for f in schema.fields if f.name == col)
                 post = post.withColumn(col, expr.cast(field.dataType))
-            cdc_files = self._write_cdc_dir(
+            cdc_files = self._write_sidecar_dir(
                 pre.withColumn(_CDC_COL, F.lit("update_preimage")).unionByName(
                     post.withColumn(_CDC_COL, F.lit("update_postimage"))
-                )
+                ),
+                "cdc",
             )
         for col, expr in assignments.items():
             field = next(f for f in schema.fields if f.name == col)
@@ -2466,19 +2432,15 @@ class ManagedTable:
                 col, F.when(cond, expr.cast(field.dataType)).otherwise(F.col(col))
             )
         _dir, files = self._write_commit_dir(df, partition_by or None)
-        self._commit(
+        return self._commit(
             {
                 "operation": "update",
+                "read_version": entry["version"],
                 **({"cdc_files": cdc_files} if cdc_files is not None else {}),
                 "files": keep_files + files,
-                "partition_by": partition_by,
-                "schema": entry["schema"],
-                "num_files": len(keep_files) + len(files),
-                "added_files": len(files),
                 "skipped_files": len(keep_files),
             }
         )
-        return self.latest_version()  # type: ignore[return-value]
 
     def merge_in_batches(
         self, source: DataFrame, keys: list[str], n_batches: int = 5
@@ -2530,7 +2492,7 @@ class ManagedTable:
         snap = self._entry()
         cols = list(cols or [])
         if cols:
-            names = {f.name for f in self.schema().fields}
+            names = {f["name"] for f in snap["schema"]["fields"]}
             missing = [c for c in cols if c not in names]
             if missing:
                 raise ValueError(
@@ -2539,11 +2501,8 @@ class ManagedTable:
         return self._commit(
             {
                 "operation": "set_clustering",
+                "read_version": snap["version"],
                 "clustering_by": cols,
-                "files": list(snap["files"]),
-                "partition_by": snap.get("partition_by") or [],
-                "schema": snap["schema"],
-                "num_files": len(snap["files"]),
             }
         )
 
@@ -2629,11 +2588,7 @@ class ManagedTable:
                 live = [f for f in live if f["path"] not in keep]
         if not live:
             return self.latest_version()  # type: ignore[return-value]
-        df = (
-            self._read_files_tracked(entry, live)
-            if entry.get("row_tracking")
-            else self._read_files(entry, live)
-        )
+        df = self._read_scope(entry, live)
         total = sum(f["size"] for f in live) or 1
         n_files = max(1, -(-total // target_file_bytes))
         if zorder_by:
@@ -2705,21 +2660,16 @@ class ManagedTable:
             # rewrite produces untagged records, re-queueing those rows)
             for rec in files:
                 rec["clustered"] = cluster_key
-        all_files = untouched + files
-        self._commit(
+        return self._commit(
             {
                 "operation": "zorder" if (sort_by or zorder_by) else "optimize",
-                "files": all_files,
-                "partition_by": partition_by,
-                "schema": entry["schema"],
-                "num_files": len(all_files),
-                "added_files": len(files),
+                "read_version": entry["version"],
+                "files": untouched + files,
                 "sort_by": sort_by or [],
                 "zorder_by": zorder_by or [],
                 **({"where": [list(f) for f in where]} if where else {}),
             }
         )
-        return self.latest_version()  # type: ignore[return-value]
 
     def _commit_diff(
         self, version: int
@@ -2968,44 +2918,16 @@ class ManagedTable:
         if clash:
             raise ValueError(f"CDF reserves column names {sorted(clash)}")
         return self._commit(
-            {
-                "operation": "set_cdf",
-                "cdf": True,
-                "files": list(snap["files"]),
-                "partition_by": snap.get("partition_by") or [],
-                "schema": snap["schema"],
-                "num_files": len(snap["files"]),
-            }
+            {"operation": "set_cdf", "read_version": snap["version"], "cdf": True}
         )
 
     def disable_cdf(self) -> int:
-        snap = self._entry()
         return self._commit(
             {
                 "operation": "set_cdf",
+                "read_version": self._entry()["version"],
                 "cdf": False,
-                "files": list(snap["files"]),
-                "partition_by": snap.get("partition_by") or [],
-                "schema": snap["schema"],
-                "num_files": len(snap["files"]),
             }
-        )
-
-    def _write_cdc_dir(self, cdc_df: DataFrame) -> list[str]:
-        """Distributed write of one commit's change-data sidecar (all table
-        columns + ``_change_type``); returns table-relative parquet paths."""
-        latest = self.latest_version()
-        commit_dir = (
-            f"c{(0 if latest is None else latest + 1):06d}"
-            f"-cdc-{uuid.uuid4().hex[:8]}"
-        )
-        out = os.path.join(self.path, commit_dir)
-        cdc_df.write.mode("errorifexists").parquet(out)
-        return sorted(
-            os.path.relpath(os.path.join(dirpath, name), self.path)
-            for dirpath, _dirs, names in os.walk(out)
-            for name in names
-            if name.endswith(".parquet")
         )
 
     def _merge_cdc(
@@ -3236,29 +3158,30 @@ class ManagedTable:
         return self._commit(
             {
                 "operation": "set_row_tracking",
+                "read_version": snap["version"],
                 "row_tracking": True,
                 "row_id_hwm": max(hwm, int(snap.get("row_id_hwm") or 0)),
                 "files": files,
-                "partition_by": snap.get("partition_by") or [],
-                "schema": snap["schema"],
-                "num_files": len(files),
             }
         )
 
-    def _read_files_tracked(
+    def _read_scope(
         self,
         entry: dict[str, Any],
         files: list[dict[str, Any]],
         with_pos: bool = False,
     ) -> DataFrame:
-        """Rows of ``files`` with the stable ``_row_id`` column resolved:
-        the materialized value when the file carries one (a rewrite
-        output), else ``base_row_id + row_index`` (a fresh file).  The
-        base lookup is a broadcast join against a files-count-sized frame;
+        """Rows of ``files`` as a rewrite must carry them: with row
+        tracking on, the stable ``_row_id`` column is resolved — the
+        materialized value when the file carries one (a rewrite output),
+        else ``base_row_id + row_index`` (a fresh file).  The base lookup
+        is a broadcast join against a files-count-sized frame;
         merge-on-read deletes keep surviving rows' original indexes, so
         ids hold with no special casing."""
         from pyspark.sql.types import LongType, StructField
 
+        if not entry.get("row_tracking"):
+            return self._read_files(entry, files, with_pos=with_pos)
         missing = [f["path"] for f in files if "base_row_id" not in f]
         if missing:
             raise ValueError(
@@ -3296,8 +3219,9 @@ class ManagedTable:
                 "row tracking is not enabled (as of this version); call "
                 "enable_row_tracking() first"
             )
-        self._check_time_travel_files(entry, version)
-        return self._read_files_tracked(entry, entry["files"])
+        if version is not None and version != self.latest_version():
+            self._require_files_exist(entry["files"], f"time travel to version {version}")
+        return self._read_scope(entry, entry["files"])
 
     # ------------------------------------------------------------------ #
     # auto-compaction / optimized writes (delta.autoOptimize analog)
@@ -3319,19 +3243,15 @@ class ManagedTable:
         change feeds and streams ignore it."""
         if min_files < 2:
             raise ValueError(f"min_files must be >= 2, got {min_files}")
-        snap = self._entry()
         return self._commit(
             {
                 "operation": "set_auto_compact",
+                "read_version": self._entry()["version"],
                 "auto_compact": (
                     {"min_files": min_files, "min_file_bytes": min_file_bytes}
                     if enabled
                     else False
                 ),
-                "files": list(snap["files"]),
-                "partition_by": snap.get("partition_by") or [],
-                "schema": snap["schema"],
-                "num_files": len(snap["files"]),
             }
         )
 
@@ -3340,15 +3260,11 @@ class ManagedTable:
         partitioned writes shuffle rows to their target partition first, so
         each partition value lands as one right-sized file per commit
         instead of one shard per upstream task."""
-        snap = self._entry()
         return self._commit(
             {
                 "operation": "set_optimize_write",
+                "read_version": self._entry()["version"],
                 "optimize_write": enabled,
-                "files": list(snap["files"]),
-                "partition_by": snap.get("partition_by") or [],
-                "schema": snap["schema"],
-                "num_files": len(snap["files"]),
             }
         )
 
@@ -3475,7 +3391,7 @@ class ManagedTable:
 
         snap = self._entry()
         rows = profile_columns(
-            self.read(), cols=cols, exact_distinct=exact_distinct
+            self.read(snap["version"]), cols=cols, exact_distinct=exact_distinct
         ).collect()  # metadata-sized: one row per profiled column
         stats = {
             "as_of_version": snap["version"],
@@ -3494,14 +3410,7 @@ class ManagedTable:
             },
         }
         return self._commit(
-            {
-                "operation": "analyze",
-                "stats": stats,
-                "files": list(snap["files"]),
-                "partition_by": snap.get("partition_by") or [],
-                "schema": snap["schema"],
-                "num_files": len(snap["files"]),
-            }
+            {"operation": "analyze", "read_version": snap["version"], "stats": stats}
         )
 
     def statistics(self, version: int | None = None) -> dict[str, Any] | None:
@@ -3527,7 +3436,8 @@ class ManagedTable:
         back to one pooled footer read each (self-healing on the next
         rewrite).  Time-travel capable (version or tag name)."""
         entry = self._entry(version)
-        self._check_time_travel_files(entry, version)
+        if version is not None and version != self.latest_version():
+            self._require_files_exist(entry["files"], f"time travel to version {version}")
         missing = [f for f in entry["files"] if "rows" not in f]
         extra = 0
         if missing:
@@ -3655,11 +3565,8 @@ class ManagedTable:
         return self._commit(
             {
                 "operation": "set_property",
+                "read_version": snap["version"],
                 "user_props": props,
-                "files": list(snap["files"]),
-                "partition_by": snap.get("partition_by") or [],
-                "schema": snap["schema"],
-                "num_files": len(snap["files"]),
             }
         )
 
@@ -3686,7 +3593,7 @@ class ManagedTable:
         """
         snap = self._entry()
         cols = list(cols or [])
-        names = {f.name for f in self.schema().fields}
+        names = {f["name"] for f in snap["schema"]["fields"]}
         missing = [c for c in cols if c not in names]
         if missing:
             raise ValueError(
@@ -3695,10 +3602,8 @@ class ManagedTable:
         return self._commit(
             {
                 "operation": "set_partitioning",
-                "files": list(snap["files"]),
+                "read_version": snap["version"],
                 "partition_by": cols,
-                "schema": snap["schema"],
-                "num_files": len(snap["files"]),
             }
         )
 
@@ -3867,25 +3772,23 @@ class ManagedTable:
         # append mode) must be recomputed against the winner's snapshot.
         for _attempt in range(10):
             cur = self._entry()
-            files = (
-                new_recs
-                if mode == "overwrite"
-                else list(cur["files"]) + new_recs
-            )
             try:
                 return self._commit(
                     {
                         "operation": mode,
-                        "files": files,
+                        "read_version": cur["version"],
+                        "files": (
+                            new_recs
+                            if mode == "overwrite"
+                            else list(cur["files"]) + new_recs
+                        ),
                         "partition_by": s_entry.get("partition_by") or [],
                         "schema": s_entry["schema"],
-                        "num_files": len(files),
-                        "added_files": len(new_recs),
                         "published_from": staging.path,
                     }
                 )
             except ConcurrentWriteError:
-                self._snap_cache.clear()
+                continue
         raise ConcurrentWriteError(
             f"publish_from lost 10 commit races on {self.path}; giving up"
         )
@@ -4014,21 +3917,13 @@ class ManagedTable:
         surfaces the resulting add/remove diff to CDC consumers).  Fails
         if the target snapshot's files were already vacuumed.
         """
+        read_version = self.latest_version()
         snap = self._entry(version)
-        missing = [
-            p
-            for f in snap["files"]
-            for p in [f["path"], *_rec_dvs(f)]
-            if not os.path.exists(os.path.join(self.path, p))
-        ]
-        if missing:
-            raise FileNotFoundError(
-                f"cannot restore to version {version}: {len(missing)} data "
-                f"file(s) were vacuumed, e.g. {missing[0]}"
-            )
+        self._require_files_exist(snap["files"], f"restore to version {version}")
         return self._commit(
             {
                 "operation": "restore",
+                "read_version": read_version,
                 "restored_version": version,
                 "files": list(snap["files"]),
                 "partition_by": snap.get("partition_by") or [],
@@ -4038,7 +3933,6 @@ class ManagedTable:
                 # the old schema would mis-resolve physical names on the
                 # next mapping-aware append
                 "column_mapping": snap.get("column_mapping") or {},
-                "num_files": len(snap["files"]),
             }
         )
 
@@ -4072,13 +3966,13 @@ class ManagedTable:
         dest._commit(
             {
                 "operation": "clone",
+                "read_version": None,
                 "source": self.path,
                 "source_version": snap["version"],
                 "files": [dict(f) for f in snap["files"]],
                 "partition_by": snap.get("partition_by") or [],
                 "schema": snap["schema"],
                 "column_mapping": snap.get("column_mapping") or {},
-                "num_files": len(snap["files"]),
             }
         )
         return dest
@@ -4114,43 +4008,42 @@ class ManagedTable:
         """Add a CHECK constraint after validating the EXISTING data
         satisfies it (Delta semantics: ADD CONSTRAINT scans the table and
         fails if any current row violates).  Metadata-only commit."""
-        existing = self.constraints()
+        snap = self._entry()
+        existing = dict(snap.get("constraints") or {})
         if name in existing:
             raise ValueError(f"constraint {name!r} already exists")
-        bad = self.read().filter(~F.coalesce(F.expr(expr), F.lit(False))).limit(1).collect()
+        bad = (
+            self.read(snap["version"])
+            .filter(~F.coalesce(F.expr(expr), F.lit(False)))
+            .limit(1)
+            .collect()
+        )
         if bad:
             raise ValueError(
                 f"cannot add CHECK constraint {name!r} ({expr}): existing "
                 f"row violates it: {bad[0].asDict()}"
             )
-        snap = self._entry()
         return self._commit(
             {
                 "operation": "add_constraint",
+                "read_version": snap["version"],
                 "constraint": {name: expr},
                 "constraints": {**existing, name: expr},
-                "files": list(snap["files"]),
-                "partition_by": snap.get("partition_by") or [],
-                "schema": snap["schema"],
-                "num_files": len(snap["files"]),
             }
         )
 
     def drop_constraint(self, name: str) -> int:
-        existing = self.constraints()
+        snap = self._entry()
+        existing = dict(snap.get("constraints") or {})
         if name not in existing:
             raise ValueError(f"no such constraint: {name!r}")
         existing.pop(name)
-        snap = self._entry()
         return self._commit(
             {
                 "operation": "drop_constraint",
+                "read_version": snap["version"],
                 "constraint": {name: None},
                 "constraints": existing,
-                "files": list(snap["files"]),
-                "partition_by": snap.get("partition_by") or [],
-                "schema": snap["schema"],
-                "num_files": len(snap["files"]),
             }
         )
 
@@ -4217,12 +4110,9 @@ class ManagedTable:
         v = self._commit(
             {
                 "operation": "add_column",
+                "read_version": entry["version"],
                 "added_column": {col: dtype},
-                "files": list(entry["files"]),
-                "partition_by": entry.get("partition_by") or [],
-                "schema": json.loads(new_schema.json()),
-                "num_files": len(entry["files"]),
-                "added_files": 0,
+                "schema": new_schema.jsonValue(),
             }
         )
         if default is not None:
@@ -4256,13 +4146,10 @@ class ManagedTable:
         return self._commit(
             {
                 "operation": "rename_column",
+                "read_version": entry["version"],
                 "renamed": {old: new},
-                "files": list(entry["files"]),
-                "partition_by": entry.get("partition_by") or [],
-                "schema": json.loads(new_schema.json()),
+                "schema": new_schema.jsonValue(),
                 "column_mapping": mapping,
-                "num_files": len(entry["files"]),
-                "added_files": 0,
             }
         )
 
@@ -4291,13 +4178,10 @@ class ManagedTable:
         return self._commit(
             {
                 "operation": "drop_column",
+                "read_version": entry["version"],
                 "dropped": col,
-                "files": list(entry["files"]),
-                "partition_by": entry.get("partition_by") or [],
-                "schema": json.loads(new_schema.json()),
+                "schema": new_schema.jsonValue(),
                 "column_mapping": mapping,
-                "num_files": len(entry["files"]),
-                "added_files": 0,
             }
         )
 
@@ -4325,7 +4209,7 @@ class ManagedTable:
             f"NOT ({col} <=> CAST(({expr}) AS "
             f"{field.dataType.simpleString()}))"
         )
-        if self.read().filter(F.expr(probe)).limit(1).count():
+        if self.read(entry["version"]).filter(F.expr(probe)).limit(1).count():
             raise ValueError(
                 f"existing rows violate the generated expression for "
                 f"{col!r}: {expr}"
@@ -4333,12 +4217,8 @@ class ManagedTable:
         return self._commit(
             {
                 "operation": "set_generated",
+                "read_version": entry["version"],
                 "generated": {**(entry.get("generated") or {}), col: expr},
-                "files": list(entry["files"]),
-                "partition_by": entry.get("partition_by") or [],
-                "schema": entry["schema"],
-                "num_files": len(entry["files"]),
-                "added_files": 0,
             }
         )
 
@@ -4375,12 +4255,8 @@ class ManagedTable:
         return self._commit(
             {
                 "operation": "set_default",
+                "read_version": entry["version"],
                 "defaults": {**(entry.get("defaults") or {}), col: expr},
-                "files": list(entry["files"]),
-                "partition_by": entry.get("partition_by") or [],
-                "schema": entry["schema"],
-                "num_files": len(entry["files"]),
-                "added_files": 0,
             }
         )
 
@@ -4395,12 +4271,8 @@ class ManagedTable:
         return self._commit(
             {
                 "operation": "drop_default",
+                "read_version": entry["version"],
                 "defaults": defaults,
-                "files": list(entry["files"]),
-                "partition_by": entry.get("partition_by") or [],
-                "schema": entry["schema"],
-                "num_files": len(entry["files"]),
-                "added_files": 0,
             }
         )
 
@@ -4431,12 +4303,9 @@ class ManagedTable:
         return self._commit(
             {
                 "operation": "set_identity",
+                "read_version": entry["version"],
                 "identity": {col: {"next": int(start)}},
-                "files": list(entry["files"]),
-                "partition_by": entry.get("partition_by") or [],
                 "schema": new_schema.jsonValue(),
-                "num_files": len(entry["files"]),
-                "added_files": 0,
             }
         )
 
@@ -4524,9 +4393,11 @@ class ManagedTable:
         max_retries: int = 3,
         **merge_kwargs: Any,
     ) -> int:
-        """Merge with optimistic-concurrency retry: on losing a version
-        race (:class:`ConcurrentWriteError`), re-run the WHOLE merge
-        against the new snapshot, up to ``max_retries`` times.
+        """Merge with optimistic-concurrency retry.  A merge commits
+        against the version it read, so any commit that landed while it ran
+        raises :class:`ConcurrentWriteError`; this re-runs the WHOLE merge
+        against the new snapshot, up to ``max_retries`` times, and ends
+        with both writers' changes.
 
         A full re-run — not a commit retry — because a competing commit
         logically invalidates the merge's read snapshot (its anti-join and
@@ -4548,9 +4419,11 @@ class ManagedTable:
         self, max_retries: int = 3, **optimize_kwargs: Any
     ) -> int:
         """OPTIMIZE with optimistic-concurrency retry — the maintenance
-        twin of :meth:`merge_with_retry`.  A compaction/clustering pass
-        racing a writer loses the version and must RE-PLAN against the
-        new snapshot (its candidate file list is stale); with declared
+        twin of :meth:`merge_with_retry`.  OPTIMIZE commits against the
+        version it read, so a writer's commit that landed during the pass
+        raises :class:`ConcurrentWriteError` instead of being dropped; the
+        pass then RE-PLANS against the new snapshot (its candidate file
+        list is stale) and keeps the writer's files.  With declared
         clustering the re-run is incremental, so a lost race costs one
         re-scan of the still-unclustered files, not a table rewrite.
         Safe to drive from a scheduler loop alongside live writers

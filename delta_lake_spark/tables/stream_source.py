@@ -538,17 +538,13 @@ class ManagedTableStreamWriter(DataSourceStreamWriter):
                 mt._commit(
                     {
                         "operation": "streaming_append",
+                        "read_version": entry["version"],
                         "files": entry["files"] + records,
-                        "partition_by": self.partition_by,
-                        "schema": entry["schema"],
-                        "num_files": len(entry["files"]) + len(records),
-                        "added_files": len(records),
                         "txn": {"app": self.app, "batch": int(batchId)},
                     }
                 )
                 return
             except ConcurrentWriteError:
-                mt._snap_cache.clear()
                 continue
         raise ConcurrentWriteError(
             f"streaming commit of batch {batchId} lost 10 races; giving up"

@@ -1,12 +1,14 @@
 """Child process for the multi-process concurrent-writer test.
 
-Usage: python concurrent_writer_child.py <table_path> <sync_dir> <tag> <n_merges>
+Usage: python concurrent_writer_child.py <table_path> <sync_dir> <tag> <n_merges> <unique_base>
 
 Opens its own SparkSession (a separate JVM — a genuinely independent writer,
 unlike the in-process race-injection tests), waits on a file barrier so both
 writers start merging at the same moment, then runs ``n_merges`` conflicting
 full-upsert merges (same 100 keys, writer-tagged values) through
-``merge_with_retry``.  Exits non-zero on any unexpected failure.
+``merge_with_retry``.  Merge ``i`` also upserts key ``unique_base + i``,
+which no other merge touches, so a dropped commit shows as a missing key.
+Exits non-zero on any unexpected failure.
 """
 
 from __future__ import annotations
@@ -17,11 +19,12 @@ import time
 
 
 def main() -> int:
-    table_path, sync_dir, tag, n_merges = (
+    table_path, sync_dir, tag, n_merges, unique_base = (
         sys.argv[1],
         sys.argv[2],
         sys.argv[3],
         int(sys.argv[4]),
+        int(sys.argv[5]),
     )
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -53,6 +56,7 @@ def main() -> int:
         for i in range(n_merges):
             src = (
                 spark.range(100)
+                .union(spark.range(unique_base + i, unique_base + i + 1))
                 .withColumn("v", F.lit(f"{tag}:{i}"))
                 .withColumn("writer", F.lit(tag))
             )

@@ -243,9 +243,10 @@ def test_clustering_sequences_preserve_contents(spark, ops):
 def test_multiprocess_maintenance_races_live_writer(spark, tmp_path):
     """Two separate JVMs: one runs conflicting full-upsert merges, the
     other runs incremental clustering passes through optimize_with_retry.
-    Contract: no commit lost (versions exactly-once), the final contents
-    are a serializable merge state (one writer tag on every row), and the
-    table is still cleanly clusterable afterwards."""
+    Contract: no commit lost (versions exactly-once, each merge's unique
+    key present), the final contents are a serializable merge state (one
+    writer tag on every shared row), and the table is still cleanly
+    clusterable afterwards."""
     import subprocess
     import sys
     import time as _time
@@ -268,7 +269,7 @@ def test_multiprocess_maintenance_races_live_writer(spark, tmp_path):
     procs = [
         subprocess.Popen(
             [sys.executable, str(here / "concurrent_writer_child.py"),
-             path, str(sync), "A", str(n_merges)],
+             path, str(sync), "A", str(n_merges), "1000"],
             stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True,
         ),
         subprocess.Popen(
@@ -296,11 +297,17 @@ def test_multiprocess_maintenance_races_live_writer(spark, tmp_path):
     assert sum(1 for h in hist if h["operation"] == "merge") == n_merges
 
     rows = t.read().collect()
-    assert len(rows) == 100
-    tags = {r.v for r in rows}
+    assert len(rows) == 100 + n_merges
+    # no merge lost to a clustering pass: each merge's unique key is present
+    assert {r.id: r.v for r in rows if r.id >= 100} == {
+        1000 + i: f"A:{i}" for i in range(n_merges)
+    }
+    tags = {r.v for r in rows if r.id < 100}
     assert tags == {f"A:{n_merges - 1}"}  # serializable final merge state
 
     # the table remains cleanly clusterable after the contention
     t.optimize(target_file_bytes=64 * 1024)
     assert all(f.get("clustered") == "id" for f in t._entry()["files"])
-    assert {r.id for r in t.read().select("id").collect()} == set(range(100))
+    assert {r.id for r in t.read().select("id").collect()} == set(range(100)) | {
+        1000 + i for i in range(n_merges)
+    }

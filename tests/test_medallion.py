@@ -177,7 +177,9 @@ def test_quarantine_catches_bad_bronze_rows(spark, tmp_path):
 def test_validate_silver_reconciles_bronze_with_silver_plus_quarantine(spark, tmp_path):
     """``run()``'s default validation accounts for quarantined rows
     (kept + quarantined == bronze), so a corpus with a poisoned orders row
-    builds; a silver row lost afterwards still fails the reconciliation."""
+    builds — twice over the same lake root, since the batch build replaces
+    the quarantine; a silver row lost afterwards still fails the
+    reconciliation."""
     import os
 
     import pyarrow as pa
@@ -201,6 +203,10 @@ def test_validate_silver_reconciles_bronze_with_silver_plus_quarantine(spark, tm
     p = MedallionPipeline(spark, str(tmp_path / "lake"), str(corpus))
     p.run()
     assert p.read("silver", "orders_quarantine").count() == 1
+    # a rebuild over the same lake root replaces the quarantine it derives
+    # from bronze instead of appending a second copy of the bad row
+    p.run()
+    assert [r.o_orderkey for r in p.read("silver", "orders_quarantine").collect()] == [-999]
 
     key = p.read("silver", "orders").first().o_orderkey
     p._t("silver", "orders").delete_where([("o_orderkey", "=", key)])

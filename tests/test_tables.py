@@ -886,6 +886,144 @@ def test_merge_with_retry_survives_version_race(spark, tmp_path, monkeypatch):
         t.merge_with_retry(src, ["id"], max_retries=2)
 
 
+@pytest.mark.parametrize(
+    "op", ["merge", "delete_where", "optimize", "analyze", "write_append"]
+)
+def test_commit_against_read_version_never_drops_a_racing_append(
+    spark, tmp_path, base_df, monkeypatch, op
+):
+    """Every operation commits against the snapshot version it read: a
+    5-row append that lands while the operation runs is never silently
+    dropped.  A blind append retries and keeps both writers' rows; the
+    read-modify-write operations raise ConcurrentWriteError, and
+    merge_with_retry / optimize_with_retry re-run to keep both writers'
+    changes."""
+    from delta_lake_spark import quality
+    from delta_lake_spark.tables import ConcurrentWriteError
+
+    t = ManagedTable(spark, str(tmp_path / "lu"))
+    t.write(base_df)  # ids 0..9
+    racer = ManagedTable(spark, t.path)
+    race = {"armed": 1, "next_id": 1000}
+
+    def append_after(fn):
+        # the competing writer commits right after this call returns
+        def wrapped(*args, **kwargs):
+            out = fn(*args, **kwargs)
+            if race["armed"]:
+                race["armed"] -= 1
+                lo = race["next_id"]
+                race["next_id"] += 5
+                racer.write(
+                    spark.createDataFrame(
+                        [Row(id=i, grp="r", val=0.0) for i in range(lo, lo + 5)]
+                    ),
+                    mode="append",
+                )
+            return out
+
+        return wrapped
+
+    if op == "analyze":
+        monkeypatch.setattr(quality, "profile", append_after(quality.profile))
+    else:
+        monkeypatch.setattr(t, "_write_commit_dir", append_after(t._write_commit_dir))
+    upsert = spark.createDataFrame([Row(id=0, grp="a", val=-1.0)])
+    run = {
+        "merge": lambda: t.merge(upsert, ["id"]),
+        "delete_where": lambda: t.delete_where([("id", "=", 3)]),
+        "optimize": lambda: t.optimize(sort_by=["id"]),
+        "analyze": lambda: t.analyze(),
+        "write_append": lambda: t.write(
+            spark.createDataFrame([Row(id=600, grp="z", val=0.6)]), mode="append"
+        ),
+    }[op]
+    if op == "write_append":
+        run()  # retried past the racer
+    else:
+        with pytest.raises(ConcurrentWriteError):
+            run()
+
+    got = {r.id: r.val for r in t.read().collect()}
+    assert set(range(1000, 1005)) <= set(got)  # the racer's rows survive
+    if op == "write_append":
+        assert set(got) == set(range(10)) | set(range(1000, 1005)) | {600}
+
+    if op in ("merge", "optimize"):
+        race["armed"] = 1  # the first re-run races a second append
+        if op == "merge":
+            t.merge_with_retry(upsert, ["id"])
+            assert t.history()[0]["operation"] == "merge"
+        else:
+            t.optimize_with_retry(sort_by=["id"])
+            assert t.history()[0]["operation"] == "zorder"
+        got = {r.id: r.val for r in t.read().collect()}
+        assert set(got) == set(range(10)) | set(range(1000, 1010))
+        assert got[0] == (-1.0 if op == "merge" else 0.0)
+        assert t.read().count() == 20
+
+
+def test_history_counts_match_snapshot_and_written_files(spark, tmp_path, base_df):
+    """Every commit kind reports ``num_files == len(snapshot files)`` and
+    ``added_files`` equal to the data files it wrote: 0 for bloom and
+    metadata-only commits, only the new data files for a merge-on-read
+    update (not the re-recorded DV'd files), the linked files for
+    ``publish_from``."""
+    import glob
+    import os
+
+    t = ManagedTable(spark, str(tmp_path / "hc"))
+    t.write(base_df, partition_by=["grp"])
+    t.write(base_df.limit(3), mode="append")
+    t.merge(spark.createDataFrame([Row(id=0, grp="a", val=-1.0)]), ["id"])
+    t.delete_where([("id", "=", 3)])
+    t.update_where([("id", "=", 4)], {"val": F.lit(9.0)}, mode="merge_on_read")
+    mor_update = t.latest_version()
+    t.add_bloom_filters(["id"])
+    t.analyze()
+    t.set_property("owner", "x")
+    t.enable_cdf()
+    t.disable_cdf()
+    t.set_auto_compact(enabled=False)
+    t.set_optimize_write(True)
+    t.add_constraint("id_nonneg", "id >= 0")
+    t.drop_constraint("id_nonneg")
+    t.add_column("extra", "int")
+    t.set_column_default("extra", "7")
+    t.drop_column_default("extra")
+    t.rename_column("extra", "extra2")
+    t.drop_column("extra2")
+    t.set_clustering(["id"])
+    t.set_partitioning(["grp"])
+    t.enable_row_tracking()
+    t.optimize()
+    stage = t.clone(str(tmp_path / "stage"))
+    stage.write(spark.createDataFrame([Row(id=50, grp="a", val=5.0)]), mode="append")
+    t.publish_from(stage)
+
+    def written(v: int) -> int:
+        # data files under this version's commit dirs (sidecars excluded)
+        pattern = os.path.join(t.path, f"c{v:06d}-*", "**", "*.parquet")
+        return sum(
+            1
+            for p in glob.glob(pattern, recursive=True)
+            if "-cdc-" not in p and "-dv" not in p
+        )
+
+    hist = t.history()
+    assert len(hist) == t.latest_version() + 1
+    for h in hist:
+        snap = t._entry(h["version"])
+        assert h["num_files"] == len(snap["files"]), h
+        assert h["added_files"] == written(h["version"]), h
+    by_op = {h["operation"]: h for h in hist}
+    assert by_op["bloom"]["added_files"] == 0
+    assert by_op["set_property"]["added_files"] == 0
+    mor = hist[-1 - mor_update]
+    assert 0 < mor["added_files"] < len(t._raw_entry(mor_update)["add"])
+    assert hist[0]["added_files"] == len(stage._entry()["files"]) > 0
+
+
 def test_external_source_refresh_top_up_loop(spark, tmp_path):
     """S5 workflow (deltalake.ipynb:1495-1588): HWM -> injectable fetch ->
     pandas->Spark -> insert-only bronze append -> spine+ffill+lag silver
@@ -1023,9 +1161,10 @@ def test_concurrent_writers_across_processes(spark, tmp_path):
     contention — two separate JVMs run conflicting full-upsert merges on the
     same 100 keys through merge_with_retry.  Contract: every version number
     is committed exactly once (link is put-if-absent), no commit is lost
-    (1 seed + 6 merges = versions 0..6), retries converge, and the final
-    state is some serializable order of the merges (one writer's tag,
-    uniformly, on all rows)."""
+    (1 seed + 6 merges = versions 0..6, and the one key unique to each
+    merge is present with that merge's tag), retries converge, and the
+    final state is some serializable order of the merges (one writer's tag,
+    uniformly, on all shared rows)."""
     import subprocess
     import sys
 
@@ -1044,9 +1183,10 @@ def test_concurrent_writers_across_processes(spark, tmp_path):
 
     child = str(__import__("pathlib").Path(__file__).parent / "concurrent_writer_child.py")
     n_merges = 3
+    unique_base = {"A": 1000, "B": 2000}
     procs = [
         subprocess.Popen(
-            [sys.executable, child, path, str(sync), tag, str(n_merges)],
+            [sys.executable, child, path, str(sync), tag, str(n_merges), str(unique_base[tag])],
             stdout=subprocess.PIPE,
             stderr=subprocess.PIPE,
             text=True,
@@ -1075,10 +1215,15 @@ def test_concurrent_writers_across_processes(spark, tmp_path):
     assert len(set(versions)) == len(versions)
     assert sum(1 for h in hist if h["operation"] == "merge") == 2 * n_merges
 
-    # serializability: the last-committed merge's tag is on EVERY row
+    # no lost merge: each merge's unique key carries that merge's tag
     rows = t.read().collect()
-    assert len(rows) == 100
-    tags = {r.v for r in rows}
+    unique = {r.id: r.v for r in rows if r.id >= 100}
+    assert unique == {
+        unique_base[w] + i: f"{w}:{i}" for w in ("A", "B") for i in range(n_merges)
+    }
+    # serializability: the last-committed merge's tag is on EVERY shared row
+    assert len(rows) == 100 + 2 * n_merges
+    tags = {r.v for r in rows if r.id < 100}
     assert len(tags) == 1, f"torn final state: {tags}"
     assert tags.pop() in {f"{w}:{n_merges - 1}" for w in ("A", "B")}
 

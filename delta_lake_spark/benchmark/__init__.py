@@ -1,10 +1,7 @@
-"""Benchmark harnesses.
+"""Seeded data generators used by the tests and by ``lakebench``.
 
-``ref10m`` reproduces the reference's published workload (BASELINE.md) at
-its own scale — a seeded 10M-row transactions dataset, the three Gold
-marts, the merge/append save path, and the 3-predicate Z-order scan suite —
-so ``bench.py`` can report like-for-like numbers against the reference's
-self-timed runs.
+``ref10m.gen_transactions`` builds the reference's transactions table at any
+row count; ``scaleup`` replicates the TPC-H corpus to a larger scale factor;
+``bucketed`` writes lineitem and orders bucketed on orderkey for the q30
+bucketed-join plan.
 """
-
-from delta_lake_spark.benchmark.ref10m import run_ref10m  # noqa: F401

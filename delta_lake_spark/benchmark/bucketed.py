@@ -1,25 +1,24 @@
-"""Bucketed-storage benchmark: the write-once-shuffle / read-many-joins
+"""Bucketed-storage fixture: the write-once-shuffle / read-many-joins
 trade-off on q30's lineitem ⋈ orders edge (VERDICT r2 task 6).
 
 At 100 TB the fact-fact equi-join shuffle dominates q30-shaped queries.
 ``io.bucketed.write_bucketed`` pays that shuffle ONCE at write time; every
 later join on the bucket key reads aligned buckets — SortMergeJoin with no
-Exchange on either side.  This harness measures both sides of the trade:
+Exchange on either side.  This module builds both sides of the trade:
 
-- ``bucket_write``: one-time cost of bucketing lineitem+orders on orderkey.
+- ``prepare_bucketed_facts``: one-time cost of bucketing lineitem+orders
+  on orderkey.
 - ``q30_bucketed``: the q30 plan with the l⋈o edge on bucketed storage.
 
-bench.py reports these next to the headline (unbucketed) q30 so the
-break-even is visible: write cost / per-query saving = number of queries
-after which bucketing wins.  Reference analog: the serving-side
-``CREATE INDEX`` (silver.py:192) — pre-paid ordering for repeated reads.
+Write cost / per-query saving = number of queries after which bucketing
+wins.  Reference analog: the serving-side ``CREATE INDEX`` (silver.py:192)
+— pre-paid ordering for repeated reads.
 """
 
 from __future__ import annotations
 
 import os
 import time
-from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -87,17 +86,3 @@ def q30_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy(F.desc("revenue"), "nation")
     )
-
-
-def run_bucketed_q30(
-    spark: SparkSession, sf_dir: str, data_dir: str
-) -> dict[str, Any]:
-    """Time bucket write + warm q30_bucketed; JSON-safe result dict."""
-    out: dict[str, Any] = {"bucket_write": prepare_bucketed_facts(spark, sf_dir, data_dir)}
-    times = []
-    for _ in range(2):
-        t0 = time.perf_counter()
-        out["rows"] = q30_bucketed(spark, sf_dir).count()
-        times.append(time.perf_counter() - t0)
-    out["q30_bucketed"] = round(min(times), 3)
-    return out

@@ -1,53 +1,24 @@
-"""Reference-scale benchmark: the BASELINE.md workload at 10M rows.
+"""Seeded generator for the reference's transactions table.
 
-The reference self-times one workload end-to-end (deltalake.ipynb): a
-synthetic 10,000,000-row financial transactions table with 50,000 clients
-and a ~1,410-row daily currency-rate series (generator mechanics at
-:127-183), three Gold marts over the cached Silver tables (:3141-3208 —
-client_stats, daily_metrics, fraud_analysis), a MERGE + anti-join-append
-save (:3212-3244), and a 3-predicate scan suite against a plain vs
-Z-ordered copy (:8380-8427).  BASELINE.md records its timings; the driver's
-perf gate is "within 2x at the same scale factor" — which means running the
-same shapes at the same row count, not extrapolating from sf0.1.
-
-This module regenerates that workload deterministically (seeded
-``F.rand``, fixed input partitioning so values don't depend on core count)
-and times the same segments on the engine's ManagedTable layer.  Data is
-generated once and cached on disk (``_GENERATED.json`` marker holds the
-generation parameters); repeat runs only pay the timed segments.
-
-Scale notes: generation is a single distributed projection (no shuffle
-except the final date repartition), marts are one-shuffle aggregates over
-broadcast-or-AQE joins, and the scan suite reads through the stats-pruned
-``scan()`` path — every piece is the same plan shape it would be at 100x.
+The reference builds a synthetic financial transactions table (10,000,000
+rows, 50,000 clients; deltalake.ipynb:127-183) and self-times its Gold marts
+and Z-order scan suite over it (BASELINE.md).  ``gen_transactions``
+regenerates that table deterministically, at any row count, in its Silver
+shape: seeded ``F.rand`` over a fixed input partitioning, so the values do
+not depend on the local core count.  ``lakebench``'s ``lake_scan`` workload
+builds its lake from it.
 """
 
 from __future__ import annotations
 
-import json
-import os
-import shutil
-import time
-from typing import Any
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
-
-from delta_lake_spark.tables import ManagedTable
 
 # 2020-01-01 .. 2025-05-31 UTC — the reference's transaction_datetime range
 # (deltalake.ipynb:156-158)
 _START_TS = 1_577_836_800
 _END_TS = 1_748_649_600
 
-_GEN_MARKER = "_GENERATED.json"
-_GEN_VERSION = 2  # bump to force regeneration after generator changes
-
-
-# --------------------------------------------------------------------------- #
-# seeded generators (deltalake.ipynb:127-183 mechanics, deterministic)
-# --------------------------------------------------------------------------- #
 
 def gen_transactions(
     spark: SparkSession, num_records: int, num_clients: int, seed: int
@@ -93,358 +64,3 @@ def gen_transactions(
         )
         .drop("id")
     )
-
-
-def gen_clients(spark: SparkSession, num_clients: int, seed: int) -> DataFrame:
-    """Silver-shape clients (:268-299 generator + :969-986 silver
-    transforms: age + client_category).  ``age`` uses a FIXED as-of date so
-    the dataset doesn't drift with the wall clock."""
-    tiers = F.array(*[F.lit(t) for t in ["bronze", "silver", "gold", "platinum"]])
-    countries = F.array(*[F.lit(c) for c in ["US", "RU", "CN", "JP", "DE"]])
-    as_of = F.lit("2025-06-01").cast("date")
-    return (
-        spark.range(100_000, 100_000 + num_clients, 1, 4)
-        .withColumnRenamed("id", "client_id")
-        .withColumn("name", F.concat(F.lit("Client-"), F.col("client_id")))
-        .withColumn(
-            "registration_date",
-            F.date_add(F.lit("2015-01-01").cast("date"), (F.rand(seed + 6) * 3800).cast("int")),
-        )
-        .withColumn(
-            "tier", F.element_at(tiers, (F.floor(F.rand(seed + 7) * 4) + 1).cast("int"))
-        )
-        .withColumn(
-            "country",
-            F.element_at(countries, (F.floor(F.rand(seed + 8) * 5) + 1).cast("int")),
-        )
-        .withColumn(
-            "age", F.floor(F.months_between(as_of, F.col("registration_date")) / 12)
-        )
-        .withColumn(
-            "client_category",
-            F.when(F.col("age").isNull(), "new")
-            .when(F.col("age") < 1, "new")
-            .when(F.col("age") < 3, "regular")
-            .otherwise("vip"),
-        )
-    )
-
-
-def gen_currency_rates(spark: SparkSession, seed: int, n_days: int = 1410) -> DataFrame:
-    """Daily USD/EUR/CNY rate series, 1,410 rows like the reference's
-    (:4312), already gap-free (its silver layer forward-fills, :998-1038)
-    with day-over-day change columns."""
-    r = (
-        spark.range(0, n_days, 1, 1)
-        .withColumn("date", F.date_add(F.lit("2020-01-01").cast("date"), F.col("id").cast("int")))
-        .withColumn("USD", F.round(F.lit(70.0) + F.rand(seed + 9) * 30, 4))
-        .withColumn("EUR", F.round(F.lit(80.0) + F.rand(seed + 10) * 30, 4))
-        .withColumn("CNY", F.round(F.lit(9.0) + F.rand(seed + 11) * 4, 4))
-        .drop("id")
-    )
-    w = Window.orderBy("date")
-    for ccy in ["USD", "EUR", "CNY"]:
-        r = r.withColumn(f"{ccy}_change", F.col(ccy) - F.lag(ccy).over(w))
-    return r
-
-
-# --------------------------------------------------------------------------- #
-# the three Gold marts (deltalake.ipynb:3151-3207, same shapes)
-# --------------------------------------------------------------------------- #
-
-def ref_client_stats(transactions: DataFrame, clients: DataFrame) -> DataFrame:
-    """client_stats (:3153-3162): dim join + 5-key groupBy.  clients scales
-    with the data — no hard broadcast hint (the reference forces one at
-    :3154); AQE broadcasts it while it fits, falls back to shuffle at 100x."""
-    return (
-        transactions.join(clients, "client_id", "left")
-        .groupBy("client_id", "name", "country", "client_category", "tier")
-        .agg(
-            F.sum("amount").alias("total_amount"),
-            F.avg("amount").alias("avg_amount"),
-            F.count("*").alias("transactions_count"),
-        )
-    )
-
-
-def ref_daily_metrics(transactions: DataFrame, currency_rates: DataFrame) -> DataFrame:
-    """daily_metrics (:3168-3184): rate join + currency when-ladder +
-    per-day aggregate with conditional (suspicious) aggs.  The rate table
-    is a fixed ~1.4K-row dim — explicit broadcast is correct at any scale."""
-    joined = transactions.join(
-        F.broadcast(currency_rates),
-        transactions["transaction_date"] == currency_rates["date"],
-        "left",
-    )
-    amount_rub = (
-        F.when(F.col("currency") == "USD", F.col("amount") * F.col("USD"))
-        .when(F.col("currency") == "EUR", F.col("amount") * F.col("EUR"))
-        .when(F.col("currency") == "CNY", F.col("amount") * F.col("CNY"))
-        .otherwise(F.col("amount"))
-    )
-    return (
-        joined.withColumn("amount_rub", amount_rub)
-        .groupBy("date")
-        .agg(
-            F.sum("amount_rub").alias("daily_volume_rub"),
-            F.avg("amount_rub").alias("avg_transaction_rub"),
-            F.count("*").alias("transactions_count"),
-            F.sum(F.when(F.col("is_suspicious"), 1).otherwise(0)).alias("suspicious_count"),
-            F.sum(F.when(F.col("is_suspicious"), F.col("amount_rub")).otherwise(0)).alias(
-                "suspicious_volume_rub"
-            ),
-        )
-        .orderBy("date")
-    )
-
-
-def ref_fraud_analysis(transactions: DataFrame, clients: DataFrame) -> DataFrame:
-    """fraud_analysis (:3190-3202): flag filter + dim join + 2-key agg."""
-    return (
-        transactions.join(clients, "client_id", "left")
-        .filter(F.col("is_suspicious"))
-        .groupBy("category", "country")
-        .agg(
-            F.count("*").alias("fraud_count"),
-            F.avg("amount").alias("avg_fraud_amount"),
-            F.sum("amount").alias("total_fraud_amount"),
-        )
-    )
-
-
-# --------------------------------------------------------------------------- #
-# data lifecycle
-# --------------------------------------------------------------------------- #
-
-def _silver(data_dir: str, name: str) -> str:
-    return os.path.join(data_dir, "silver", name)
-
-
-def ensure_data(
-    spark: SparkSession,
-    data_dir: str,
-    num_records: int,
-    num_clients: int,
-    seed: int,
-) -> dict[str, Any]:
-    """Generate the Silver tables + the plain/Z-ordered demo copies once;
-    reuse from disk when the marker matches the requested parameters."""
-    params = {
-        "version": _GEN_VERSION,
-        "num_records": num_records,
-        "num_clients": num_clients,
-        "seed": seed,
-    }
-    marker = os.path.join(data_dir, _GEN_MARKER)
-    if os.path.exists(marker):
-        with open(marker) as f:
-            existing = json.load(f)
-        if {k: existing.get(k) for k in params} == params:
-            return {"generated": False, "gen_sec": existing.get("gen_sec")}
-        shutil.rmtree(data_dir)
-    os.makedirs(data_dir, exist_ok=True)
-
-    t0 = time.perf_counter()
-    tx = gen_transactions(spark, num_records, num_clients, seed)
-    # one file per date: repartition by the partition column before the
-    # partitioned write, so 10 input tasks don't each write ~2000 files
-    ManagedTable(spark, _silver(data_dir, "transactions")).write(
-        tx.repartition("transaction_date"), partition_by=["transaction_date"]
-    )
-    ManagedTable(spark, _silver(data_dir, "clients")).write(
-        gen_clients(spark, num_clients, seed).coalesce(1)
-    )
-    ManagedTable(spark, _silver(data_dir, "currency_rates")).write(
-        gen_currency_rates(spark, seed).coalesce(1)
-    )
-
-    # demo copies for the scan suite (deltalake.ipynb:8393-8399): same data,
-    # one random layout, one Z-ordered on the reference's three columns
-    tx_silver = ManagedTable(spark, _silver(data_dir, "transactions")).read()
-    plain = ManagedTable(spark, os.path.join(data_dir, "demo_plain"))
-    plain.write(tx_silver.repartition(32))
-    zorder = ManagedTable(spark, os.path.join(data_dir, "demo_zorder"))
-    zorder.write(tx_silver.repartition(32))
-    zorder.optimize(
-        zorder_by=["transaction_date", "client_id", "is_suspicious"],
-        target_file_bytes=16 * 1024 * 1024,
-    )
-    gen_sec = round(time.perf_counter() - t0, 3)
-    with open(marker, "w") as f:
-        json.dump({**params, "gen_sec": gen_sec}, f)
-    return {"generated": True, "gen_sec": gen_sec}
-
-
-# --------------------------------------------------------------------------- #
-# the timed run
-# --------------------------------------------------------------------------- #
-
-_SCANS: list[tuple[str, list[tuple[str, str, Any]]]] = [
-    # (name, scan filters) — the reference's three predicates (:8407-8424)
-    # client ids are generated in [100000, 100000+num_clients) — probe one
-    # inside the range so the scan actually reads data (a client outside
-    # the range prunes every file and times nothing); 112040 has rows on
-    # this date under the default (10M, 50K, seed=42) parameters
-    ("date_client", [("transaction_date", "=", "2023-01-15"), ("client_id", "=", 112040)]),
-    ("suspicious", [("is_suspicious", "=", True)]),
-    ("date_range_amount", [
-        ("transaction_date", ">=", "2023-01-01"),
-        ("transaction_date", "<=", "2023-01-31"),
-        ("amount", ">", 1000),
-    ]),
-]
-
-
-def _scan_filters(filters: list[tuple[str, str, Any]]) -> list[tuple[str, str, Any]]:
-    import datetime
-
-    out = []
-    for col, op, val in filters:
-        if col == "transaction_date" and isinstance(val, str):
-            val = datetime.date.fromisoformat(val)
-        out.append((col, op, val))
-    return out
-
-
-def run_ref10m(
-    spark: SparkSession,
-    data_dir: str,
-    num_records: int = 10_000_000,
-    num_clients: int = 50_000,
-    seed: int = 42,
-) -> dict[str, Any]:
-    """Time the BASELINE.md workload segments; returns a JSON-safe dict.
-
-    Segments (names match BASELINE.md rows):
-      load          read+cache+count the 3 Silver tables   (vs 43.30 s)
-      client_stats  mart compute                           (vs 13.56 s)
-      daily_metrics mart compute                           (vs  5.67 s)
-      fraud         mart compute                           (vs  3.23 s)
-      save          first write: overwrite, partitioned    (vs 10.69 s*)
-      save_merge    repeat save: MERGE + anti-join append  (vs 10.69 s)
-      total         load..save                             (vs 76.45 s)
-      scan_plain/scan_zorder  3-predicate suite            (vs 0.36-0.60 s
-                                                            -> ~0.30 s)
-    (*) the reference's 10.69 s save is its merge path; both are reported.
-    """
-    meta = ensure_data(spark, data_dir, num_records, num_clients, seed)
-    gold_dir = os.path.join(data_dir, "gold")
-    shutil.rmtree(gold_dir, ignore_errors=True)
-
-    out: dict[str, Any] = {
-        "rows": num_records,
-        "clients": num_clients,
-        "seed": seed,
-        **meta,
-    }
-
-    # -- load (read + cache + count, reference :3140-3149) ------------------
-    t0 = time.perf_counter()
-    transactions = ManagedTable(spark, _silver(data_dir, "transactions")).read().cache()
-    clients = ManagedTable(spark, _silver(data_dir, "clients")).read().cache()
-    rates = ManagedTable(spark, _silver(data_dir, "currency_rates")).read().cache()
-    out["rows_loaded"] = transactions.count()
-    clients.count()
-    rates.count()
-    out["load"] = round(time.perf_counter() - t0, 3)
-
-    try:
-        # -- mart computes (cache + count like the reference) ---------------
-        t0 = time.perf_counter()
-        client_stats = ref_client_stats(transactions, clients).cache()
-        client_stats.count()
-        out["client_stats"] = round(time.perf_counter() - t0, 3)
-
-        t0 = time.perf_counter()
-        daily_metrics = ref_daily_metrics(transactions, rates).cache()
-        daily_metrics.count()
-        out["daily_metrics"] = round(time.perf_counter() - t0, 3)
-
-        t0 = time.perf_counter()
-        fraud = ref_fraud_analysis(transactions, clients).cache()
-        fraud.count()
-        out["fraud"] = round(time.perf_counter() - t0, 3)
-
-        # -- save: first write (overwrite branch, :3219-3243) ---------------
-        cs_table = ManagedTable(spark, os.path.join(gold_dir, "client_stats"))
-        dm_table = ManagedTable(spark, os.path.join(gold_dir, "daily_metrics"))
-        t0 = time.perf_counter()
-        cs_table.write(client_stats.repartition("country"), partition_by=["country"])
-        t1 = time.perf_counter()
-        out["save_cs"] = round(t1 - t0, 3)
-        # pin the shuffle width: an unpinned repartition("date") lets AQE
-        # coalesce the tiny aggregate to ONE task, which then writes all
-        # ~1.4K date dirs sequentially (measured 19.5s -> 4.5s pinned)
-        n_write = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        dm_table.write(
-            daily_metrics.repartition(n_write, "date"), partition_by=["date"]
-        )
-        out["save_dm"] = round(time.perf_counter() - t1, 3)
-        out["save"] = round(time.perf_counter() - t0, 3)
-
-        # table property, not a per-run knob (Delta's
-        # delta.autoOptimize.optimizeWrite): the repeat save's MERGE rewrite
-        # must not shard every touched partition across every shuffle task
-        # (measured 320 tiny files -> 5 at this scale); untimed setup,
-        # like the reference's pre-existing gold tables
-        cs_table.set_optimize_write(True)
-        dm_table.set_optimize_write(True)
-
-        # -- save: repeat (MERGE + anti-join append, :3212-3236) ------------
-        t0 = time.perf_counter()
-        cs_table.merge(client_stats, ["client_id"])
-        # "which dates already exist" is partition METADATA — the log holds
-        # it (show_partitions = OptimizeMetadataOnlyQuery); the data-scan
-        # version schedules 1,411 single-row file reads for the same answer.
-        # eqNullSafe: the out-of-rates-range date is NULL, and a plain
-        # equi-anti-join re-appends the NULL-date row on every repeat save.
-        existing_dates = dm_table.show_partitions().withColumnRenamed(
-            "date", "_ex_date"
-        )
-        fresh = daily_metrics.join(
-            existing_dates,
-            F.col("date").eqNullSafe(F.col("_ex_date")),
-            "left_anti",
-        )
-        if fresh.limit(1).count():  # no empty commit for a no-op append
-            dm_table.write(fresh.repartition(n_write, "date"), mode="append")
-        out["save_merge"] = round(time.perf_counter() - t0, 3)
-        # the reference's 76.45 s total took the merge save branch (its gold
-        # tables pre-existed); "total" uses the same branch for parity, with
-        # the first-write path reported separately as save/save_cs/save_dm
-        out["total"] = round(
-            out["load"] + out["client_stats"] + out["daily_metrics"]
-            + out["fraud"] + out["save_merge"], 3,
-        )
-        out["total_first_write"] = round(
-            out["load"] + out["client_stats"] + out["daily_metrics"]
-            + out["fraud"] + out["save"], 3,
-        )
-
-        client_stats.unpersist()
-        daily_metrics.unpersist()
-        fraud.unpersist()
-    finally:
-        transactions.unpersist()
-        clients.unpersist()
-        rates.unpersist()
-
-    # -- scan suite (plain vs Z-ordered, :8401-8427) ------------------------
-    for label, sub in [("demo_plain", "scan_plain"), ("demo_zorder", "scan_zorder")]:
-        table = ManagedTable(spark, os.path.join(data_dir, label))
-        seg: dict[str, Any] = {}
-        for name, raw in _SCANS:
-            filters = _scan_filters(raw)
-            best, n = None, None
-            for _ in range(2):  # warm best-of-2, like the headline set
-                t0 = time.perf_counter()
-                n = table.scan(filters).count()
-                dt = time.perf_counter() - t0
-                best = dt if best is None else min(best, dt)
-            live, total_files = table.pruned_file_count(filters)
-            seg[name] = round(best, 4)
-            seg[f"{name}_rows"] = n
-            seg[f"{name}_files"] = f"{live}/{total_files}"
-        out[sub] = seg
-
-    return out

@@ -42,16 +42,13 @@ reordered the projection below the sort, ranks fail loudly instead of
 silently corrupting.
 
 ``global_cumsum`` / ``global_cumsum_grouped`` (r10, VERDICT r9 item 2)
-carry TWO measured forms of the running-sum step, switched by
-``SPARK_GRAFT_CUMSUM_ONE_EXCHANGE`` (see :func:`_cumsum_one_exchange` for
-the numbers): the default pid-window form keeps the second
-(histogram-scale) ``hashpartitioning(_gr_pid)`` exchange, which a single
-machine services out of the page cache faster than any alternative; the
-one-exchange form replaces it with a vectorized Arrow ``mapInPandas``
-prefix sum over the already-range-partitioned, partition-sorted frame
-(guide §4 — numpy cumsum per batch, running carry across batches, the
-collected per-partition partial sums riding in the task closure), for
-deployments where the second exchange would cross a real network.
+run the partition-local running sum as a ``SUM OVER (PARTITION BY
+_gr_pid)`` window.  Its clustering requirement adds a second,
+histogram-scale ``hashpartitioning(_gr_pid)`` exchange, which a single
+machine serves from the page cache: a one-exchange Arrow ``mapInPandas``
+prefix sum was measured slower at every local size (OPTIMIZATION_r10.md
+§2: 4.9 vs 6.8 s at 20M rows, 0.26 vs 0.40 s at 200K; sf0.1 t25 0.45 ->
+0.85 s and q96 0.41 -> 0.69 s under the map form).
 
 Driver-side structure bounds (VERDICT r9 item 8): the literal offsets
 array is constant-folded into every task binary, and at tens of thousands
@@ -60,7 +57,7 @@ plus O(P) expression-tree work in Catalyst stops being free.  Above
 ``_LITERAL_OFFSETS_MAX_PARTITIONS`` the offsets therefore attach via the
 broadcast-hash-join form instead (probe-side partitioning intact, so the
 plan gains a BroadcastExchange of a P-row frame but no data exchange).
-Measured on this box (tools/synth_ab.py offsets, 2M rows, interleaved
+Measured on one machine (OPTIMIZATION_r10.md §8, 2M rows, interleaved
 3-rep medians): literal clearly wins at P <= 2048 (0.10 vs 0.39 s at 64,
 0.49 vs 0.74 s at 2048), parity-within-noise at 4096 (1.44 vs 1.30 s) and
 still competitive at 16384 (7.0 vs 7.8 s, both dominated by 16K tiny
@@ -74,6 +71,8 @@ documented in :func:`global_row_number_grouped`.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -83,6 +82,7 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+from pyspark.sql.window import Window
 
 _PID = "_gr_pid"
 _OFF = "_gr_offset"
@@ -93,9 +93,6 @@ _LOC_MASK = (1 << 33) - 1  # monotonically_increasing_id: low 33 bits = record#
 # than a broadcast join of a P-row offsets frame; see module docstring for
 # the measured crossover.
 _LITERAL_OFFSETS_MAX_PARTITIONS = 4096
-# group-key sentinel for NULL groups in driver-side dicts (None is a valid
-# dict key, but pandas/numpy NaN round-trips make it unreliable as one)
-_NULL_KEY = ("__gr_null__",)
 
 
 def _check_loc_layout(pid: int, n: int, mx) -> None:
@@ -138,6 +135,33 @@ def _attach_offsets(ranged: DataFrame, offsets: list[int], expr_of) -> DataFrame
     )
     joined = ranged.join(F.broadcast(off), F.col(_PID) == F.col("_gr_p2"))
     return expr_of(joined, F.col(_OFF)).drop("_gr_p2", _OFF)
+
+
+def _group_key(g):
+    """Driver-side dict key of a group value, with Spark's grouping
+    semantics: NULL stays ``None``, every NaN maps to the one ``math.nan``
+    object (two NaN floats are unequal, so as raw keys each partition's NaN
+    would start its own group), other values pass through."""
+    if isinstance(g, float) and math.isnan(g):
+        return math.nan
+    return g
+
+
+def _group_offsets(stats: list, group_col: str, size: str) -> tuple[list, dict]:
+    """Running per-group offsets over the per-(partition, group) ``stats``
+    rows in partition order: ``[(row, group key, offset)]`` and each group's
+    total of ``size``, both keyed by :func:`_group_key`."""
+    per_group: dict = {}
+    for r in sorted(stats, key=lambda r: r[_PID]):
+        per_group.setdefault(_group_key(r[group_col]), []).append(r)
+    offsets, totals = [], {}
+    for g, lst in per_group.items():
+        acc = 0
+        for r in lst:
+            offsets.append((r, g, acc))
+            acc += int(r[size] or 0)
+        totals[g] = acc
+    return offsets, totals
 
 
 def _global_row_number_with_total(
@@ -274,13 +298,15 @@ def global_row_number_grouped(
     ``order_by`` must be unique per group (add a tie-break).  ``group_col``
     is intended for small bounded tags (dimension ids, period flags) — the
     stats collect is P x #groups rows on the driver, so #groups must stay
-    metadata-sized (dozens, not millions); NULL group values are handled
-    (null-safe join, NULLS-FIRST grouping).
+    metadata-sized (dozens, not millions).  NULL and NaN groups are
+    separate groups, as in Spark's GROUP BY (null-safe join, NULLS-FIRST
+    grouping).
 
     Returns ``(ranked_df, totals)`` where ``totals`` maps each group value
     to its exact row count — callers needing per-group N (quintile math)
-    get it without extra jobs.  Same persist/unpersist contract as
-    :func:`global_row_number`.
+    get it without extra jobs.  The NULL group's key is ``None`` and the
+    NaN group's is ``math.nan``, so ``totals[math.nan]`` works.  Same
+    persist/unpersist contract as :func:`global_row_number`.
     """
     spark = df.sparkSession
     if num_partitions is None:
@@ -324,18 +350,8 @@ def global_row_number_grouped(
                     f"tile at {nxt} — id layout or sort placement changed"
                 )
             nxt = s + n
-    per_group: dict = {}
-    for r in sorted(stats, key=lambda r: r[_PID]):
-        per_group.setdefault(r[group_col], []).append((r[_PID], r["n"], r["s"]))
-    rows, totals = [], {}
-    for g, lst in per_group.items():
-        acc = 0
-        for pid, n, s in lst:
-            rows.append((pid, g, acc, s))
-            acc += n
-        totals[g] = acc
-    from pyspark.sql.types import IntegerType
-
+    offsets, totals = _group_offsets(stats, group_col, "n")
+    rows = [(r[_PID], g, off, r["s"]) for r, g, off in offsets]
     off_schema = StructType(
         [
             StructField("_gr_p2", IntegerType(), False),
@@ -361,15 +377,6 @@ def global_row_number_grouped(
     return ranked, totals
 
 
-def _null_key(g):
-    """Normalize a group value into a dict key that survives the
-    driver-Row / Arrow / pandas round trips (None and float NaN both mean
-    SQL NULL)."""
-    if g is None or (isinstance(g, float) and g != g):
-        return _NULL_KEY
-    return g
-
-
 def _integral_value(df: DataFrame, value: str | Column) -> Column:
     """The cumsum value column widened to long.  Only integral types are
     accepted: casting a decimal or double to long would silently truncate
@@ -382,30 +389,6 @@ def _integral_value(df: DataFrame, value: str | Column) -> Column:
             " — scale decimals/doubles to an integral unit (e.g. cents) first"
         )
     return val.cast("long")
-
-
-def _cumsum_one_exchange() -> bool:
-    """Form switch for the running-sum step (r10, measured both ways).
-
-    Default (0): per-partition ``SUM OVER (PARTITION BY _gr_pid)`` window —
-    Catalyst inserts a second ``hashpartitioning(_gr_pid)`` exchange of the
-    frame, but on a single machine that exchange is a page-cache shuffle
-    and beats the alternative at every measured size (interleaved
-    tools/synth_ab.py cumsum: window 4.9 s vs map 6.8 s at 20M rows,
-    0.26 vs 0.40 s at 200K; sf0.1 whole-query A/B: t25 0.45 -> 0.85 s and
-    q96 0.41 -> 0.69 s REGRESSED under the map form).
-
-    SPARK_GRAFT_CUMSUM_ONE_EXCHANGE=1: vectorized Arrow ``mapInPandas``
-    prefix sum over the already-range-partitioned, partition-sorted frame —
-    ONE exchange total.  The Python boundary costs ~25% of the frame pass
-    locally, but the exchange it removes is a full-network pass of every
-    byte on a real cluster (guide §1.3 napkin math: the local box's
-    "shuffle" never leaves the page cache, a 100 TB cluster's does), so
-    network-bound deployments should flip this on.  Both forms are exact
-    and property-tested identical."""
-    import os
-
-    return os.environ.get("SPARK_GRAFT_CUMSUM_ONE_EXCHANGE", "0") == "1"
 
 
 def global_cumsum(
@@ -425,10 +408,10 @@ def global_cumsum(
     contribute 0 here) for the result to be order-independent and exact;
     any other type raises ``TypeError``.
 
-    The running-sum step takes one of two measured forms (see
-    :func:`_cumsum_one_exchange`): the default pid-window (fastest on a
-    single machine) or the one-exchange Arrow prefix sum (fastest when the
-    second exchange would cross a network)."""
+    Literal offsets attach as a projection (the r9 change: no broadcast
+    join); the running-sum window's clustering requirement adds the
+    histogram-scale ``hashpartitioning(_gr_pid)`` exchange (module
+    docstring)."""
     spark = df.sparkSession
     if num_partitions is None:
         # defaultParallelism (cores), not shuffle.partitions (2x cores): the
@@ -454,54 +437,16 @@ def global_cumsum(
         offsets.append(acc)
         acc += int(sums.get(pid) or 0)
 
-    if not _cumsum_one_exchange():
-        # pid-window form: literal offsets attach as a projection (the r9
-        # improvement — no broadcast join); the running-sum window's
-        # clustering requirement inserts the histogram-scale
-        # hashpartitioning(_gr_pid) exchange, measured cheaper than the
-        # Python boundary on a single machine (docstring above).
-        from pyspark.sql.window import Window
-
-        off_arr = F.array(*[F.lit(o).cast("long") for o in offsets])
-        w = (
-            Window.partitionBy(_PID)
-            .orderBy(*cols)
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        return (
-            ranged.withColumn(
-                out_col,
-                F.sum("_gc_v").over(w)
-                + F.element_at(off_arr, F.col(_PID) + 1),
-            )
-            .drop(_PID, "_gc_v")
-        )
-
-    out_fields = [
-        f for f in ranged.schema.fields if f.name not in (_PID, "_gc_v")
-    ]
-    out_names = [f.name for f in out_fields]
-    out_schema = StructType(out_fields + [StructField(out_col, LongType(), True)])
-
-    def _prefix_sum(batches):
-        import numpy as np
-
-        run = None
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            if run is None:
-                run = offsets[int(pdf[_PID].iloc[0])]
-            vals = pdf["_gc_v"].fillna(0).to_numpy(dtype="int64")
-            c = np.cumsum(vals) + run
-            run = int(c[-1])
-            out = pdf[out_names].copy()
-            out[out_col] = c
-            yield out
-
-    return ranged.sortWithinPartitions(*cols).mapInPandas(
-        _prefix_sum, out_schema
+    off_arr = F.array(*[F.lit(o).cast("long") for o in offsets])
+    w = (
+        Window.partitionBy(_PID)
+        .orderBy(*cols)
+        .rowsBetween(Window.unboundedPreceding, 0)
     )
+    return ranged.withColumn(
+        out_col,
+        F.sum("_gc_v").over(w) + F.element_at(off_arr, F.col(_PID) + 1),
+    ).drop(_PID, "_gc_v")
 
 
 def global_cumsum_grouped(
@@ -521,21 +466,19 @@ def global_cumsum_grouped(
 
     Range-partitions ONCE on ``(group, *order_by)`` (group-contiguity makes
     per-group partition offsets well-defined), collects per-(partition,
-    group) partial sums in ONE metadata job, then runs the same vectorized
-    partition-local prefix-sum pass as :func:`global_cumsum`, resetting the
-    accumulator at group boundaries (rows arrive sorted by (group, keys),
-    so groups are contiguous runs — the per-block loop is per GROUP, not
-    per row, and each block is one numpy cumsum).
+    group) partial sums in ONE metadata job, then runs a (partition,
+    group)-window running sum plus each group's offset.  The offsets attach
+    via a broadcast hash join on the null-safe (partition, group) pair (a
+    2-key lookup has no constant-foldable literal form); the window adds
+    one histogram-scale hash exchange, as in :func:`global_cumsum`.
 
     Same contracts as the grouped ranking: ``order_by`` unique per group,
     ``group_col`` a small bounded tag (the stats collect is P x #groups
-    driver rows), NULL groups handled.  ``value`` integral non-null (NULLs
-    contribute 0; other types raise ``TypeError``).  Returns ``(df,
-    totals)`` with each group's exact sum.
-
-    The running-sum step follows the same two measured forms as
-    :func:`global_cumsum` (see :func:`_cumsum_one_exchange`): default
-    (pid, group)-window, one-exchange Arrow prefix sum behind the env flag.
+    driver rows), NULL and NaN groups kept apart.  ``value`` integral
+    non-null (NULLs contribute 0; other types raise ``TypeError``).
+    Returns ``(df, totals)`` with each group's exact sum, keyed as in
+    :func:`global_row_number_grouped` (``None`` for NULL, ``math.nan`` for
+    NaN).
     """
     spark = df.sparkSession
     if num_partitions is None:
@@ -552,105 +495,28 @@ def global_cumsum_grouped(
         .agg(F.sum("_gc_v").alias("s"))
         .collect()
     )
-    per_group: dict = {}
-    for r in sorted(stats, key=lambda r: r[_PID]):
-        per_group.setdefault(_null_key(r[group_col]), []).append(
-            (r[_PID], r["s"], r[group_col])
-        )
-    offsets: dict = {}
-    totals: dict = {}
-    for gk, lst in per_group.items():
-        acc = 0
-        for pid, s, g in lst:
-            offsets[(pid, gk)] = acc
-            acc += int(s or 0)
-        totals[lst[0][2]] = acc
-
-    if not _cumsum_one_exchange():
-        # (pid, group)-window form: offsets attach via a broadcast hash
-        # join on the null-safe (pid, group) pair (the grouped twin of the
-        # ungrouped literal array — a 2-key literal lookup has no
-        # constant-foldable form); the window's clustering requirement
-        # inserts one histogram-scale hash exchange.
-        from pyspark.sql.window import Window
-
-        rows = [
-            (pid, g, offsets[(pid, _null_key(g))])
-            for lst in per_group.values()
-            for pid, s, g in lst
+    offsets, totals = _group_offsets(stats, group_col, "s")
+    rows = [(r[_PID], g, off) for r, g, off in offsets]
+    off_schema = StructType(
+        [
+            StructField("_gr_p2", IntegerType(), False),
+            StructField("_gr_g", df.schema[group_col].dataType, True),
+            StructField(_OFF, LongType(), False),
         ]
-        off_schema = StructType(
-            [
-                StructField("_gr_p2", IntegerType(), False),
-                StructField("_gr_g", df.schema[group_col].dataType, True),
-                StructField(_OFF, LongType(), False),
-            ]
-        )
-        off = spark.createDataFrame(rows, off_schema)
-        w = (
-            Window.partitionBy(_PID, group_col)
-            .orderBy(*cols)
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        summed = (
-            ranged.join(
-                F.broadcast(off),
-                (F.col(_PID) == F.col("_gr_p2"))
-                & F.col(group_col).eqNullSafe(F.col("_gr_g")),
-            )
-            .withColumn(out_col, F.sum("_gc_v").over(w) + F.col(_OFF))
-            .drop(_PID, "_gc_v", _OFF, "_gr_p2", "_gr_g")
-        )
-        return summed, totals
-
-    out_fields = [
-        f for f in ranged.schema.fields if f.name not in (_PID, "_gc_v")
-    ]
-    out_names = [f.name for f in out_fields]
-    out_schema = StructType(out_fields + [StructField(out_col, LongType(), True)])
-
-    def _prefix_sum(batches):
-        import numpy as np
-        import pandas as pd
-
-        pid = None
-        run: dict = {}
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            if pid is None:
-                pid = int(pdf[_PID].iloc[0])
-            vals = pdf["_gc_v"].fillna(0).to_numpy(dtype="int64")
-            keys = pdf[group_col].to_numpy(dtype=object)
-            na = pd.isna(keys)
-            if na.any():
-                keys = keys.copy()
-                # assign via a 0-d object cell: a bare tuple on the right
-                # would be BROADCAST into its elements by numpy
-                cell = np.empty((), dtype=object)
-                cell[()] = _NULL_KEY
-                keys[na] = cell
-            out_vals = np.empty(len(vals), dtype="int64")
-            # contiguous group blocks (sorted by (group, keys)); one numpy
-            # cumsum per block — per-group work, not per-row Python
-            # (None != None is False, so NULL-group runs stay one block)
-            bounds = (
-                [0]
-                + (np.flatnonzero(keys[1:] != keys[:-1]) + 1).tolist()
-                + [len(keys)]
-            )
-            for b in range(len(bounds) - 1):
-                s, e = bounds[b], bounds[b + 1]
-                gk = keys[s]
-                base = run.get(gk, offsets.get((pid, gk), 0))
-                c = np.cumsum(vals[s:e]) + base
-                out_vals[s:e] = c
-                run[gk] = int(c[-1])
-            out = pdf[out_names].copy()
-            out[out_col] = out_vals
-            yield out
-
-    ranked = ranged.sortWithinPartitions(F.col(group_col), *cols).mapInPandas(
-        _prefix_sum, out_schema
     )
-    return ranked, totals
+    off = spark.createDataFrame(rows, off_schema)
+    w = (
+        Window.partitionBy(_PID, group_col)
+        .orderBy(*cols)
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    summed = (
+        ranged.join(
+            F.broadcast(off),
+            (F.col(_PID) == F.col("_gr_p2"))
+            & F.col(group_col).eqNullSafe(F.col("_gr_g")),
+        )
+        .withColumn(out_col, F.sum("_gc_v").over(w) + F.col(_OFF))
+        .drop(_PID, "_gc_v", _OFF, "_gr_p2", "_gr_g")
+    )
+    return summed, totals

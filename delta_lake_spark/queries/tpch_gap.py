@@ -921,7 +921,7 @@ def q73_copurchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ADJACENCY layout instead: the per-round join probes V rows, explode
     # regenerates the (dst, val) stream inside the task, and the same
     # partial aggregation feeds the dst shuffle.  sf10x head-to-head at the
-    # 2M-vertex cap (tools/graph_ab.py, identical final-rank checksums):
+    # 2M-vertex cap (OPTIMIZATION_r10.md §6, identical final-rank checksums):
     # src_r9 126.9 s -> src_adj 65.1 s per 10-round loop, vs broadcast
     # 46.8 s — within the ~2x-of-broadcast target.  Also measured and
     # REJECTED there: SHUFFLE_HASH hint on the vertex side (153.3 s — the

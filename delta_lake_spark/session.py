@@ -56,9 +56,9 @@ def get_spark(
         # Scan-split sizing: measured and REJECTED in r9 (guide §6 knob).
         # openCostInBytes 4m->256k + minPartitionNum=cores raises a 10.8 MB
         # single-file lineitem scan from 3 to 32 splits — but the headline
-        # A/B (tools/ab_time.py, 5 warm reps, idle box) came back uniformly
-        # WORSE: q01 0.75->0.86 s, q30 0.69->0.88, q04 0.44->0.49, t01
-        # 0.69->0.73 — per-split scheduling + footer overhead exceeds the
+        # A/B (OPTIMIZATION_r09.md §7, 5 warm reps, idle box) came back
+        # uniformly WORSE: q01 0.75->0.86 s, q30 0.69->0.88, q04
+        # 0.44->0.49, t01 0.69->0.73 — per-split scheduling + footer overhead exceeds the
         # parallelism gain at corpus file sizes, and at 100 TB (pre-split
         # 128 MB-1 GB files) the knob is inert anyway.  Defaults kept.
     )

@@ -200,7 +200,7 @@ def test_q73_large_graph_shape_matches_broadcast_shape(spark, monkeypatch):
     must produce bit-identical ranks to the broadcast shape — forced here
     by dropping the cap to 0 (r10: the large shape switched from the
     src-partitioned edge layout to grouped adjacency arrays; sf10x
-    head-to-head in tools/graph_ab.py, differential pinned here)."""
+    head-to-head in OPTIMIZATION_r10.md §6, differential pinned here)."""
     from delta_lake_spark.queries import tpch_gap
 
     small = sorted(

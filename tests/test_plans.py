@@ -559,19 +559,6 @@ def test_q57_fact_path_single_exchange(spark):
             raise AssertionError(ln)
 
 
-def test_t25_cumsum_one_exchange_form_under_flag(spark, monkeypatch):
-    """SPARK_GRAFT_CUMSUM_ONE_EXCHANGE=1 (the cluster/network form) must
-    flip the AUC cumulative-negatives pass to the window-free Arrow prefix
-    sum: one range exchange, no pid hash exchange, no window.  The default
-    (local) form keeps the pid window — pinned by
-    test_q96_pareto_has_no_global_funnel."""
-    monkeypatch.setenv("SPARK_GRAFT_CUMSUM_ONE_EXCHANGE", "1")
-    plan = plan_of(QUERIES["t25_classifier_auc"](spark, SF_SMOKE), "simple")
-    assert "windowspecdefinition" not in plan, plan
-    assert "hashpartitioning(_gr_pid" not in plan, plan
-    assert "MapInPandas" in plan, plan
-
-
 def test_t27_fused_midranks_one_range_exchange(spark):
     """Both midrank passes ride ONE grouped cumsum (r10, the q93 recipe):
     exactly one range exchange on the (dim, v) tag space, no _gr_pid hash

@@ -11,6 +11,7 @@ from hypothesis import strategies as st
 
 import contextlib
 import io
+import math
 
 import pytest
 from pyspark.sql import functions as F
@@ -80,13 +81,9 @@ def test_global_row_number_grouped_matches_per_group_enumeration(spark, rows, pa
     assert totals == exp_totals
 
 
-_forms = st.sampled_from(["0", "1"])  # both cumsum forms (window / map)
-
-
 @settings(max_examples=12, deadline=None, suppress_health_check=list(HealthCheck))
-@given(rows=_rows, parts=st.integers(min_value=1, max_value=7), form=_forms)
-def test_global_cumsum_is_prefix_sum(spark, rows, parts, form, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_CUMSUM_ONE_EXCHANGE", form)
+@given(rows=_rows, parts=st.integers(min_value=1, max_value=7))
+def test_global_cumsum_is_prefix_sum(spark, rows, parts):
     df = spark.createDataFrame(rows, "v long, id long")
     got = {
         (r.v, r.id): r.cumsum
@@ -100,15 +97,11 @@ def test_global_cumsum_is_prefix_sum(spark, rows, parts, form, monkeypatch):
 
 
 @settings(max_examples=12, deadline=None, suppress_health_check=list(HealthCheck))
-@given(rows=_grouped_rows, parts=st.integers(min_value=1, max_value=7), form=_forms)
-def test_global_cumsum_grouped_matches_per_group_prefix_sums(
-    spark, rows, parts, form, monkeypatch
-):
+@given(rows=_grouped_rows, parts=st.integers(min_value=1, max_value=7))
+def test_global_cumsum_grouped_matches_per_group_prefix_sums(spark, rows, parts):
     """The fused (one range exchange for ALL groups, r10) per-group running
     sum must equal computing the prefix sums independently within each
-    group — including a NULL group, which is one group for summing — in
-    BOTH running-sum forms (pid-window default / one-exchange Arrow)."""
-    monkeypatch.setenv("SPARK_GRAFT_CUMSUM_ONE_EXCHANGE", form)
+    group — including a NULL group, which is one group for summing."""
     df = spark.createDataFrame(rows, "g int, v long, id long")
     summed, totals = global_cumsum_grouped(
         df, "g", "v", ["v", "id"], out_col="cs", num_partitions=parts
@@ -122,6 +115,45 @@ def test_global_cumsum_grouped_matches_per_group_prefix_sums(
             expected[(g, v, i)] = acc
         exp_totals[g] = acc
     assert got == expected
+    assert totals == exp_totals
+
+
+@pytest.mark.parametrize("num_partitions", [1, 4, 7])
+@pytest.mark.parametrize("ranker", ["row_number", "cumsum"])
+def test_grouped_rankers_keep_null_and_nan_groups_apart(
+    spark, ranker, num_partitions
+):
+    """NULL and NaN are two groups in Spark's GROUP BY, and all NaNs are
+    one group: per-row results and ``totals`` must match a per-group
+    enumeration that keeps them apart, on whichever partitions the NaN
+    rows land, and ``totals`` answers to ``None`` and ``math.nan``."""
+    groups = [None, math.nan, 1.0]
+    rows = [
+        (g, 10**gi * (k + 1), 6 * gi + k)
+        for gi, g in enumerate(groups)
+        for k in range(6)
+    ]
+    df = spark.createDataFrame(rows, "g double, v long, id long")
+    if ranker == "row_number":
+        out, totals = global_row_number_grouped(
+            df, "g", ["v", "id"], out_col="r", num_partitions=num_partitions
+        )
+    else:
+        out, totals = global_cumsum_grouped(
+            df, "g", "v", ["v", "id"], out_col="r", num_partitions=num_partitions
+        )
+    got = {r.id: r.r for r in out.collect()}
+    expected, exp_totals = {}, {}
+    for gi, g in enumerate(groups):
+        acc = 0
+        members = sorted((v, i) for _, v, i in rows[6 * gi : 6 * gi + 6])
+        for rank, (v, i) in enumerate(members, start=1):
+            acc += v
+            expected[i] = rank if ranker == "row_number" else acc
+        exp_totals[g] = len(members) if ranker == "row_number" else acc
+    assert got == expected
+    # dict equality looks each key up by identity first: the NaN group
+    # must be keyed by the math.nan object itself
     assert totals == exp_totals
 
 

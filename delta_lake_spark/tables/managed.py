@@ -18,8 +18,7 @@ surface natively on Spark primitives:
   checkpoint, in compacted JSON); reading any version loads the nearest
   checkpoint at-or-below it plus the delta tail — O(tail + snapshot), never
   O(all history).  Version 0 needs no checkpoint (its delta IS the full
-  list); legacy entries carrying a full ``files`` list read as
-  self-contained snapshots.
+  list).
 - **Data files**: each commit writes into its own ``<root>/c<version>/``
   directory via the normal Spark parquet writer (so partitioned layouts,
   snappy, column stats all come for free); the log records every file with
@@ -286,6 +285,10 @@ _DV_BROADCAST_BYTES = 64 * 1024 * 1024
 _CDC_COL = "_change_type"
 _CDC_VER = "_commit_version"
 
+# Operations that rewrite files without changing any row (Delta's
+# ``dataChange=false``); purge_deletes and auto-compact commit as optimize.
+_COMPACTION_OPS = ("optimize", "zorder")
+
 # Row tracking (Delta ``delta.enableRowTracking`` analog): every physical
 # row owns a STABLE id that survives compaction, clustering, and DML
 # rewrites.  Fresh rows get ``base_row_id + row_index`` from their file's
@@ -509,6 +512,23 @@ def _filters_expr(filters: list[tuple[str, str, Any]]) -> "Column":
             "=": c == val, "<": c < val, "<=": c <= val, ">": c > val, ">=": c >= val
         }[op]
     return out
+
+
+def _assigned(
+    df: DataFrame,
+    schema: StructType,
+    assignments: "dict[str, Column | str]",
+    cond: "Column | None" = None,
+) -> DataFrame:
+    """``df`` with each assigned column set to its expression (a string
+    parses with ``F.expr``) cast to the table type — on every row, or only
+    where ``cond`` holds."""
+    for col, e in assignments.items():
+        val = (F.expr(e) if isinstance(e, str) else e).cast(schema[col].dataType)
+        df = df.withColumn(
+            col, val if cond is None else F.when(cond, val).otherwise(F.col(col))
+        )
+    return df
 
 
 def _widened_type(a: Any, b: Any) -> "Any | None":
@@ -756,10 +776,9 @@ class ManagedTable:
         return vs[-1] if vs else None
 
     def _raw_entry(self, version: int) -> dict[str, Any]:
-        """The log entry exactly as committed — a delta (``add``/``remove``)
-        in the current format, or a full snapshot for legacy/checkpoint
-        entries.  Metadata-only consumers (``history``) use this to stay
-        O(1) per version."""
+        """The log entry exactly as committed — a delta (``add``/``remove``).
+        Metadata-only consumers (``history``) use this to stay O(1) per
+        version."""
         try:
             with open(self._log_path(version)) as f:
                 return json.load(f)
@@ -789,30 +808,24 @@ class ManagedTable:
         if cached is not None:
             return cached
         raw = self._raw_entry(version)
-        if "files" in raw:  # legacy self-contained entry
-            snap = raw
-        else:
-            ckpts = [c for c in self._checkpoint_versions() if c <= version]
-            files: dict[str, dict[str, Any]] = {}
-            start = -1
-            if ckpts:
-                start = ckpts[-1]
-                cp_path = os.path.join(
-                    self.path, _LOG_DIR, f"{start:08d}.checkpoint.json"
-                )
-                with open(cp_path) as f:
-                    files = {rec["path"]: rec for rec in json.load(f)["files"]}
-            for v in range(start + 1, version + 1):
-                d = raw if v == version else self._raw_entry(v)
-                if "files" in d:  # legacy entry doubles as a checkpoint
-                    files = {rec["path"]: rec for rec in d["files"]}
-                    continue
-                for p in d.get("remove", ()):
-                    files.pop(p, None)
-                for rec in d.get("add", ()):
-                    files[rec["path"]] = rec
-            snap = dict(raw)
-            snap["files"] = list(files.values())
+        ckpts = [c for c in self._checkpoint_versions() if c <= version]
+        files: dict[str, dict[str, Any]] = {}
+        start = -1
+        if ckpts:
+            start = ckpts[-1]
+            cp_path = os.path.join(
+                self.path, _LOG_DIR, f"{start:08d}.checkpoint.json"
+            )
+            with open(cp_path) as f:
+                files = {rec["path"]: rec for rec in json.load(f)["files"]}
+        for v in range(start + 1, version + 1):
+            d = raw if v == version else self._raw_entry(v)
+            for p in d.get("remove", ()):
+                files.pop(p, None)
+            for rec in d.get("add", ()):
+                files[rec["path"]] = rec
+        snap = dict(raw)
+        snap["files"] = list(files.values())
         self._snap_cache[version] = snap
         while len(self._snap_cache) > 4:
             self._snap_cache.pop(next(iter(self._snap_cache)))
@@ -1679,7 +1692,7 @@ class ManagedTable:
             # plan.  A row is matched XOR unmatched-by-source, and neither
             # clause may assign merge keys, so pre-transforming unmatched
             # rows cannot change what the matched plan below pairs up.
-            bysource_cdc: "DataFrame | None" = None
+            bysource_cdc: list[str] = []
             bysource_touched = 0
             if bysource:
                 hit = (
@@ -1701,10 +1714,8 @@ class ManagedTable:
                     bysource_touched = t2.filter(applies).count()
                 if when_not_matched_by_source == "delete":
                     if cdf_on:
-                        bysource_cdc = (
-                            t2.filter(applies)
-                            .select(*table_cols)
-                            .withColumn(_CDC_COL, F.lit("delete"))
+                        bysource_cdc = self._write_cdc(
+                            t2.filter(applies).select(*table_cols)
                         )
                     # NULL condition = clause does NOT apply = row KEPT
                     # (the raw ~applies is NULL there and would silently
@@ -1713,25 +1724,13 @@ class ManagedTable:
                         ~F.coalesce(applies, F.lit(False))
                     ).drop("_src_hit", "_bys")
                 else:  # update
-                    pre = t2.filter(applies) if cdf_on else None
-                    upd = t2
-                    for col_, e in (not_matched_by_source_set or {}).items():
-                        expr_ = F.expr(e) if isinstance(e, str) else e
-                        upd = upd.withColumn(
-                            col_,
-                            F.when(
-                                applies, expr_.cast(existing_schema[col_].dataType)
-                            ).otherwise(F.col(col_)),
-                        )
-                    if pre is not None:
-                        bysource_cdc = (
-                            pre.select(*table_cols)
-                            .withColumn(_CDC_COL, F.lit("update_preimage"))
-                            .unionByName(
-                                upd.filter(applies)
-                                .select(*table_cols)
-                                .withColumn(_CDC_COL, F.lit("update_postimage"))
-                            )
+                    upd = _assigned(
+                        t2, existing_schema, not_matched_by_source_set, applies
+                    )
+                    if cdf_on:
+                        bysource_cdc = self._write_cdc(
+                            t2.filter(applies).select(*table_cols),
+                            upd.filter(applies).select(*table_cols),
                         )
                     target = upd.drop("_src_hit", "_bys")
 
@@ -1836,12 +1835,10 @@ class ManagedTable:
                     update_set,
                     not_matched_condition,
                 )
-                if bysource_cdc is not None:
-                    # by-source rows are invisible to the standard CDC join
-                    # (deleted rows left the target; updated rows have no
-                    # source match), so their images union in here
-                    cdc = cdc.unionByName(bysource_cdc)
-                cdc_files = self._write_sidecar_dir(cdc, "cdc")
+                # by-source rows are invisible to the standard CDC join
+                # (deleted rows left the target; updated rows have no
+                # source match): their images are a sidecar of their own
+                cdc_files = self._write_sidecar_dir(cdc, "cdc") + bysource_cdc
             if partition_by and bool(entry.get("optimize_write")):
                 # Delta optimizeWrite applies to MERGE rewrites too:
                 # without it every shuffle task of the rewrite writes a
@@ -2134,14 +2131,11 @@ class ManagedTable:
         # silently drop the row from `remaining` without deleting it
         # (row-loss, caught by test_delete_keeps_null_predicate_rows).
         remaining = scope.filter(~F.coalesce(_filters_expr(filters), F.lit(False)))
-        cdc_files = None
-        if entry.get("cdf"):
-            cdc_files = self._write_sidecar_dir(
-                scope.filter(_filters_expr(filters))
-                .drop(_ROW_ID)
-                .withColumn(_CDC_COL, F.lit("delete")),
-                "cdc",
-            )
+        cdc_files = (
+            self._write_cdc(scope.filter(_filters_expr(filters)))
+            if entry.get("cdf")
+            else None
+        )
         _dir, files = self._write_commit_dir(remaining, partition_by or None)
         return self._commit(
             {
@@ -2169,6 +2163,27 @@ class ManagedTable:
             for dirpath, _dirs, names in os.walk(out)
             for name in names
             if name.endswith(".parquet")
+        )
+
+    def _write_cdc(
+        self, pre: DataFrame, post: "DataFrame | None" = None
+    ) -> list[str]:
+        """Write one commit's change-data sidecar: ``pre`` alone as
+        ``delete`` rows, or ``pre``/``post`` as update pre/post images.
+        Row-id and deletion-vector columns are dropped."""
+
+        def tagged(df: DataFrame, change: str) -> DataFrame:
+            return df.drop(_ROW_ID, _DV_FILE, _DV_POS).withColumn(
+                _CDC_COL, F.lit(change)
+            )
+
+        if post is None:
+            return self._write_sidecar_dir(tagged(pre, "delete"), "cdc")
+        return self._write_sidecar_dir(
+            tagged(pre, "update_preimage").unionByName(
+                tagged(post, "update_postimage")
+            ),
+            "cdc",
         )
 
     def _dml_merge_on_read(
@@ -2202,54 +2217,30 @@ class ManagedTable:
                 .collect()
             }
             new_data_files: list[dict[str, Any]] = []
-            cdf_on = bool(entry.get("cdf"))
-            cdc_files = None
+            updated = None
             if assignments is not None:
                 # row tracking: the reassigned images carry their original
                 # ids as a materialized column, so an updated row's id
                 # survives the move into the new files
-                updated = hits.drop(_DV_FILE, _DV_POS)
-                for col, expr in assignments.items():
-                    field = next(f for f in schema.fields if f.name == col)
-                    updated = updated.withColumn(
-                        col, expr.cast(field.dataType)
-                    )
-                if cdf_on:
-                    cdc_files = self._write_sidecar_dir(
-                        hits.drop(_DV_FILE, _DV_POS, _ROW_ID)
-                        .withColumn(_CDC_COL, F.lit("update_preimage"))
-                        .unionByName(
-                            updated.drop(_ROW_ID).withColumn(
-                                _CDC_COL, F.lit("update_postimage")
-                            )
-                        ),
-                        "cdc",
-                    )
+                updated = _assigned(
+                    hits.drop(_DV_FILE, _DV_POS), schema, assignments
+                )
                 _dir, new_data_files = self._write_commit_dir(
                     updated, partition_by or None
                 )
-            elif cdf_on:
-                cdc_files = self._write_sidecar_dir(
-                    hits.drop(_DV_FILE, _DV_POS, _ROW_ID).withColumn(
-                        _CDC_COL, F.lit("delete")
-                    ),
-                    "cdc",
-                )
-            recs = []
-            scope = []
-            for rec in affected:
-                cnt = counts.get(rec["path"])
-                if cnt:
-                    scope.append(rec["path"])
-                    recs.append(
-                        {
-                            **rec,
-                            "dvs": _rec_dvs(rec) + dv_paths,
-                            "dv_rows": rec.get("dv_rows", 0) + cnt,
-                        }
-                    )
-                else:
-                    recs.append(rec)
+            cdc_files = (
+                self._write_cdc(hits, updated) if entry.get("cdf") else None
+            )
+            recs = [
+                {
+                    **rec,
+                    "dvs": _rec_dvs(rec) + dv_paths,
+                    "dv_rows": rec.get("dv_rows", 0) + counts[rec["path"]],
+                }
+                if counts.get(rec["path"])
+                else rec
+                for rec in affected
+            ]
             return self._commit(
                 {
                     "operation": "delete" if assignments is None else "update",
@@ -2257,7 +2248,6 @@ class ManagedTable:
                     **({"cdc_files": cdc_files} if cdc_files is not None else {}),
                     "mode": "merge_on_read",
                     "dv_added": dv_paths,
-                    "dv_scope": scope,
                     "files": keep_files + recs + new_data_files,
                     "skipped_files": len(keep_files),
                     "num_deleted_rows": sum(counts.values()),
@@ -2415,22 +2405,9 @@ class ManagedTable:
         schema = StructType.fromJson(entry["schema"])
         cdc_files = None
         if entry.get("cdf"):
-            pre = df.filter(cond).drop(_ROW_ID)
-            post = pre
-            for col, expr in assignments.items():
-                field = next(f for f in schema.fields if f.name == col)
-                post = post.withColumn(col, expr.cast(field.dataType))
-            cdc_files = self._write_sidecar_dir(
-                pre.withColumn(_CDC_COL, F.lit("update_preimage")).unionByName(
-                    post.withColumn(_CDC_COL, F.lit("update_postimage"))
-                ),
-                "cdc",
-            )
-        for col, expr in assignments.items():
-            field = next(f for f in schema.fields if f.name == col)
-            df = df.withColumn(
-                col, F.when(cond, expr.cast(field.dataType)).otherwise(F.col(col))
-            )
+            pre = df.filter(cond)
+            cdc_files = self._write_cdc(pre, _assigned(pre, schema, assignments))
+        df = _assigned(df, schema, assignments, cond)
         _dir, files = self._write_commit_dir(df, partition_by or None)
         return self._commit(
             {
@@ -2671,22 +2648,41 @@ class ManagedTable:
             }
         )
 
-    def _commit_diff(
+    def _commit_changes(
         self, version: int
-    ) -> tuple[list[dict[str, Any]], list[str]]:
-        """(added file records, removed paths) for one commit — straight
-        from the delta entry, or a snapshot diff for legacy full entries."""
+    ) -> "tuple[str, list[dict[str, Any]], list[dict[str, Any]], dict[str, Any]]":
+        """How commit ``version`` changed the table's rows: the one rule
+        every change reader (:meth:`changes`, :meth:`signed_changes`,
+        :meth:`change_feed` and the stream source) follows, Delta's
+        ``dataChange`` flag.  Metadata-only.
+
+        Returns ``(kind, added, removed, raw)``: the records the commit
+        added, the ``version - 1`` records of every path it removed or
+        re-recorded (a re-record replaces the old record), and the raw log
+        entry.  ``kind`` is ``"compaction"`` for an optimize/Z-order
+        rewrite (same rows, new files); ``"none"`` when nothing was added
+        or removed, or only existing files were re-recorded with unchanged
+        deletion vectors (bloom filters, row-id bases); ``"data"``
+        otherwise."""
         raw = self._raw_entry(version)
-        if "files" not in raw:
-            return raw.get("add", []), raw.get("remove", [])
+        added = raw.get("add") or []
+        removed = set(raw.get("remove") or ())
         prev = (
-            {f["path"] for f in self._entry(version - 1)["files"]}
-            if version > 0
-            else set()
+            {f["path"]: f for f in self._entry(version - 1)["files"]}
+            if version > 0 and (added or removed)
+            else {}
         )
-        new_paths = {f["path"] for f in raw["files"]}
-        add = [f for f in raw["files"] if f["path"] not in prev]
-        return add, sorted(prev - new_paths)
+        if raw.get("operation") in _COMPACTION_OPS:
+            kind = "compaction"
+        elif not removed and all(
+            f["path"] in prev and _rec_dvs(f) == _rec_dvs(prev[f["path"]])
+            for f in added
+        ):
+            kind = "none"
+        else:
+            kind = "data"
+        replaced = removed | {f["path"] for f in added}
+        return kind, added, [prev[p] for p in sorted(replaced) if p in prev], raw
 
     def changes(
         self,
@@ -2698,14 +2694,14 @@ class ManagedTable:
         to ``to_version`` (latest by default), driven purely by the commit
         log's add/remove actions — no data rewrite, no extra storage.
 
-        Compaction-only commits (``optimize``/``zorder``) are skipped:
-        they rewrite files without a logical change, so they surface
-        nothing (Delta CDF emits nothing for OPTIMIZE either).
+        Commits that change no data (compaction, bloom filters, row-id
+        bases — see :meth:`_commit_changes`) surface nothing (Delta CDF
+        emits nothing for OPTIMIZE either).
 
-        Default output: the union of each non-compaction commit's added
-        rows.  Appends are exact; merge/overwrite/delete/update commits
-        surface the POST-IMAGE of every row in their rewritten scope
-        (like Delta CDF's update_postimage) — downstream idempotent
+        Default output: the union of each data commit's added rows.
+        Appends are exact; merge/overwrite/delete/update commits surface
+        the POST-IMAGE of every row in their rewritten scope (like Delta
+        CDF's update_postimage) — downstream idempotent
         merges (the engine's own sink pattern) absorb this correctly.
 
         ``include_change_type=True`` adds a ``_change_type`` column and
@@ -2721,15 +2717,16 @@ class ManagedTable:
         if to_version is None:
             to_version = self.latest_version() or 0
         target = self._entry(to_version)
-        # `current`: files added by non-compaction commits whose rows are
-        # still the latest image.  A later NON-compaction commit removing
-        # such a file post-images its surviving rows in its own adds, so
-        # the file drops out; a COMPACTION removing it preserves content
+        # `current`: files added by data commits whose rows are still the
+        # latest image.  A later data commit removing or re-recording such
+        # a file post-images its surviving rows in its own adds, so the
+        # file drops out; a COMPACTION removing it preserves content
         # (the original file stays readable until vacuum), so it stays —
         # that is what makes a trailing OPTIMIZE emit nothing while the
         # pre-compaction changes still surface.  The one ambiguous case:
-        # a non-compaction commit rewriting a compaction OUTPUT produced
-        # inside the range (file identity lost across the compaction) —
+        # a data commit removing or re-recording (merge-on-read DML) a
+        # compaction OUTPUT produced inside the range (file identity lost
+        # across the compaction) —
         # degrade to the plain post-image diff vs the base snapshot, which
         # is always sound but also surfaces rewritten-unchanged rows
         # (idempotent consumers absorb them).
@@ -2738,69 +2735,42 @@ class ManagedTable:
         degraded = False
         delete_frames: list[DataFrame] = []
         for v in range(from_version + 1, to_version + 1):
-            raw = self._raw_entry(v)
-            add, removed = self._commit_diff(v)
-            if raw.get("operation") == "bloom":
-                # metadata-only: same paths, same content — nothing to
-                # surface, and no file-identity change to track
-                continue
-            if raw.get("operation") in ("optimize", "zorder"):
+            kind, add, removed, _raw = self._commit_changes(v)
+            if kind == "compaction":
                 compaction_outputs.update(rec["path"] for rec in add)
+            if kind != "data":
                 continue
-            if any(p in compaction_outputs for p in removed):
-                degraded = True
-            for p in removed:
-                current.pop(p, None)
+            for rec in removed:
+                degraded |= rec["path"] in compaction_outputs
+                current.pop(rec["path"], None)
             for rec in add:
                 current[rec["path"]] = rec
-            if (
-                include_change_type
-                and raw.get("mode") == "merge_on_read"
-                and raw.get("dv_scope")
-            ):
-                # merge-on-read DML removes no files — the pre-images are
-                # the rows its new deletion vectors subtract: read the
-                # scoped files as-of v-1 (old DVs) and as-of v (old+new
-                # DVs); the difference is exactly the newly deleted rows.
-                scope = set(raw["dv_scope"])
-                prev_entry = self._entry(v - 1)
-                this_entry = self._entry(v)
-                pre_recs = [
-                    f for f in prev_entry["files"] if f["path"] in scope
-                ]
-                post_recs = [
-                    f for f in this_entry["files"] if f["path"] in scope
-                ]
-                self._require_files_exist(
-                    pre_recs + post_recs,
-                    f"change feed (DV pre-images at v{v})",
-                )
-                pre = self._read_files(
-                    {**prev_entry, "schema": this_entry["schema"]}, pre_recs
-                )
-                post = self._read_files(this_entry, post_recs)
-                delete_frames.append(pre.exceptAll(post))
             if include_change_type and removed:
-                prev_entry = self._entry(v - 1)
-                rm_recs = [
-                    f for f in prev_entry["files"] if f["path"] in set(removed)
-                ]
-                this_entry = self._entry(v)
+                # a removed or re-recorded file's rows as of v-1 minus the
+                # commit's added rows are its deletes — a merge-on-read
+                # commit re-records its files with new deletion vectors,
+                # so its newly deleted rows fall out the same way.
                 # Pre-images are read under THIS commit's schema, not the
                 # previous one's: a schema-evolving merge would otherwise
                 # feed exceptAll two different column sets. Old files
                 # null-fill evolved columns (schema-on-read), which is also
                 # the correct CDC rendering of a pre-evolution pre-image.
+                this_entry = self._entry(v)
                 self._require_files_exist(
-                    rm_recs + list(add), f"change feed (pre-images at v{v})"
+                    removed + add, f"change feed (pre-images at v{v})"
                 )
                 pre = self._read_files(
-                    {**prev_entry, "schema": this_entry["schema"]}, rm_recs
+                    {**self._entry(v - 1), "schema": this_entry["schema"]},
+                    removed,
                 )
                 post = self._read_files(this_entry, add)
                 delete_frames.append(pre.exceptAll(post))
         if degraded:
-            base = {f["path"] for f in self._entry(from_version)["files"]}
+            base = (
+                {f["path"] for f in self._entry(from_version)["files"]}
+                if from_version >= 0
+                else set()
+            )
             add_recs = [f for f in target["files"] if f["path"] not in base]
         else:
             add_recs = list(current.values())
@@ -2837,8 +2807,8 @@ class ManagedTable:
         (:mod:`delta_lake_spark.tables.matview`); ``changes()`` stays the
         right feed for idempotent row-level consumers.
 
-        IO is bounded by each commit's REWRITTEN scope (compaction commits
-        are skipped — content-preserving, provably net zero), so an
+        IO is bounded by each commit's REWRITTEN scope (commits that change
+        no data are skipped — provably net zero), so an
         append-mostly history costs the appended files only, never a full
         snapshot diff.  Merge-on-read DML is handled snapshot-correctly:
         the pre side reads the scoped files under the old deletion
@@ -2850,29 +2820,20 @@ class ManagedTable:
         plus_frames: list[DataFrame] = []
         minus_frames: list[DataFrame] = []
         for v in range(from_version + 1, to_version + 1):
-            raw = self._raw_entry(v)
-            if raw.get("operation") in ("optimize", "zorder", "bloom"):
+            kind, add, removed, _raw = self._commit_changes(v)
+            if kind != "data":
                 continue
-            add, removed = self._commit_diff(v)
-            scope = {rec["path"] for rec in add} | set(removed)
-            if not scope:
-                continue
-            prev_entry = self._entry(v - 1)
             this_entry = self._entry(v)
-            pre_recs = [f for f in prev_entry["files"] if f["path"] in scope]
-            post_recs = [f for f in this_entry["files"] if f["path"] in scope]
-            self._require_files_exist(
-                pre_recs + post_recs, f"signed changes (v{v})"
-            )
+            self._require_files_exist(removed + add, f"signed changes (v{v})")
             # pre-images read under the later schema (evolved columns
             # null-fill), mirroring changes()
-            if post_recs:
-                plus_frames.append(self._read_files(this_entry, post_recs))
-            if pre_recs:
+            if add:
+                plus_frames.append(self._read_files(this_entry, add))
+            if removed:
                 minus_frames.append(
                     self._read_files(
-                        {**prev_entry, "schema": this_entry["schema"]},
-                        pre_recs,
+                        {**self._entry(v - 1), "schema": this_entry["schema"]},
+                        removed,
                     )
                 )
         schema_entry = self._entry(to_version)
@@ -3018,6 +2979,50 @@ class ManagedTable:
             out = out.unionByName(fdf)
         return out
 
+    def _cdf_slices(
+        self, from_version: int, to_version: int
+    ) -> "list[tuple[int, str | None, dict[str, Any]]]":
+        """The files the change feed over ``(from_version, to_version]``
+        reads, as ``(version, change_type, record)`` slices — one
+        metadata-only plan for :meth:`change_feed` and the
+        ``readChangeFeed`` stream.  Append and overwrite commits
+        synthesize ``delete`` slices from their removed records (read with
+        the deletion vectors they had) and ``insert`` slices from their
+        added ones; delete/update/merge commits contribute their
+        change-data sidecars, whose rows carry their own change type
+        (``None`` here).  Commits that change no data contribute
+        nothing; any other data-changing operation raises."""
+        out: list[tuple[int, str | None, dict[str, Any]]] = []
+        for v in range(from_version + 1, to_version + 1):
+            kind, added, removed, raw = self._commit_changes(v)
+            if kind != "data":
+                continue
+            op = raw.get("operation")
+            if op in ("append", "streaming_append", "clone", "convert", "overwrite"):
+                slices = [(v, "delete", rec) for rec in removed] + [
+                    (v, "insert", rec) for rec in added
+                ]
+            elif op in ("delete", "update", "merge"):
+                if raw.get("cdc_files") is None:
+                    raise ValueError(
+                        f"version {v} ({op}) of {self.path} carries no "
+                        "materialized change data — enable_cdf() must be on "
+                        "when DML runs; use changes() for computed CDC over "
+                        "this range"
+                    )
+                slices = [(v, None, {"path": p}) for p in raw["cdc_files"]]
+            else:
+                raise ValueError(
+                    f"the change feed does not cover operation {op!r} "
+                    f"(version {v} of {self.path}); use changes() for the "
+                    "computed diff"
+                )
+            self._require_files_exist(
+                [rec for _v, _c, rec in slices], f"change feed (v{v})"
+            )
+            out += slices
+        return out
+
     def change_feed(
         self, from_version: int, to_version: int | None = None
     ) -> DataFrame:
@@ -3025,94 +3030,47 @@ class ManagedTable:
         (Delta ``spark.read.option("readChangeFeed", ...)`` /
         ``table_changes`` analog): every row change tagged ``insert`` /
         ``delete`` / ``update_preimage`` / ``update_postimage`` plus a
-        ``_commit_version`` column.
+        ``_commit_version`` column.  The streaming source's
+        ``readChangeFeed`` mode plans from the same :meth:`_cdf_slices`
+        and returns the same rows.
 
         Append commits synthesize inserts from their add actions and
         overwrites synthesize delete pre-images + inserts from their
-        remove/add actions (no sidecar storage, exactly as Delta);
-        delete/update/merge commits read the exact ``-cdc-`` sidecars
-        they materialized — which requires :meth:`enable_cdf` to have been
-        on when they ran.  Compaction / Z-order / bloom / metadata commits
-        surface nothing.  ``changes()`` remains the computed-diff feed for
-        tables without the property."""
+        remove/add actions (no sidecar storage, exactly as Delta); both
+        honour deletion vectors, so a row a merge-on-read delete already
+        removed is never re-emitted.  Delete/update/merge commits read the
+        exact ``-cdc-`` sidecars they materialized — which requires
+        :meth:`enable_cdf` to have been on when they ran.  Commits that
+        change no data (compaction, bloom filters, row-id bases, table
+        metadata) surface nothing.  ``changes()`` remains the
+        computed-diff feed for tables without the property."""
         if to_version is None:
             to_version = self.latest_version() or 0
-        frames: list[DataFrame] = []
-        for v in range(from_version + 1, to_version + 1):
-            raw = self._raw_entry(v)
-            op = raw.get("operation")
-            add = raw.get("add") or []
-            removed = raw.get("remove") or []
-            if op in ("optimize", "zorder", "bloom") or not (add or removed):
-                continue
-            entry_v = self._entry(v)
-            ver = F.lit(v).cast("long")
-            if op in ("append", "streaming_append", "clone", "convert"):
-                self._require_files_exist(add, f"change feed (inserts at v{v})")
-                frames.append(
-                    self._read_files(entry_v, add)
-                    .withColumn(_CDC_COL, F.lit("insert"))
-                    .withColumn(_CDC_VER, ver)
-                )
-            elif op == "overwrite":
-                if v > 0 and removed:
-                    prev = self._entry(v - 1)
-                    rm_recs = [
-                        f for f in prev["files"] if f["path"] in set(removed)
-                    ]
-                    self._require_files_exist(
-                        rm_recs, f"change feed (overwrite pre-images at v{v})"
-                    )
-                    frames.append(
-                        self._read_files(
-                            {**prev, "schema": entry_v["schema"]}, rm_recs
-                        )
-                        .withColumn(_CDC_COL, F.lit("delete"))
-                        .withColumn(_CDC_VER, ver)
-                    )
-                self._require_files_exist(add, f"change feed (inserts at v{v})")
-                frames.append(
-                    self._read_files(entry_v, add)
-                    .withColumn(_CDC_COL, F.lit("insert"))
-                    .withColumn(_CDC_VER, ver)
-                )
-            elif op in ("delete", "update", "merge"):
-                cdc = raw.get("cdc_files")
-                if cdc is None:
-                    raise ValueError(
-                        f"version {v} ({op}) carries no materialized change "
-                        "data — enable_cdf() must be on when DML runs; use "
-                        "changes() for computed CDC over this range"
-                    )
-                missing = [
-                    p for p in cdc
-                    if not os.path.exists(os.path.join(self.path, p))
-                ]
-                if missing:
-                    raise VacuumedVersionError(
-                        f"change-data files of version {v} were vacuumed: "
-                        f"{missing[:3]}{'...' if len(missing) > 3 else ''}"
-                    )
-                if cdc:
-                    frames.append(
-                        self.spark.read.parquet(
-                            *[os.path.join(self.path, p) for p in cdc]
-                        ).withColumn(_CDC_VER, ver)
-                    )
-            else:
-                raise ValueError(
-                    f"change_feed does not cover operation {op!r} (v{v}); "
-                    "use changes() for the computed diff"
-                )
-        base = (
+        groups: dict[tuple[int, str | None], list[dict[str, Any]]] = {}
+        for v, change, rec in self._cdf_slices(from_version, to_version):
+            groups.setdefault((v, change), []).append(rec)
+        out = (
             self._read_files(self._entry(to_version), [])
             .withColumn(_CDC_COL, F.lit("insert"))
             .withColumn(_CDC_VER, F.lit(0).cast("long"))
-            .limit(0)
         )
-        out = base
-        for fdf in frames:
-            out = out.unionByName(fdf, allowMissingColumns=True)
+        for (v, change), recs in groups.items():
+            if change is None:
+                df = self.spark.read.parquet(
+                    *[os.path.join(self.path, rec["path"]) for rec in recs]
+                )
+            else:
+                # delete pre-images read as of v-1 under v's schema
+                entry = self._entry(v)
+                if change == "delete":
+                    entry = {**self._entry(v - 1), "schema": entry["schema"]}
+                df = self._read_files(entry, recs).withColumn(
+                    _CDC_COL, F.lit(change)
+                )
+            out = out.unionByName(
+                df.withColumn(_CDC_VER, F.lit(v).cast("long")),
+                allowMissingColumns=True,
+            )
         return out
 
     # ------------------------------------------------------------------ #

@@ -9,13 +9,19 @@ write-ahead log, exactly how Delta's own source works.
 
 Semantics (Delta-parity):
 
-- Append commits stream their added files' rows.
-- OPTIMIZE / Z-order / bloom commits are data-unchanged and silently
-  skipped (Delta: ``dataChange=false``).
-- Any other change (removed files, rewritten files, deletion vectors) makes
+- Commits are classified by ``ManagedTable._commit_changes``, the rule the
+  batch change readers follow too: compaction (OPTIMIZE / Z-order) and
+  re-records of existing files with unchanged deletion vectors (bloom
+  filters, row-id bases) change no data and are silently skipped (Delta:
+  ``dataChange=false``).
+- Append commits stream their added files' live rows.
+- Any other change (removed or rewritten files, new deletion vectors) makes
   the source RAISE by default — silently re-emitting rewritten rows would
   corrupt downstream aggregates.  ``skipChangeCommits=true`` opts into
   Delta's same-named behavior: those commits are skipped wholesale.
+- ``readChangeFeed=true`` streams the change feed instead: the same
+  ``(version, change_type, file)`` plan as ``ManagedTable.change_feed``
+  and the same rows, deletion vectors applied.
 - ``startingVersion`` begins the stream at a later commit (default: from
   version 0, i.e. the full table then the tail).
 
@@ -23,7 +29,8 @@ Scale notes: offset resolution and partition planning are driver-side log
 reads (O(commits in the batch), JSON metadata only); each added file becomes
 one input partition read executor-side via Arrow record batches, so a batch
 with K new files fans out K-wide.  Partition-column values are recovered
-from the Hive-style path components, typed per the table schema.
+from each file's own Hive-style path components (so files written under an
+earlier partition spec read correctly), typed per the table schema.
 
 Usage::
 
@@ -37,7 +44,6 @@ Unsupported (clear errors, not silent misreads): column-mapped tables
 
 from __future__ import annotations
 
-import json
 import os
 import urllib.parse
 from dataclasses import dataclass
@@ -50,9 +56,14 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-from delta_lake_spark.tables.managed import _CDC_COL, _CDC_VER, ManagedTable
-
-_SKIP_OPS = ("optimize", "zorder", "bloom")
+from delta_lake_spark.tables.managed import (
+    _CDC_COL,
+    _CDC_VER,
+    _DV_FILE,
+    _DV_POS,
+    ManagedTable,
+    _rec_dvs,
+)
 
 
 def _log_table(path: str) -> ManagedTable:
@@ -64,13 +75,14 @@ def _log_table(path: str) -> ManagedTable:
 
 @dataclass
 class _FileSlice(InputPartition):
-    file_path: str  # absolute parquet path
-    partition_values: tuple  # (col, raw-string-or-None) pairs, schema order
+    path: str  # table-relative parquet path
     # CDF-mode fields: a literal change type stamped onto every row of the
     # file (None = the file carries its own _change_type column, i.e. a
     # -cdc- sidecar) and the commit version the slice belongs to.
     change_type: "str | None" = None
     commit_version: "int | None" = None
+    # the record's deletion-vector sidecars: read() drops their positions
+    dvs: tuple = ()
 
 
 class ManagedTableStreamReader(DataSourceStreamReader):
@@ -156,30 +168,22 @@ class ManagedTableStreamReader(DataSourceStreamReader):
 
     def _appended_files(self, version: int) -> list[dict[str, Any]]:
         """Added-file records of one commit IF it is stream-consumable;
-        [] for skipped commits; raise for change commits (unless opted out)."""
-        mt = _log_table(self.path)
-        raw = mt._raw_entry(version)
-        if raw.get("operation") in _SKIP_OPS:
-            return []  # dataChange=false analog
-        add, removed = mt._commit_diff(version)
-        prev_paths = (
-            {f["path"] for f in mt._entry(version - 1)["files"]}
-            if version > 0
-            else set()
+        [] for commits that change no data (and for change commits under
+        skipChangeCommits); raise for other change commits."""
+        kind, added, removed, _raw = _log_table(self.path)._commit_changes(
+            version
         )
-        rewrites = [f for f in add if f["path"] in prev_paths]
-        with_dvs = [f for f in add if f.get("dvs")]
-        if removed or rewrites or with_dvs:
-            if self.skip_change_commits:
-                return []
+        if kind != "data" or (removed and self.skip_change_commits):
+            return []
+        if removed:
             raise ValueError(
                 f"version {version} of {self.path} is not append-only "
-                f"({len(removed)} removed, {len(rewrites)} rewritten, "
-                f"{len(with_dvs)} with deletion vectors); set "
+                f"({len(removed)} file(s) removed or rewritten); set "
                 "skipChangeCommits=true to skip change commits, or stream "
-                "the change feed (ManagedTable.changes) instead"
+                "the change feed (readChangeFeed=true, the streaming "
+                "ManagedTable.change_feed) instead"
             )
-        return add
+        return added
 
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
         # After a checkpoint restart the restored position arrives here, not
@@ -187,93 +191,22 @@ class ManagedTableStreamReader(DataSourceStreamReader):
         # relative to real progress.
         if self._last_end is None or int(end["version"]) > self._last_end:
             self._last_end = int(end["version"])
+        mt = _log_table(self.path)
         if self.read_cdf:
-            return self._cdf_partitions(
-                int(start["version"]), int(end["version"])
-            )
-        pcols = self._partition_cols()
+            return [
+                _FileSlice(rec["path"], change, v, tuple(_rec_dvs(rec)))
+                for v, change, rec in mt._cdf_slices(
+                    int(start["version"]), int(end["version"])
+                )
+            ]
         out: list[InputPartition] = []
         for v in range(int(start["version"]) + 1, int(end["version"]) + 1):
-            for rec in self._appended_files(v):
-                full = os.path.join(self.path, rec["path"])
-                if not os.path.exists(full):
-                    raise FileNotFoundError(
-                        f"streamed file {rec['path']!r} of version {v} is "
-                        "missing (vacuumed?); restart the stream from a "
-                        "later startingVersion"
-                    )
-                vals = _hive_values(rec["path"], pcols)
-                out.append(
-                    _FileSlice(full, tuple(zip(pcols, vals)))
-                )
+            recs = self._appended_files(v)
+            mt._require_files_exist(recs, f"stream of version {v}")
+            out += [
+                _FileSlice(rec["path"], dvs=tuple(_rec_dvs(rec))) for rec in recs
+            ]
         return out
-
-    def _cdf_partitions(self, start: int, end: int) -> Sequence[InputPartition]:
-        """CDF-mode planning (readChangeFeed=true): appends/overwrites
-        synthesize insert / delete slices from the commit's add/remove
-        actions; delete/update/merge commits stream their exact -cdc-
-        sidecars (which requires enable_cdf() to have been on when they
-        ran).  Metadata-only — mirrors ManagedTable.change_feed."""
-        mt = _log_table(self.path)
-        pcols = self._partition_cols()
-        out: list[InputPartition] = []
-
-        def file_slice(rec: dict, ctype: str, v: int) -> _FileSlice:
-            full = os.path.join(self.path, rec["path"])
-            if not os.path.exists(full):
-                raise FileNotFoundError(
-                    f"change-feed file {rec['path']!r} of version {v} is "
-                    "missing (vacuumed?); restart from a later "
-                    "startingVersion"
-                )
-            vals = _hive_values(rec["path"], pcols)
-            return _FileSlice(full, tuple(zip(pcols, vals)), ctype, v)
-
-        for v in range(start + 1, end + 1):
-            raw = mt._raw_entry(v)
-            op = raw.get("operation")
-            add = raw.get("add") or []
-            removed = raw.get("remove") or []
-            if op in _SKIP_OPS or not (add or removed):
-                continue
-            if op in ("append", "streaming_append", "clone", "convert"):
-                out.extend(file_slice(rec, "insert", v) for rec in add)
-            elif op == "overwrite":
-                if v > 0 and removed:
-                    prev = mt._entry(v - 1)
-                    rm = set(removed)
-                    out.extend(
-                        file_slice(rec, "delete", v)
-                        for rec in prev["files"]
-                        if rec["path"] in rm
-                    )
-                out.extend(file_slice(rec, "insert", v) for rec in add)
-            elif op in ("delete", "update", "merge"):
-                cdc = raw.get("cdc_files")
-                if cdc is None:
-                    raise ValueError(
-                        f"version {v} ({op}) of {self.path} carries no "
-                        "materialized change data — enable_cdf() must be on "
-                        "when DML runs for readChangeFeed streams"
-                    )
-                for p in cdc:
-                    full = os.path.join(self.path, p)
-                    if not os.path.exists(full):
-                        raise FileNotFoundError(
-                            f"change-data file {p!r} of version {v} was "
-                            "vacuumed; restart from a later startingVersion"
-                        )
-                    out.append(_FileSlice(full, (), None, v))
-            else:
-                raise ValueError(
-                    f"readChangeFeed does not cover operation {op!r} "
-                    f"(version {v} of {self.path})"
-                )
-        return out
-
-    def _partition_cols(self) -> list[str]:
-        entry = _log_table(self.path)._entry()
-        return list(entry.get("partition_by") or [])
 
     # ----- execution ------------------------------------------------------
 
@@ -284,11 +217,21 @@ class ManagedTableStreamReader(DataSourceStreamReader):
         from pyspark.sql.pandas.types import to_arrow_schema
 
         target = to_arrow_schema(self.schema)
-        tbl = pq.read_table(partition.file_path)
+        tbl = pq.read_table(os.path.join(self.path, partition.path))
+        if partition.dvs:
+            import numpy as np
+            import pyarrow.compute as pc
+
+            keep = np.ones(tbl.num_rows, dtype=bool)
+            for p in partition.dvs:
+                dv = pq.read_table(os.path.join(self.path, p))
+                mine = dv.filter(pc.equal(dv[_DV_FILE], partition.path))
+                keep[mine[_DV_POS].to_numpy()] = False
+            tbl = tbl.filter(pa.array(keep))
         n = tbl.num_rows
         cols = []
+        pv = _hive_values(partition.path)
         for field in target:
-            pv = dict(partition.partition_values)
             if field.name == _CDC_COL and partition.change_type is not None:
                 col = pa.array([partition.change_type] * n, type=pa.string()).cast(
                     field.type
@@ -309,14 +252,17 @@ class ManagedTableStreamReader(DataSourceStreamReader):
         yield from out.to_batches(max_chunksize=1 << 16)
 
 
-def _hive_values(rel_path: str, pcols: list[str]) -> list[str | None]:
+def _hive_values(rel_path: str) -> dict[str, str | None]:
+    """The decoded Hive ``col=value`` directory components of one file's
+    table-relative path: its partition values under the layout it was
+    written with, whatever the table's current spec."""
     found: dict[str, str | None] = {}
     for comp in rel_path.split("/")[:-1]:
         if "=" in comp:
             k, _, v = comp.partition("=")
             v = urllib.parse.unquote(v)
             found[k] = None if v == "__HIVE_DEFAULT_PARTITION__" else v
-    return [found.get(c) for c in pcols]
+    return found
 
 
 class ManagedTableStreamSource(DataSource):
@@ -371,12 +317,6 @@ from pyspark.sql.datasource import DataSourceStreamWriter, WriterCommitMessage  
 class _StagedFile(WriterCommitMessage):
     # one message per task; each entry is (table-relative path, row count)
     files: "list[tuple[str, int]]"
-
-
-def _last_txn_batch(mt: ManagedTable, app: str) -> int | None:
-    """Newest committed batch id for ``app`` — shared with batch
-    txn-marked writes (ManagedTable.last_txn_batch)."""
-    return mt.last_txn_batch(app)
 
 
 class ManagedTableStreamWriter(DataSourceStreamWriter):
@@ -492,15 +432,11 @@ class ManagedTableStreamWriter(DataSourceStreamWriter):
             f for m in messages if m is not None for f in m.files
         ]
         mt = _log_table(self.path)
-        last = _last_txn_batch(mt, self.app)
+        last = mt.last_txn_batch(self.app)
         if last is not None and batchId <= last:
             # replayed batch: already durably committed — drop the re-staged
             # files and keep the log unchanged (exactly-once)
-            for rel, _rows in staged:
-                try:
-                    os.unlink(os.path.join(self.path, rel))
-                except FileNotFoundError:
-                    pass
+            self._drop_staged(staged)
             return
         pcols = self.partition_by
         records = [
@@ -551,9 +487,11 @@ class ManagedTableStreamWriter(DataSourceStreamWriter):
         )
 
     def abort(self, messages, batchId: int) -> None:  # noqa: N802
-        for m in messages:
-            if m is not None:
-                try:
-                    os.unlink(os.path.join(self.path, m.rel_path))
-                except FileNotFoundError:
-                    pass
+        self._drop_staged([f for m in messages if m is not None for f in m.files])
+
+    def _drop_staged(self, staged: "list[tuple[str, int]]") -> None:
+        for rel, _rows in staged:
+            try:
+                os.unlink(os.path.join(self.path, rel))
+            except FileNotFoundError:
+                pass

@@ -228,3 +228,144 @@ def test_stream_cdf_raises_without_property_and_on_conflicting_opts(
             spark, tp, str(tmp_path / "o2"), str(tmp_path / "c2"),
             skipChangeCommits="true",
         )
+
+
+# ------------------------------------------------------------------------
+# one change reader: batch and streaming feeds agree commit by commit
+# ------------------------------------------------------------------------
+
+
+def _stream_reader(path, **opts):
+    from delta_lake_spark.tables.stream_source import (
+        ManagedTableStreamReader,
+        ManagedTableStreamSource,
+    )
+
+    opts = {"path": path, **opts}
+    return ManagedTableStreamReader(
+        ManagedTableStreamSource(opts).schema(), opts
+    )
+
+
+def _stream_rows(reader, start, end):
+    """Rows the stream source plans and reads for versions
+    ``(start, end]``, driven directly (no streaming query)."""
+    out = []
+    for part in reader.partitions({"version": start}, {"version": end}):
+        for batch in reader.read(part):
+            out += batch.to_pylist()
+    return out
+
+
+def _stream_cdf_rows(path, start, end):
+    return sorted(
+        (r["_commit_version"], r["_change_type"], r["k"], r["v"])
+        for r in _stream_rows(_stream_reader(path, readChangeFeed="true"), start, end)
+    )
+
+
+def test_stream_change_feed_matches_batch_change_feed(spark, tmp_path):
+    """readChangeFeed planning + reading returns exactly change_feed()'s
+    rows over every version range of a history that mixes appends,
+    merge-on-read and copy-on-write DML, merge, compaction, metadata-only
+    re-records and an overwrite — including rows a deletion vector had
+    already removed, which an overwrite must not re-emit."""
+    tp = str(tmp_path / "t")
+    mt = ManagedTable(spark, tp)
+    schema = "k long, v double"
+    mt.write(spark.createDataFrame([(1, 10.0), (2, 20.0), (3, 30.0)], schema).coalesce(1))  # v0
+    mt.enable_cdf()                                                              # v1
+    mt.write(spark.createDataFrame([(4, 40.0)], schema), mode="append")          # v2
+    mt.delete_where([("k", "=", 1)], mode="merge_on_read")                       # v3
+    mt.update_where([("k", "=", 2)], {"v": F.lit(99.0)})                         # v4
+    mt.merge(spark.createDataFrame([(3, 33.0), (5, 50.0)], schema), ["k"])       # v5
+    mt.delete_where([("k", "=", 4)], mode="merge_on_read")                       # v6
+    mt.optimize()                                                                # v7
+    mt.delete_where([("k", "=", 5)], mode="merge_on_read")                       # v8
+    mt.add_bloom_filters(["k"])                                                  # v9
+    mt.enable_row_tracking()                                                     # v10
+    last = mt.write(spark.createDataFrame([(9, 90.0)], schema), mode="overwrite")  # v11
+    assert last == 11
+
+    full = _rows(mt.change_feed(-1))
+    # the overwrite deletes only the rows live at v10, never DV-deleted ones
+    assert [r for r in full if r[0] == 11] == [
+        (11, "delete", 2, 99.0),
+        (11, "delete", 3, 33.0),
+        (11, "insert", 9, 90.0),
+    ]
+    for a in range(-1, last):
+        for b in range(a + 1, last + 1):
+            assert _stream_cdf_rows(tp, a, b) == [
+                r for r in full if a < r[0] <= b
+            ], (a, b)
+    # each slice of the batch feed is the full feed restricted to it
+    for a, b in [(2, 3), (5, 8), (8, 11)]:
+        assert _rows(mt.change_feed(a, b)) == [r for r in full if a < r[0] <= b]
+
+    # a zero-copy clone carries the source's deletion vectors in its
+    # initial commit: both feeds load only the live rows
+    clone = mt.clone(str(tmp_path / "clone"), version=8)
+    clone.enable_cdf()
+    assert _rows(clone.change_feed(-1)) == [(0, "insert", 2, 99.0), (0, "insert", 3, 33.0)]
+    assert _stream_cdf_rows(clone.path, -1, 1) == _rows(clone.change_feed(-1))
+    assert sorted(r["k"] for r in _stream_rows(_stream_reader(clone.path), -1, 1)) == [2, 3]
+
+
+def test_metadata_rerecords_are_invisible_to_every_change_reader(spark, tmp_path):
+    """Bloom filters and row-tracking bases re-record existing files with
+    unchanged deletion vectors: no rows change, so changes(),
+    signed_changes(), change_feed() and both stream modes see nothing."""
+    tp = str(tmp_path / "t")
+    mt = ManagedTable(spark, tp)
+    schema = "k long, v double"
+    mt.write(spark.createDataFrame([(1, 1.0), (2, 2.0), (3, 3.0)], schema))  # v0
+    mt.enable_cdf()                                                          # v1
+    mt.delete_where([("k", "=", 3)], mode="merge_on_read")                   # v2
+    mt.add_bloom_filters(["k"])                                              # v3
+    mt.enable_row_tracking()                                                 # v4
+    assert mt.latest_version() == 4
+    for a in (2, 3):
+        assert mt.changes(a).count() == 0
+        assert mt.changes(a, include_change_type=True).count() == 0
+        assert mt.signed_changes(a).count() == 0
+        assert mt.change_feed(a).count() == 0
+        assert _stream_cdf_rows(tp, a, 4) == []
+        assert _stream_rows(_stream_reader(tp), a, 4) == []
+    # the append-only stream still raises on the real change commit (v2)
+    # and skips it on request; the re-records after it never count
+    with pytest.raises(ValueError, match="not append-only"):
+        _stream_rows(_stream_reader(tp), 1, 4)
+    assert sorted(
+        r["k"]
+        for r in _stream_rows(_stream_reader(tp, skipChangeCommits="true"), -1, 4)
+    ) == [1, 2, 3]
+
+
+def test_stream_reads_partition_values_from_each_files_own_layout(spark, tmp_path):
+    """Files keep the partition layout they were written with: after the
+    spec is dropped, both stream modes still recover the old files'
+    partition column from their paths and the new files' from the data,
+    agreeing with the batch reads column for column."""
+    tp = str(tmp_path / "t")
+    mt = ManagedTable(spark, tp)
+    schema = "k long, v double, p string"
+    mt.write(
+        spark.createDataFrame([(1, 1.0, "a"), (2, 2.0, "b")], schema),
+        partition_by=["p"],
+    )                                                                  # v0
+    mt.set_partitioning(None)                                          # v1
+    mt.write(spark.createDataFrame([(3, 3.0, "c")], schema), mode="append")  # v2
+    mt.enable_cdf()                                                    # v3
+
+    def full(rows, cols):
+        return sorted(tuple(r[c] for c in cols) for r in rows)
+
+    cols = ["k", "v", "p"]
+    assert full(_stream_rows(_stream_reader(tp), -1, 3), cols) == full(
+        mt.read().collect(), cols
+    ) == [(1, 1.0, "a"), (2, 2.0, "b"), (3, 3.0, "c")]
+    cols = ["_commit_version", "_change_type", *cols]
+    assert full(
+        _stream_rows(_stream_reader(tp, readChangeFeed="true"), -1, 3), cols
+    ) == full(mt.change_feed(-1).collect(), cols)

@@ -179,6 +179,21 @@ def test_change_feed_mor_update_pre_and_post_images(spark, tmp_path, base_df):
     ) == [("delete", 2.0), ("insert", 99.0)]
 
 
+def test_changes_after_mor_delete_on_compaction_output(spark, tmp_path):
+    """A merge-on-read delete re-records a file that an OPTIMIZE inside the
+    range produced: the feed falls back to the post-image diff, so the
+    deleted row never resurfaces and no row surfaces twice."""
+    t = ManagedTable(spark, str(tmp_path / "t"))
+    t.write(spark.createDataFrame([(1,), (2,), (3,)], "k long"))            # v0
+    t.write(spark.createDataFrame([(4,)], "k long"), mode="append")         # v1
+    t.optimize()                                                            # v2
+    t.delete_where([("k", "=", 1)], mode="merge_on_read")                   # v3
+    for start in (-1, 0):
+        assert sorted(r.k for r in t.changes(start).collect()) == [2, 3, 4]
+    feed = t.changes(0, include_change_type=True)
+    assert rows(feed.filter("_change_type = 'delete'")) == [(1, "delete")]
+
+
 def test_vacuum_keeps_live_dvs_drops_purged(spark, tmp_path, base_df):
     t = ManagedTable(spark, str(tmp_path / "t"))
     t.write(base_df.coalesce(1))

@@ -260,6 +260,29 @@ def test_vacuum_spares_inflight_staged_shards(spark, tmp_path):
     assert sorted(r["k"] for r in mt.read().collect()) == [0, 1]
 
 
+def test_sink_abort_unlinks_staged_shards(spark, tmp_path):
+    """An aborted micro-batch leaves no staged shard behind and no commit
+    in the log."""
+    from pyspark.sql import Row
+
+    from delta_lake_spark.tables.stream_source import ManagedTableStreamWriter
+
+    p = str(tmp_path / "t")
+    mt = ManagedTable(spark, p)
+    mt.write(spark.createDataFrame([(0, "z")], "k long, s string"))
+
+    w = ManagedTableStreamWriter(mt.schema(), {"path": p})
+    msg = w.write(iter([Row(k=1, s="a"), Row(k=2, s="b")]))
+    empty = w.write(iter([]))
+    staged = [os.path.join(p, rel) for m in (msg, empty) for rel, _rows in m.files]
+    assert staged and all(os.path.exists(f) for f in staged)
+
+    w.abort([msg, None, empty], batchId=1)
+    assert not any(os.path.exists(f) for f in staged)
+    assert mt.latest_version() == 0
+    assert sorted(r["k"] for r in mt.read().collect()) == [0]
+
+
 @pytest.mark.full  # >13s multi-process/stream differential: round-close tier
 def test_max_versions_per_trigger_bounds_batches(spark, tmp_path):
     # 4 commits of backlog.  A capped processingTime stream must absorb ONE

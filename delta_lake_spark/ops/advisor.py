@@ -231,7 +231,7 @@ def maintenance_report(
         os.path.relpath(os.path.join(root, fn), t.path)
         for root, _dirs, fns in os.walk(t.path)
         for fn in fns
-        if fn.endswith(".parquet") and "_managed_log" not in root
+        if fn.endswith(".parquet")
     }
     unreferenced = sorted(on_disk - live_paths)
     if unreferenced:

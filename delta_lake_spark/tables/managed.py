@@ -9,31 +9,12 @@ compaction / Z-ordering (:1336-1338, :4614-4620), and table metadata
 available in this environment, so this module re-implements that capability
 surface natively on Spark primitives:
 
-- **Commit log**: ``<root>/_log/<version>.json``, one JSON file per commit
-  holding the commit's *delta* — ``add`` (new file records) and ``remove``
-  (paths dropped from the snapshot) — exactly Delta's add/remove action
-  model, so commit cost is O(changed files), not O(table files).  Every
-  ``_CHECKPOINT_INTERVAL`` commits a ``<version>.checkpoint.json`` with the
-  complete consolidated file list is also written (Delta's parquet
-  checkpoint, in compacted JSON); reading any version loads the nearest
-  checkpoint at-or-below it plus the delta tail — O(tail + snapshot), never
-  O(all history).  Version 0 needs no checkpoint (its delta IS the full
-  list).
 - **Data files**: each commit writes into its own ``<root>/c<version>/``
   directory via the normal Spark parquet writer (so partitioned layouts,
   snappy, column stats all come for free); the log records every file with
   its parsed partition values.
-- **Atomicity**: the log file is written to a temp name and hard-linked
-  (``os.link``) into place — link is an atomic put-if-absent on POSIX
-  (fails ``EEXIST``), so readers see either the old or the new version,
-  never a torn one, and two writers racing the same version cannot both
-  succeed.  On losing the race, blind appends/overwrites re-prepare
-  against the winner's snapshot and retry (optimistic concurrency, Delta's
-  WriteSerializable level — appends never conflict, overwrites are
-  last-writer-wins); read-modify-write operations (merge/DML/optimize)
-  raise ``ConcurrentWriteError`` because their read snapshot may be
-  logically invalidated — the caller re-runs the operation, exactly
-  Delta's conflict behavior for non-disjoint transactions.
+- **Commit log**: ``log.py`` (:class:`TableLog`, this class's base) —
+  Spark-free, so the streaming workers use it too.
 
 Scale notes (100 TB / 1000 executors):
 
@@ -74,11 +55,14 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
-_LOG_DIR = "_log"
-
-# Write a full-snapshot checkpoint every N commits; reads replay at most
-# N-1 delta entries past a checkpoint.  Delta's default is 10 too.
-_CHECKPOINT_INTERVAL = 10
+from delta_lake_spark.tables.log import (  # noqa: F401 (re-exported)
+    _CHECKPOINT_INTERVAL,
+    _LOG_DIR,
+    ConcurrentWriteError,
+    TableLog,
+    VacuumedVersionError,
+    _rec_dvs,
+)
 
 # JSON-safe stat types we collect and prune on (Delta's data-skipping set,
 # minus timestamps which need tz care)
@@ -285,10 +269,6 @@ _DV_BROADCAST_BYTES = 64 * 1024 * 1024
 _CDC_COL = "_change_type"
 _CDC_VER = "_commit_version"
 
-# Operations that rewrite files without changing any row (Delta's
-# ``dataChange=false``); purge_deletes and auto-compact commit as optimize.
-_COMPACTION_OPS = ("optimize", "zorder")
-
 # Row tracking (Delta ``delta.enableRowTracking`` analog): every physical
 # row owns a STABLE id that survives compaction, clustering, and DML
 # rewrites.  Fresh rows get ``base_row_id + row_index`` from their file's
@@ -298,10 +278,6 @@ _COMPACTION_OPS = ("optimize", "zorder")
 # ids from the new file's base) — exactly Delta's fresh/materialized
 # two-tier design.
 _ROW_ID = "_row_id"
-
-
-def _rec_dvs(rec: dict[str, Any]) -> list[str]:
-    return list(rec.get("dvs") or ())
 
 
 # Per-file Bloom filters (point-lookup data skipping).  min/max stats prune
@@ -597,42 +573,22 @@ def _merge_schemas(existing: "StructType", incoming: "StructType") -> "StructTyp
     return StructType(merged)
 
 
-class ConcurrentWriteError(RuntimeError):
-    """Another writer committed this version first."""
-
-
-class VacuumedVersionError(FileNotFoundError):
-    """Time travel to a version whose data files were vacuumed away."""
-
-
-class ManagedTable:
+class ManagedTable(TableLog):
     """Handle to one versioned table rooted at ``path``.
 
     Mirrors the ``DeltaTable`` API surface the reference uses
     (``forPath`` / ``merge`` / ``optimize`` / ``history`` / ``detail`` /
-    ``isDeltaTable`` — SURVEY.md §2.11 M1-M5, §2.3 J7-J8).
+    ``isDeltaTable`` — SURVEY.md §2.11 M1-M5, §2.3 J7-J8).  The commit log
+    (snapshots, commits, history, tags) is the :class:`TableLog` base.
     """
 
     def __init__(self, spark: SparkSession, path: str):
+        super().__init__(path)
         self.spark = spark
-        self.path = os.path.abspath(path)
-        # Reconstructed snapshots keyed by version.  A committed version's
-        # content is immutable, so cached entries never go stale; the cache
-        # is bounded to keep driver memory O(few snapshots).
-        self._snap_cache: dict[int, dict[str, Any]] = {}
 
     # ------------------------------------------------------------------ #
     # existence / construction
     # ------------------------------------------------------------------ #
-
-    @staticmethod
-    def is_managed_table(path: str) -> bool:
-        """Existence probe gating merge-vs-create, the reference's
-        ``DeltaTable.isDeltaTable`` pattern (deltalake.ipynb:1786, :2933)."""
-        log = os.path.join(os.path.abspath(path), _LOG_DIR)
-        return os.path.isdir(log) and any(
-            f.endswith(".json") for f in os.listdir(log)
-        )
 
     @classmethod
     def for_path(cls, spark: SparkSession, path: str) -> "ManagedTable":
@@ -663,21 +619,11 @@ class ManagedTable:
         """
         if cls.is_managed_table(path):
             raise ValueError(f"already a managed table: {path}")
-        found: list[tuple[str, dict[str, str]]] = []
-        for dirpath, _dirs, names in os.walk(path):
-            if _LOG_DIR in dirpath:
-                continue
-            partition: dict[str, str] = {}
-            for seg in os.path.relpath(dirpath, path).split(os.sep):
-                if "=" in seg:
-                    k, _, v = seg.partition("=")
-                    partition[k] = v
-            for name in names:
-                if name.endswith(".parquet"):
-                    found.append((os.path.join(dirpath, name), partition))
-        if not found:
+        mt = cls(spark, path)
+        files = mt._file_records(mt.path)
+        if not files:
             raise FileNotFoundError(f"no parquet files under {path}")
-        key_sets = {tuple(sorted(p)) for _f, p in found}
+        key_sets = {tuple(sorted(f["partition"])) for f in files}
         if len(key_sets) != 1:
             raise ValueError(
                 f"inconsistent Hive partition layouts under {path}: "
@@ -707,21 +653,6 @@ class ManagedTable:
                     for f in schema.fields
                 ]
             )
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=min(32, len(found))) as pool:
-            metas = list(pool.map(lambda fp: _footer_meta(fp[0]), found))
-        files = [
-            {
-                "path": os.path.relpath(full, path),
-                "size": os.path.getsize(full),
-                "partition": partition,
-                "stats": st,
-                **({"rows": n} if n is not None else {}),
-            }
-            for (full, partition), (st, n) in zip(found, metas)
-        ]
-        mt = cls(spark, path)
         mt._commit(
             {
                 "operation": "convert",
@@ -734,222 +665,6 @@ class ManagedTable:
         return mt
 
     # ------------------------------------------------------------------ #
-    # log handling
-    # ------------------------------------------------------------------ #
-
-    def _log_path(self, version: int) -> str:
-        return os.path.join(self.path, _LOG_DIR, f"{version:08d}.json")
-
-    def _versions(self) -> list[int]:
-        log = os.path.join(self.path, _LOG_DIR)
-        if not os.path.isdir(log):
-            return []
-        return sorted(
-            int(f[:-5])
-            for f in os.listdir(log)
-            if f.endswith(".json") and not f.endswith(".checkpoint.json")
-        )
-
-    def _checkpoint_versions(self) -> list[int]:
-        log = os.path.join(self.path, _LOG_DIR)
-        if not os.path.isdir(log):
-            return []
-        return sorted(
-            int(f[: -len(".checkpoint.json")])
-            for f in os.listdir(log)
-            if f.endswith(".checkpoint.json")
-        )
-
-    def last_txn_batch(self, app: str) -> int | None:
-        """Newest committed batch id for ``app`` (Delta ``txn`` action
-        analog) — the idempotent-writes marker shared by the streaming sink
-        and batch ``txn_app``/``txn_batch`` writes.  Metadata-only;
-        O(commits since that marker)."""
-        for v in sorted(self._versions(), reverse=True):
-            txn = self._raw_entry(v).get("txn")
-            if txn and txn.get("app") == app:
-                return int(txn.get("batch"))
-        return None
-
-    def latest_version(self) -> int | None:
-        vs = self._versions()
-        return vs[-1] if vs else None
-
-    def _raw_entry(self, version: int) -> dict[str, Any]:
-        """The log entry exactly as committed — a delta (``add``/``remove``).
-        Metadata-only consumers (``history``) use this to stay O(1) per
-        version."""
-        try:
-            with open(self._log_path(version)) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            vs = self._versions()
-            if vs and version < vs[0]:
-                raise VacuumedVersionError(
-                    f"version {version} of {self.path} was removed by "
-                    f"cleanup_log; earliest retained version is {vs[0]}"
-                ) from None
-            raise
-
-    def _entry(self, version: "int | str | None" = None) -> dict[str, Any]:
-        """The full snapshot at ``version``: the commit's metadata plus the
-        materialized ``files`` list, reconstructed from the nearest
-        checkpoint at-or-below plus the delta tail (O(tail), never O(all
-        history)).  A string resolves as a tag name (see :meth:`tag`), so
-        every version-taking surface (read/scan/schema/restore/clone/...)
-        accepts tags uniformly."""
-        if isinstance(version, str):
-            version = self._resolve_version(version)
-        if version is None:
-            version = self.latest_version()
-            if version is None:
-                raise FileNotFoundError(f"not a managed table: {self.path}")
-        cached = self._snap_cache.get(version)
-        if cached is not None:
-            return cached
-        raw = self._raw_entry(version)
-        ckpts = [c for c in self._checkpoint_versions() if c <= version]
-        files: dict[str, dict[str, Any]] = {}
-        start = -1
-        if ckpts:
-            start = ckpts[-1]
-            cp_path = os.path.join(
-                self.path, _LOG_DIR, f"{start:08d}.checkpoint.json"
-            )
-            with open(cp_path) as f:
-                files = {rec["path"]: rec for rec in json.load(f)["files"]}
-        for v in range(start + 1, version + 1):
-            d = raw if v == version else self._raw_entry(v)
-            for p in d.get("remove", ()):
-                files.pop(p, None)
-            for rec in d.get("add", ()):
-                files[rec["path"]] = rec
-        snap = dict(raw)
-        snap["files"] = list(files.values())
-        self._snap_cache[version] = snap
-        while len(self._snap_cache) > 4:
-            self._snap_cache.pop(next(iter(self._snap_cache)))
-        return snap
-
-    def _commit(self, entry: dict[str, Any]) -> int:
-        """Build the log entry of one operation and commit it — the only
-        code that knows the entry format.
-
-        ``entry`` holds the ``operation`` name, the fields the operation
-        changes, and ``read_version``: the snapshot version the operation
-        read (Delta's ``commitInfo.readVersion``; ``None`` when it found no
-        table).  Everything else comes from that snapshot: ``files``
-        defaults to its file list (a metadata-only commit passes none),
-        ``partition_by``, ``schema`` and the table-level metadata keys carry
-        over unless set, ``num_files`` is ``len(files)`` and
-        ``added_files`` counts the added records whose path is new.
-
-        The commit lands as ``read_version + 1`` through a put-if-absent
-        link, so a commit that landed after the operation's read raises
-        :class:`ConcurrentWriteError` instead of being silently dropped.
-        Without a ``read_version`` key the head is used.  The log entry
-        stores only the diff vs the read snapshot; a full checkpoint lands
-        every ``_CHECKPOINT_INTERVAL`` commits."""
-        os.makedirs(os.path.join(self.path, _LOG_DIR), exist_ok=True)
-        read_version = (
-            entry.pop("read_version")
-            if "read_version" in entry
-            else self.latest_version()
-        )
-        version = 0 if read_version is None else read_version + 1
-        snap = {} if read_version is None else self._entry(read_version)
-        prev = {f["path"]: f for f in snap.get("files", ())}
-        new_files: list[dict[str, Any]] = (
-            entry.pop("files") if "files" in entry else list(prev.values())
-        )
-        # layout, schema, CHECK constraints, generated-column exprs,
-        # identity high-water, ... are table-level metadata: carry them
-        # across commits unless the committing operation sets them
-        for meta_key in (
-            "partition_by",
-            "schema",
-            "constraints",
-            "generated",
-            "identity",
-            "defaults",
-            "column_mapping",
-            "cdf",
-            "row_tracking",
-            "row_id_hwm",
-            "auto_compact",
-            "optimize_write",
-            "stats",
-            "clustering_by",
-            "user_props",
-        ):
-            if meta_key not in entry and snap.get(meta_key):
-                entry[meta_key] = snap[meta_key]
-        entry.setdefault("partition_by", [])
-        new_paths = {f["path"] for f in new_files}
-        entry["add"] = [f for f in new_files if prev.get(f["path"]) != f]
-        entry["remove"] = sorted(p for p in prev if p not in new_paths)
-        entry["num_files"] = len(new_files)
-        entry["added_files"] = sum(1 for f in entry["add"] if f["path"] not in prev)
-        rt_assigned: list[dict[str, Any]] = []
-        if entry.get("row_tracking"):
-            # assign each NEW file its fresh-row-id base from the table's
-            # monotone high-water mark (one footer num_rows metadata read
-            # per added file; a re-recorded file — e.g. gaining a DV —
-            # keeps the base it already owns).  Assignments roll back on a
-            # lost commit race: the retry re-carries the WINNER's hwm and
-            # must re-assign, never reuse a stale range.
-            import pyarrow.parquet as pq
-
-            hwm = int(entry.get("row_id_hwm") or 0)
-            for rec in entry["add"]:
-                if "base_row_id" in rec:
-                    continue
-                rec["base_row_id"] = hwm
-                rt_assigned.append(rec)
-                hwm += pq.ParquetFile(
-                    os.path.join(self.path, rec["path"])
-                ).metadata.num_rows
-            entry["row_id_hwm"] = hwm
-        entry["version"] = version
-        entry["timestamp"] = time.time()
-        final = self._log_path(version)
-        tmp = final + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(entry, f)
-        # Atomic put-if-absent: link() fails with EEXIST if another writer
-        # committed this version first (an exists()-then-rename check would
-        # race — POSIX rename silently overwrites, losing a commit).
-        try:
-            os.link(tmp, final)
-        except FileExistsError:
-            for rec in rt_assigned:
-                rec.pop("base_row_id", None)
-            raise ConcurrentWriteError(
-                f"version {version} already committed"
-            ) from None
-        finally:
-            os.unlink(tmp)
-        snap = dict(entry)
-        snap["files"] = new_files
-        self._snap_cache[version] = snap
-        if version > 0 and version % _CHECKPOINT_INTERVAL == 0:
-            # Checkpoints are derived data — racing writers may both try
-            # this; first link wins, the loser's attempt is harmless.
-            cp = os.path.join(
-                self.path, _LOG_DIR, f"{version:08d}.checkpoint.json"
-            )
-            cp_tmp = cp + f".tmp-{uuid.uuid4().hex}"
-            with open(cp_tmp, "w") as f:
-                json.dump({"version": version, "files": new_files}, f)
-            try:
-                os.link(cp_tmp, cp)
-            except FileExistsError:
-                pass
-            finally:
-                os.unlink(cp_tmp)
-        return version
-
-    # ------------------------------------------------------------------ #
     # write paths
     # ------------------------------------------------------------------ #
 
@@ -957,50 +672,58 @@ class ManagedTable:
         self,
         df: DataFrame,
         partition_by: list[str] | None,
+        snap: dict[str, Any] | None,
         mapping: dict[str, str] | None = None,
     ) -> tuple[str, list[dict[str, Any]]]:
         """Write ``df`` into a fresh commit directory, return (dirname,
         file records).  Uses the stock distributed parquet writer; the
         driver only walks the output dir for metadata.
 
+        ``snap`` is the snapshot the operation read (``None``: no table).
         ``df`` arrives with LOGICAL column names; when column mapping is
-        active (``mapping`` given, or looked up from the current snapshot)
-        the frame is renamed to physical names before writing so every data
-        file in the table agrees on physical naming."""
-        latest = self.latest_version()
-        if mapping is None and latest is not None:
-            mapping = self._entry(latest).get("column_mapping")
+        active (``mapping`` given, or taken from ``snap``) the frame is
+        renamed to physical names before writing so every data file in the
+        table agrees on physical naming."""
+        if mapping is None and snap is not None:
+            mapping = snap.get("column_mapping")
         if mapping:
             df = df.select(
                 *[F.col(c).alias(mapping.get(c, c)) for c in df.columns]
             )
             if partition_by:
                 partition_by = [mapping.get(c, c) for c in partition_by]
-        commit_dir = f"c{(0 if latest is None else latest + 1):06d}-{uuid.uuid4().hex[:8]}"
+        commit_dir = f"c{(0 if snap is None else snap['version'] + 1):06d}-{uuid.uuid4().hex[:8]}"
         out = os.path.join(self.path, commit_dir)
         writer = df.write.mode("errorifexists")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(out)
+        return commit_dir, self._file_records(out)
+
+    def _file_records(self, root: str) -> list[dict[str, Any]]:
+        """Log records of the parquet files under ``root`` (a commit dir,
+        or the whole table for convert): table-relative path, size, the raw
+        Hive partition values of the file's directory, footer stats.
+        Footers are per-file metadata reads — IO-bound and independent, so
+        a thread pool reads them (a partitioned write can produce thousands
+        of files; sequential reads were the dominant cost of partitioned
+        commits)."""
         found: list[tuple[str, dict[str, str]]] = []
-        for dirpath, _dirs, names in os.walk(out):
-            partition: dict[str, str] = {}
-            for seg in os.path.relpath(dirpath, out).split(os.sep):
-                if "=" in seg:
-                    k, _, v = seg.partition("=")
-                    partition[k] = v
-            for name in names:
-                if name.endswith(".parquet"):
-                    found.append((os.path.join(dirpath, name), partition))
-        # footer stats are per-file metadata reads — IO-bound and
-        # independent, so collect them in a thread pool (a partitioned
-        # write can produce thousands of files; sequential collection was
-        # the dominant cost of partitioned commits)
+        for dirpath, _dirs, names in os.walk(root):
+            segs = os.path.relpath(dirpath, root).split(os.sep)
+            if segs[0] == _LOG_DIR:
+                continue
+            partition = dict(seg.split("=", 1) for seg in segs if "=" in seg)
+            found += [
+                (os.path.join(dirpath, n), partition)
+                for n in names
+                if n.endswith(".parquet")
+            ]
         from concurrent.futures import ThreadPoolExecutor
 
         with ThreadPoolExecutor(max_workers=min(32, max(1, len(found)))) as pool:
             metas = list(pool.map(lambda fp: _footer_meta(fp[0]), found))
-        files = [
+        return [
             {
                 "path": os.path.relpath(full, self.path),
                 "size": os.path.getsize(full),
@@ -1010,7 +733,6 @@ class ManagedTable:
             }
             for (full, partition), (st, n) in zip(found, metas)
         ]
-        return commit_dir, files
 
     def write(
         self,
@@ -1163,7 +885,7 @@ class ManagedTable:
                 # exchange to sensible sizes
                 df = df.repartition(*[F.col(c) for c in partition_by])
             _dir, files = self._write_commit_dir(
-                df, partition_by, mapping=write_map
+                df, partition_by, cur, mapping=write_map
             )
         finally:
             if ident_cache is not None:
@@ -1255,32 +977,6 @@ class ManagedTable:
     def schema(self, version: int | None = None) -> StructType:
         return StructType.fromJson(self._entry(version)["schema"])
 
-    def version_at(self, timestamp: "float | str | Any") -> int:
-        """The version a ``TIMESTAMP AS OF`` read resolves to: the latest
-        commit at or before ``timestamp`` (epoch seconds, ISO string, or
-        datetime).  Raises if the timestamp predates the first commit —
-        Delta's behavior for an out-of-range timestamp."""
-        import datetime
-
-        if isinstance(timestamp, str):
-            timestamp = datetime.datetime.fromisoformat(timestamp)
-        if isinstance(timestamp, datetime.datetime):
-            if timestamp.tzinfo is None:
-                timestamp = timestamp.replace(
-                    tzinfo=datetime.timezone.utc
-                )
-            timestamp = timestamp.timestamp()
-        best: int | None = None
-        for v in self._versions():
-            if self._raw_entry(v)["timestamp"] <= timestamp:
-                best = v
-        if best is None:
-            raise ValueError(
-                f"no commit at or before {timestamp}; the table's first "
-                "commit is newer (Delta TIMESTAMP AS OF semantics)"
-            )
-        return best
-
     def read(
         self,
         version: "int | str | None" = None,
@@ -1310,24 +1006,6 @@ class ManagedTable:
         if version is not None and version != self.latest_version():
             self._require_files_exist(entry["files"], f"time travel to version {version}")
         return self._read_files(entry, entry["files"])
-
-    def _require_files_exist(self, recs: list[dict[str, Any]], what: str) -> None:
-        """Driver-side existence probe for a historical read: a clear
-        VacuumedVersionError at plan time (not a mid-execution Spark
-        file-not-found) when ``recs`` name data or DV files removed by
-        vacuum."""
-        missing = [
-            p
-            for f in recs
-            for p in [f["path"], *_rec_dvs(f)]
-            if not os.path.exists(os.path.join(self.path, p))
-        ]
-        if missing:
-            raise VacuumedVersionError(
-                f"{what} needs {len(missing)} of {len(recs)} file(s) removed "
-                f"by vacuum (e.g. {missing[0]}). Increase vacuum retain_hours "
-                "to keep historical versions readable."
-            )
 
     def to_df(self) -> DataFrame:
         return self.read()
@@ -1849,7 +1527,7 @@ class ManagedTable:
                 merged = merged.repartition(
                     *[F.col(c) for c in partition_by]
                 )
-            _dir, files = self._write_commit_dir(merged, partition_by or None)
+            _dir, files = self._write_commit_dir(merged, partition_by or None, entry)
         finally:
             src.unpersist()
         return self._commit(
@@ -1954,20 +1632,13 @@ class ManagedTable:
         return merged
 
     def _rel_path_expr(self) -> Column:
-        """``_metadata.file_path`` (a ``file:/abs/path`` URI) rendered as the
-        table-relative path the log records — the DV join key."""
-        absolute = F.regexp_replace(
-            F.col("_metadata.file_path"), "^file:/*", "/"
-        )
+        """``_metadata.file_path`` (a percent-encoded ``file:/abs/path``
+        URI) rendered as the table-relative path the log records — the DV
+        join key."""
+        uri = F.regexp_replace(F.col("_metadata.file_path"), "^file:/*", "/")
+        # url_decode is form decoding ("+" means a space): keep a literal "+"
+        absolute = F.url_decode(F.replace(uri, F.lit("+"), F.lit("%2B")))
         return F.replace(absolute, F.lit(self.path + os.sep), F.lit(""))
-
-    def column_mapping(self, version: int | None = None) -> dict[str, str]:
-        """Logical -> physical column-name mapping (Delta column-mapping
-        analog).  Identity (empty dict) until the first :meth:`rename_column`
-        / :meth:`drop_column` enables mapping; afterwards data files keep
-        their original (physical) column names and only the mapping + logical
-        schema change — no file rewrites."""
-        return dict(self._entry(version).get("column_mapping") or {})
 
     def _phys(self, entry: dict[str, Any], col: str) -> str:
         return (entry.get("column_mapping") or {}).get(col, col)
@@ -2136,7 +1807,7 @@ class ManagedTable:
             if entry.get("cdf")
             else None
         )
-        _dir, files = self._write_commit_dir(remaining, partition_by or None)
+        _dir, files = self._write_commit_dir(remaining, partition_by or None, entry)
         return self._commit(
             {
                 "operation": "delete",
@@ -2226,7 +1897,7 @@ class ManagedTable:
                     hits.drop(_DV_FILE, _DV_POS), schema, assignments
                 )
                 _dir, new_data_files = self._write_commit_dir(
-                    updated, partition_by or None
+                    updated, partition_by or None, entry
                 )
             cdc_files = (
                 self._write_cdc(hits, updated) if entry.get("cdf") else None
@@ -2274,7 +1945,7 @@ class ManagedTable:
         df = self._read_scope(entry, dirty)
         if n_files < len(dirty):
             df = df.coalesce(n_files)
-        _dir, files = self._write_commit_dir(df, partition_by or None)
+        _dir, files = self._write_commit_dir(df, partition_by or None, entry)
         return self._commit(
             {
                 "operation": "optimize",
@@ -2408,7 +2079,7 @@ class ManagedTable:
             pre = df.filter(cond)
             cdc_files = self._write_cdc(pre, _assigned(pre, schema, assignments))
         df = _assigned(df, schema, assignments, cond)
-        _dir, files = self._write_commit_dir(df, partition_by or None)
+        _dir, files = self._write_commit_dir(df, partition_by or None, entry)
         return self._commit(
             {
                 "operation": "update",
@@ -2630,7 +2301,7 @@ class ManagedTable:
             df = df.sortWithinPartitions(*sort_by)
         else:
             df = df.coalesce(n_files) if n_files < len(live) else df
-        _dir, files = self._write_commit_dir(df, partition_by or None)
+        _dir, files = self._write_commit_dir(df, partition_by or None, entry)
         if clustering and zorder_by == clustering:
             # mark the rewrite's output as clustered under the current key
             # so the next incremental pass skips it (a later merge/DML
@@ -2647,42 +2318,6 @@ class ManagedTable:
                 **({"where": [list(f) for f in where]} if where else {}),
             }
         )
-
-    def _commit_changes(
-        self, version: int
-    ) -> "tuple[str, list[dict[str, Any]], list[dict[str, Any]], dict[str, Any]]":
-        """How commit ``version`` changed the table's rows: the one rule
-        every change reader (:meth:`changes`, :meth:`signed_changes`,
-        :meth:`change_feed` and the stream source) follows, Delta's
-        ``dataChange`` flag.  Metadata-only.
-
-        Returns ``(kind, added, removed, raw)``: the records the commit
-        added, the ``version - 1`` records of every path it removed or
-        re-recorded (a re-record replaces the old record), and the raw log
-        entry.  ``kind`` is ``"compaction"`` for an optimize/Z-order
-        rewrite (same rows, new files); ``"none"`` when nothing was added
-        or removed, or only existing files were re-recorded with unchanged
-        deletion vectors (bloom filters, row-id bases); ``"data"``
-        otherwise."""
-        raw = self._raw_entry(version)
-        added = raw.get("add") or []
-        removed = set(raw.get("remove") or ())
-        prev = (
-            {f["path"]: f for f in self._entry(version - 1)["files"]}
-            if version > 0 and (added or removed)
-            else {}
-        )
-        if raw.get("operation") in _COMPACTION_OPS:
-            kind = "compaction"
-        elif not removed and all(
-            f["path"] in prev and _rec_dvs(f) == _rec_dvs(prev[f["path"]])
-            for f in added
-        ):
-            kind = "none"
-        else:
-            kind = "data"
-        replaced = removed | {f["path"] for f in added}
-        return kind, added, [prev[p] for p in sorted(replaced) if p in prev], raw
 
     def changes(
         self,
@@ -2979,50 +2614,6 @@ class ManagedTable:
             out = out.unionByName(fdf)
         return out
 
-    def _cdf_slices(
-        self, from_version: int, to_version: int
-    ) -> "list[tuple[int, str | None, dict[str, Any]]]":
-        """The files the change feed over ``(from_version, to_version]``
-        reads, as ``(version, change_type, record)`` slices — one
-        metadata-only plan for :meth:`change_feed` and the
-        ``readChangeFeed`` stream.  Append and overwrite commits
-        synthesize ``delete`` slices from their removed records (read with
-        the deletion vectors they had) and ``insert`` slices from their
-        added ones; delete/update/merge commits contribute their
-        change-data sidecars, whose rows carry their own change type
-        (``None`` here).  Commits that change no data contribute
-        nothing; any other data-changing operation raises."""
-        out: list[tuple[int, str | None, dict[str, Any]]] = []
-        for v in range(from_version + 1, to_version + 1):
-            kind, added, removed, raw = self._commit_changes(v)
-            if kind != "data":
-                continue
-            op = raw.get("operation")
-            if op in ("append", "streaming_append", "clone", "convert", "overwrite"):
-                slices = [(v, "delete", rec) for rec in removed] + [
-                    (v, "insert", rec) for rec in added
-                ]
-            elif op in ("delete", "update", "merge"):
-                if raw.get("cdc_files") is None:
-                    raise ValueError(
-                        f"version {v} ({op}) of {self.path} carries no "
-                        "materialized change data — enable_cdf() must be on "
-                        "when DML runs; use changes() for computed CDC over "
-                        "this range"
-                    )
-                slices = [(v, None, {"path": p}) for p in raw["cdc_files"]]
-            else:
-                raise ValueError(
-                    f"the change feed does not cover operation {op!r} "
-                    f"(version {v} of {self.path}); use changes() for the "
-                    "computed diff"
-                )
-            self._require_files_exist(
-                [rec for _v, _c, rec in slices], f"change feed (v{v})"
-            )
-            out += slices
-        return out
-
     def change_feed(
         self, from_version: int, to_version: int | None = None
     ) -> DataFrame:
@@ -3267,28 +2858,6 @@ class ManagedTable:
         ``CREATE TABLE ... USING DELTA LOCATION ...`` metastore registration
         (deltalake.ipynb:1046-1060; SURVEY.md §2.1 K8)."""
         self.read(version).createOrReplaceTempView(name)
-
-    def history(self) -> list[dict[str, Any]]:
-        """Commit history, latest first (Delta ``history()``,
-        deltalake.ipynb:8760)."""
-        out = []
-        for v in reversed(self._versions()):
-            e = self._raw_entry(v)  # metadata only — no snapshot replay
-            out.append(
-                {
-                    "version": e["version"],
-                    "operation": e["operation"],
-                    "timestamp": e["timestamp"],
-                    "num_files": e.get("num_files"),
-                    "added_files": e.get("added_files"),
-                    **(
-                        {"operation_metrics": e["operation_metrics"]}
-                        if e.get("operation_metrics") is not None
-                        else {}
-                    ),
-                }
-            )
-        return out
 
     def properties(self, version: int | None = None) -> dict[str, Any]:
         """``SHOW TBLPROPERTIES`` analog: every table-level property the
@@ -3565,77 +3134,6 @@ class ManagedTable:
             }
         )
 
-    # ------------------------------------------------------------------ #
-    # snapshot tags (Iceberg-style named refs): a tag pins a version by
-    # name — reads resolve it, and BOTH retention paths honor it (vacuum
-    # keeps a tagged snapshot's data files; cleanup_log keeps the log
-    # prefix a tagged version needs).  Tags are log-side metadata files,
-    # not commits: tagging is O(1) and invisible to readers/streams.
-    # ------------------------------------------------------------------ #
-
-    _TAG_NAME = re.compile(r"^[A-Za-z0-9][A-Za-z0-9._-]{0,127}$")
-
-    def tag(self, name: str, version: int | None = None) -> int:
-        """Pin ``version`` (default: latest) under ``name``.  Fails if the
-        name exists (delete_tag first — tags don't silently move) or the
-        version was already removed by :meth:`cleanup_log`."""
-        if not self._TAG_NAME.match(name):
-            raise ValueError(
-                f"invalid tag name {name!r}: use letters/digits/._- "
-                "(max 128 chars)"
-            )
-        v = self.latest_version() if version is None else int(version)
-        if v is None:
-            raise ValueError("cannot tag an empty table")
-        if not os.path.exists(self._log_path(v)):
-            raise ValueError(
-                f"version {v} does not exist (or its log entry was "
-                "removed by cleanup_log)"
-            )
-        refs = os.path.join(self.path, _LOG_DIR, "refs")
-        os.makedirs(refs, exist_ok=True)
-        final = os.path.join(refs, f"{name}.json")
-        tmp = final + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump({"name": name, "version": v, "timestamp": time.time()}, f)
-        try:
-            os.link(tmp, final)  # put-if-absent, same protocol as commits
-        except FileExistsError:
-            raise ValueError(f"tag {name!r} already exists") from None
-        finally:
-            os.unlink(tmp)
-        return v
-
-    def tags(self) -> dict[str, int]:
-        """All tags as ``{name: version}``."""
-        refs = os.path.join(self.path, _LOG_DIR, "refs")
-        if not os.path.isdir(refs):
-            return {}
-        out: dict[str, int] = {}
-        for fn in sorted(os.listdir(refs)):
-            if fn.endswith(".json") and ".tmp-" not in fn:
-                with open(os.path.join(refs, fn)) as f:
-                    rec = json.load(f)
-                out[rec["name"]] = int(rec["version"])
-        return out
-
-    def delete_tag(self, name: str) -> None:
-        refs = os.path.join(self.path, _LOG_DIR, "refs", f"{name}.json")
-        if not os.path.exists(refs):
-            raise KeyError(f"no such tag: {name!r}")
-        os.unlink(refs)
-
-    def _resolve_version(self, version: "int | str | None") -> int | None:
-        """Resolve a tag name to its pinned version (ints/None pass through)."""
-        if isinstance(version, str):
-            t = self.tags()
-            if version not in t:
-                raise KeyError(
-                    f"no such tag: {version!r} (known: {sorted(t) or 'none'})"
-                )
-            return t[version]
-        return version
-
     def publish_from(
         self, staging: "ManagedTable", mode: str = "overwrite"
     ) -> int:
@@ -3778,12 +3276,12 @@ class ManagedTable:
         deleted, touching nothing.
         """
         cutoff = time.time() - retain_hours * 3600.0
-        latest = self.latest_version()
+        versions = self._versions()
         tagged = set(self.tags().values())
         live: set[str] = set()
-        for v in self._versions():
+        for v in versions:
             if (
-                v == latest
+                v == versions[-1]
                 or v in tagged
                 or self._raw_entry(v)["timestamp"] >= cutoff
             ):
@@ -3822,49 +3320,6 @@ class ManagedTable:
                     os.unlink(full)
                     deleted += 1
         return sorted(would_delete) if dry_run else deleted
-
-    def cleanup_log(self, retain_hours: float = 0.0) -> int:
-        """Delta's log-retention analog (``delta.logRetentionDuration``):
-        delete commit-log entries no snapshot reconstruction needs.
-
-        The deletion base is the NEWEST checkpoint whose commit is older
-        than ``retain_hours``: every entry and checkpoint strictly below it
-        goes (reconstruction of any version >= base reads the base
-        checkpoint + the tail, never the deleted prefix).  ``history()``
-        and time travel below the base stop working — a cleaned version
-        raises a descriptive error, not a file-not-found.  Returns the
-        number of log files removed.
-
-        Complements :meth:`vacuum` (data files) — together they bound the
-        table's metadata AND data footprint for long-lived tables with
-        millions of commits.  Caveat (same as Delta's txn retention): a
-        streaming sink's idempotence marker inside the deleted prefix is
-        forgotten — keep ``retain_hours`` above any stream's max downtime."""
-        cutoff = time.time() - retain_hours * 3600.0
-        base = None
-        min_tag = min(self.tags().values(), default=None)
-        for c in sorted(self._checkpoint_versions()):
-            if self._raw_entry(c)["timestamp"] < cutoff and (
-                min_tag is None or c <= min_tag
-            ):
-                # never clean past the oldest tagged version: its
-                # reconstruction needs the base checkpoint + tail
-                base = c
-        if base is None:
-            return 0
-        removed = 0
-        for v in self._versions():
-            if v < base:
-                os.unlink(self._log_path(v))
-                self._snap_cache.pop(v, None)
-                removed += 1
-        for c in self._checkpoint_versions():
-            if c < base:
-                os.unlink(
-                    os.path.join(self.path, _LOG_DIR, f"{c:08d}.checkpoint.json")
-                )
-                removed += 1
-        return removed
 
     def restore(self, version: "int | str") -> int:
         """RESTORE TABLE TO VERSION (an int, or a tag name): re-commit an old snapshot's state as

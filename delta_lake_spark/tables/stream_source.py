@@ -9,7 +9,7 @@ write-ahead log, exactly how Delta's own source works.
 
 Semantics (Delta-parity):
 
-- Commits are classified by ``ManagedTable._commit_changes``, the rule the
+- Commits are classified by ``TableLog._commit_changes``, the rule the
   batch change readers follow too: compaction (OPTIMIZE / Z-order) and
   re-records of existing files with unchanged deletion vectors (bloom
   filters, row-id bases) change no data and are silently skipped (Delta:
@@ -56,21 +56,8 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-from delta_lake_spark.tables.managed import (
-    _CDC_COL,
-    _CDC_VER,
-    _DV_FILE,
-    _DV_POS,
-    ManagedTable,
-    _rec_dvs,
-)
-
-
-def _log_table(path: str) -> ManagedTable:
-    """A ManagedTable handle used ONLY for log/metadata reads (those paths
-    never touch the SparkSession, which does not exist inside the Python
-    data-source workers)."""
-    return ManagedTable(None, path)  # type: ignore[arg-type]
+from delta_lake_spark.tables.log import ConcurrentWriteError, TableLog, _rec_dvs
+from delta_lake_spark.tables.managed import _CDC_COL, _CDC_VER, _DV_FILE, _DV_POS
 
 
 @dataclass
@@ -125,8 +112,7 @@ class ManagedTableStreamReader(DataSourceStreamReader):
                 f"maxVersionsPerTrigger must be >= 1, got {self.max_versions}"
             )
         self._last_end: int | None = None
-        mt = _log_table(self.path)
-        mapping = mt.column_mapping()
+        mapping = TableLog(self.path).column_mapping()
         if any(k != v for k, v in mapping.items()):
             raise ValueError(
                 "managed_stream does not support column-mapped tables "
@@ -140,7 +126,7 @@ class ManagedTableStreamReader(DataSourceStreamReader):
         return {"version": self.starting_version - 1}
 
     def latestOffset(self) -> dict:  # noqa: N802
-        latest = _log_table(self.path).latest_version()
+        latest = TableLog(self.path).latest_version()
         end = latest if latest is not None else -1
         # The cap's base is the last position this reader knows.  Call-order
         # facts (verified against Spark 4.1): on a FRESH start the first
@@ -170,7 +156,7 @@ class ManagedTableStreamReader(DataSourceStreamReader):
         """Added-file records of one commit IF it is stream-consumable;
         [] for commits that change no data (and for change commits under
         skipChangeCommits); raise for other change commits."""
-        kind, added, removed, _raw = _log_table(self.path)._commit_changes(
+        kind, added, removed, _raw = TableLog(self.path)._commit_changes(
             version
         )
         if kind != "data" or (removed and self.skip_change_commits):
@@ -191,7 +177,7 @@ class ManagedTableStreamReader(DataSourceStreamReader):
         # relative to real progress.
         if self._last_end is None or int(end["version"]) > self._last_end:
             self._last_end = int(end["version"])
-        mt = _log_table(self.path)
+        mt = TableLog(self.path)
         if self.read_cdf:
             return [
                 _FileSlice(rec["path"], change, v, tuple(_rec_dvs(rec)))
@@ -279,7 +265,7 @@ class ManagedTableStreamSource(DataSource):
         path = opts.get("path")
         if not path:
             raise ValueError("managed_stream source requires a path option")
-        base = _log_table(path).schema()
+        base = StructType.fromJson(TableLog(path)._entry()["schema"])
         if str(opts.get("readchangefeed", "false")).lower() == "true":
             return StructType(
                 list(base.fields)
@@ -343,7 +329,7 @@ class ManagedTableStreamWriter(DataSourceStreamWriter):
             raise ValueError("managed_stream sink requires a path option")
         self.app = opts.get("txnappid", "managed_stream")
         self.schema = schema
-        mt = _log_table(self.path)
+        mt = TableLog(self.path)
         if mt.latest_version() is None:
             raise ValueError(
                 f"managed_stream sink target {self.path!r} does not exist; "
@@ -369,7 +355,7 @@ class ManagedTableStreamWriter(DataSourceStreamWriter):
                     "which the append sink cannot enforce; stream with "
                     "foreachBatch + ManagedTable.write/merge instead"
                 )
-        table_schema = mt.schema()
+        table_schema = StructType.fromJson(entry["schema"])
         if [
             (f.name, f.dataType) for f in schema.fields
         ] != [(f.name, f.dataType) for f in table_schema.fields]:
@@ -423,15 +409,12 @@ class ManagedTableStreamWriter(DataSourceStreamWriter):
 
     # driver-side -----------------------------------------------------------
     def commit(self, messages, batchId: int) -> None:  # noqa: N802
-        from delta_lake_spark.tables.managed import (
-            ConcurrentWriteError,
-            _footer_stats,
-        )
+        from delta_lake_spark.tables.managed import _footer_stats
 
         staged = [
             f for m in messages if m is not None for f in m.files
         ]
-        mt = _log_table(self.path)
+        mt = TableLog(self.path)
         last = mt.last_txn_batch(self.app)
         if last is not None and batchId <= last:
             # replayed batch: already durably committed — drop the re-staged

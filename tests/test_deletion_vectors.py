@@ -254,3 +254,30 @@ def test_dv_antijoin_is_broadcast(spark, tmp_path, base_df):
     t.delete_where([("id", "=", 1)], mode="merge_on_read")
     plan = t.read()._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
+
+
+@pytest.mark.parametrize("p", ["a b", "a%b", "a=b", "a:b", "a+b", "é"])
+def test_mor_dml_and_change_feed_on_escaped_partition_paths(spark, tmp_path, p):
+    """Deletion vectors key rows by the table-relative path the log
+    records, while the reader sees a percent-encoded URI.  A partition
+    value that the directory name or the URI escapes (space, %, =, :) must
+    still be found: MoR delete and update take effect and the change feed
+    reports both.  "a+b" and "é" need no escaping."""
+    t = ManagedTable(spark, str(tmp_path / "t"))
+    t.write(
+        spark.createDataFrame(
+            [(1, 10, p), (2, 20, p), (3, 30, p)], "k int, v int, p string"
+        ),
+        partition_by=["p"],
+    )
+    v0 = t.enable_cdf()
+    t.delete_where([("k", "=", 1)], mode="merge_on_read")
+    assert rows(t.read()) == [(2, 20, p), (3, 30, p)]
+    t.update_where([("k", "=", 2)], {"v": F.lit(99)}, mode="merge_on_read")
+    assert rows(t.read()) == [(2, 99, p), (3, 30, p)]
+    feed = t.change_feed(v0).select("k", "v", "p", "_change_type", "_commit_version")
+    assert rows(feed) == [
+        (1, 10, p, "delete", v0 + 1),
+        (2, 20, p, "update_preimage", v0 + 2),
+        (2, 99, p, "update_postimage", v0 + 2),
+    ]

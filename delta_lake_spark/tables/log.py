@@ -14,13 +14,11 @@
   (``os.link``) into place — link is an atomic put-if-absent on POSIX
   (fails ``EEXIST``), so readers see either the old or the new version,
   never a torn one, and two writers racing the same version cannot both
-  succeed.  On losing the race, blind appends/overwrites re-prepare
-  against the winner's snapshot and retry (optimistic concurrency, Delta's
-  WriteSerializable level — appends never conflict, overwrites are
-  last-writer-wins); read-modify-write operations (merge/DML/optimize)
-  raise ``ConcurrentWriteError`` because their read snapshot may be
-  logically invalidated — the caller re-runs the operation, exactly
-  Delta's conflict behavior for non-disjoint transactions.
+  succeed.  One rule settles a lost race (Delta's optimistic concurrency,
+  WriteSerializable level): the loser rebases its add/remove diff onto the
+  winners unless one changed layout metadata, replaced a file the loser
+  replaces, or added a file the loser should have read; otherwise it
+  raises ``ConcurrentWriteError`` and the caller re-runs the operation.
 
 No pyspark here (pyarrow only lazily): :class:`TableLog`, the base of
 ``ManagedTable``, is also the handle of the streaming source and sink in
@@ -35,7 +33,7 @@ import os
 import re
 import time
 import uuid
-from typing import Any
+from typing import Any, Callable
 
 _LOG_DIR = "_log"
 _REFS_DIR = os.path.join(_LOG_DIR, "refs")
@@ -48,6 +46,34 @@ _CHECKPOINT_INTERVAL = 10
 # Snapshots one handle keeps; a committed version's content is immutable,
 # so cached snapshots never go stale.
 _SNAP_CACHE_SIZE = 4
+
+# Table metadata every data file is written and validated under: a commit
+# that lost the race rebases only if the winners left it unchanged.
+_LAYOUT_KEYS = (
+    "partition_by",
+    "schema",
+    "constraints",
+    "generated",
+    "identity",
+    "defaults",
+    "column_mapping",
+    "cdf",
+    "row_tracking",
+)
+
+# Table-level metadata a commit carries over from the snapshot it builds on
+# unless the committing operation sets it.
+_CARRIED_KEYS = _LAYOUT_KEYS + (
+    "row_id_hwm",
+    "auto_compact",
+    "optimize_write",
+    "stats",
+    "clustering_by",
+    "user_props",
+)
+
+# Link attempts of one commit that keeps losing the race (rebasing each time).
+_COMMIT_ATTEMPTS = 10
 
 # Operations that rewrite files without changing any row (Delta's
 # ``dataChange=false``); purge_deletes and auto-compact commit as optimize.
@@ -64,6 +90,16 @@ class VacuumedVersionError(FileNotFoundError):
 
 def _rec_dvs(rec: dict[str, Any]) -> list[str]:
     return list(rec.get("dvs") or ())
+
+
+def _never(rec: dict[str, Any]) -> bool:
+    """``conflicts_with`` of a blind write or a compaction: no file another
+    commit added holds a row it read."""
+    return False
+
+
+def _layout(snap: dict[str, Any]) -> dict[str, Any]:
+    return {k: snap.get(k) or None for k in _LAYOUT_KEYS}
 
 
 def _put_if_absent(final: str, doc: Any) -> bool:
@@ -213,78 +249,94 @@ class TableLog:
         over unless set, ``num_files`` is ``len(files)`` and
         ``added_files`` counts the added records whose path is new.
 
-        The commit lands as ``read_version + 1`` through a put-if-absent
-        link, so a commit that landed after the operation's read raises
-        :class:`ConcurrentWriteError` instead of being silently dropped.
-        Without a ``read_version`` key the head is used.  The log entry
-        stores only the diff vs the read snapshot; a full checkpoint lands
-        every ``_CHECKPOINT_INTERVAL`` commits."""
+        The commit lands as ``read_version + 1`` (default: the head's)
+        through a put-if-absent link.  A lost race raises
+        :class:`ConcurrentWriteError` unless the entry holds
+        ``conflicts_with`` — whether a file another commit added could hold
+        a row the operation read — and :meth:`_check_winners` lets the
+        commit rebase onto the head.  The log entry stores only the diff vs
+        the read snapshot; a full checkpoint lands every
+        ``_CHECKPOINT_INTERVAL`` commits."""
         os.makedirs(os.path.join(self.path, _LOG_DIR), exist_ok=True)
         read_version = (
             entry.pop("read_version")
             if "read_version" in entry
             else self.latest_version()
         )
-        version = 0 if read_version is None else read_version + 1
-        snap = {} if read_version is None else self._entry(read_version)
-        prev = {f["path"]: f for f in snap.get("files", ())}
+        conflicts_with = entry.pop("conflicts_with", None)
+        read_snap = {} if read_version is None else self._entry(read_version)
+        prev = {f["path"]: f for f in read_snap.get("files", ())}
         new_files: list[dict[str, Any]] = (
             entry.pop("files") if "files" in entry else list(prev.values())
         )
-        # layout, schema, CHECK constraints, generated-column exprs,
-        # identity high-water, ... are table-level metadata: carry them
-        # across commits unless the committing operation sets them
-        for meta_key in (
-            "partition_by",
-            "schema",
-            "constraints",
-            "generated",
-            "identity",
-            "defaults",
-            "column_mapping",
-            "cdf",
-            "row_tracking",
-            "row_id_hwm",
-            "auto_compact",
-            "optimize_write",
-            "stats",
-            "clustering_by",
-            "user_props",
-        ):
-            if meta_key not in entry and snap.get(meta_key):
-                entry[meta_key] = snap[meta_key]
-        entry.setdefault("partition_by", [])
         new_paths = {f["path"] for f in new_files}
-        entry["add"] = [f for f in new_files if prev.get(f["path"]) != f]
-        entry["remove"] = sorted(p for p in prev if p not in new_paths)
-        entry["num_files"] = len(new_files)
-        entry["added_files"] = sum(1 for f in entry["add"] if f["path"] not in prev)
-        rt_assigned: list[dict[str, Any]] = []
-        if entry.get("row_tracking"):
-            # assign each NEW file its fresh-row-id base from the table's
-            # monotone high-water mark (one footer num_rows metadata read
-            # per added file; a re-recorded file — e.g. gaining a DV —
-            # keeps the base it already owns).  Assignments roll back on a
-            # lost commit race: the retry re-carries the WINNER's hwm and
-            # must re-assign, never reuse a stale range.
-            import pyarrow.parquet as pq
+        add = [f for f in new_files if prev.get(f["path"]) != f]
+        remove = sorted(p for p in prev if p not in new_paths)
+        op = entry
+        snap = read_snap
+        for _attempt in range(_COMMIT_ATTEMPTS):
+            version = 0 if read_version is None else read_version + 1
+            # layout, schema, CHECK constraints, generated-column exprs,
+            # identity high-water, ... are table-level metadata: carry them
+            # across commits unless the committing operation sets them
+            entry = dict(op)
+            for meta_key in _CARRIED_KEYS:
+                if meta_key not in entry and snap.get(meta_key):
+                    entry[meta_key] = snap[meta_key]
+            entry.setdefault("partition_by", [])
+            entry["add"] = add
+            entry["remove"] = remove
+            entry["num_files"] = len(new_files)
+            entry["added_files"] = sum(1 for f in add if f["path"] not in prev)
+            rt_assigned: list[dict[str, Any]] = []
+            if entry.get("row_tracking"):
+                # assign each NEW file its fresh-row-id base from the table's
+                # monotone high-water mark (one footer num_rows metadata read
+                # per added file; a re-recorded file — e.g. gaining a DV —
+                # keeps the base it already owns).  Assignments roll back on a
+                # lost commit race: the rebase carries the WINNER's hwm and
+                # must re-assign, never reuse a stale range.
+                import pyarrow.parquet as pq
 
-            hwm = int(entry.get("row_id_hwm") or 0)
-            for rec in entry["add"]:
-                if "base_row_id" in rec:
-                    continue
-                rec["base_row_id"] = hwm
-                rt_assigned.append(rec)
-                hwm += pq.ParquetFile(
-                    os.path.join(self.path, rec["path"])
-                ).metadata.num_rows
-            entry["row_id_hwm"] = hwm
-        entry["version"] = version
-        entry["timestamp"] = time.time()
-        if not _put_if_absent(self._log_path(version), entry):
+                hwm = int(entry.get("row_id_hwm") or 0)
+                for rec in add:
+                    if "base_row_id" in rec:
+                        continue
+                    rec["base_row_id"] = hwm
+                    rt_assigned.append(rec)
+                    hwm += pq.ParquetFile(
+                        os.path.join(self.path, rec["path"])
+                    ).metadata.num_rows
+                entry["row_id_hwm"] = hwm
+            entry["version"] = version
+            entry["timestamp"] = time.time()
+            if _put_if_absent(self._log_path(version), entry):
+                break
             for rec in rt_assigned:
                 rec.pop("base_row_id", None)
-            raise ConcurrentWriteError(f"version {version} already committed")
+            if conflicts_with is None:
+                raise ConcurrentWriteError(f"version {version} already committed")
+            head = self.latest_version()
+            if head is None or head < version:
+                continue  # no visible winner: retry the same version
+            replay = self._check_winners(
+                entry, read_snap, range(version, head + 1), conflicts_with
+            )
+            if replay is not None:
+                return replay
+            # rebase: the head's files, minus this commit's removes, plus
+            # its adds and re-records
+            snap = self._entry(head)
+            replaced = set(remove) | {f["path"] for f in add}
+            new_files = [
+                f for f in snap["files"] if f["path"] not in replaced
+            ] + add
+            read_version = head
+        else:
+            raise ConcurrentWriteError(
+                f"{op['operation']} lost {_COMMIT_ATTEMPTS} commit races "
+                f"on {self.path}"
+            )
         self._cache(version, {**entry, "files": new_files})
         if version > 0 and version % _CHECKPOINT_INTERVAL == 0:
             # Checkpoints are derived data — racing writers may both try
@@ -294,6 +346,45 @@ class TableLog:
                 {"version": version, "files": new_files},
             )
         return version
+
+    def _check_winners(
+        self,
+        entry: dict[str, Any],
+        read_snap: dict[str, Any],
+        winners: range,
+        conflicts_with: Callable[[dict[str, Any]], bool],
+    ) -> int | None:
+        """Delta's optimistic-concurrency check of ``entry``, built on
+        ``read_snap``, against the commits ``winners`` that took its
+        version: the winner already holding ``entry``'s ``txn`` batch (a
+        replay, nothing to write), else None when ``entry`` may rebase onto
+        the head.  Raises :class:`ConcurrentWriteError` on a conflict."""
+        txn = entry.get("txn")
+        for v in winners if txn else ():
+            w = self._raw_entry(v).get("txn") or {}
+            if w.get("app") == txn["app"] and w["batch"] >= txn["batch"]:
+                return v
+        layout = _layout(read_snap)
+        relayout = _layout(entry) != layout
+        touched = set(entry["remove"]) | {f["path"] for f in entry["add"]}
+        for v in winners:
+            kind, added, removed, raw = self._commit_changes(v)
+            data = added if kind == "data" else []
+            if _layout(raw) != layout:
+                why = "changed the table's layout metadata"
+            elif touched & {f["path"] for f in removed}:
+                why = "removed or re-recorded a file this commit replaces"
+            elif data and relayout:
+                why = "added files under the layout this commit changes"
+            elif any(map(conflicts_with, data)):
+                why = "added a file this operation should have read"
+            else:
+                continue
+            raise ConcurrentWriteError(
+                f"{entry['operation']} conflicts with version {v} "
+                f"({raw['operation']}), which {why}"
+            )
+        return None
 
     # ------------------------------------------------------------------ #
     # history and retention

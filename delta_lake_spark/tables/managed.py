@@ -49,7 +49,7 @@ import re
 import shutil
 import time
 import uuid
-from typing import Any
+from typing import Any, Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -61,6 +61,7 @@ from delta_lake_spark.tables.log import (  # noqa: F401 (re-exported)
     ConcurrentWriteError,
     TableLog,
     VacuumedVersionError,
+    _never,
     _rec_dvs,
 )
 
@@ -740,7 +741,6 @@ class ManagedTable(TableLog):
         mode: str = "overwrite",
         partition_by: list[str] | None = None,
         merge_schema: bool = False,
-        max_retries: int = 10,
         optimize_write: "bool | None" = None,
         txn_app: str | None = None,
         txn_batch: int | None = None,
@@ -754,26 +754,17 @@ class ManagedTable(TableLog):
         types must match; old files read back with nulls for new columns).
         ``overwrite`` always replaces the schema (``overwriteSchema``).
 
-        Optimistic concurrency: every commit is validated against the
-        version its operation read, so a commit that landed in between is
-        never dropped.  Appends and overwrites don't read table DATA, so
-        when another writer lands first the commit is re-prepared against
-        the new snapshot and retried (up to ``max_retries`` times) —
-        Delta's WriteSerializable behavior, where blind appends never
-        conflict and concurrent overwrites are last-writer-wins.  A retry
-        re-validates schema/layout against the competitor's commit: a
-        concurrently-changed partition layout (or an incompatible
-        concurrent schema change) still raises, because the data files
-        were already laid out under the old assumptions.  Read-modify-write
-        operations (merge/delete/update/optimize/analyze/...) raise
-        :class:`ConcurrentWriteError` instead — their read snapshot may be
-        logically invalidated, so the caller re-runs the whole operation
-        (:meth:`merge_with_retry`, :meth:`optimize_with_retry`).
+        Optimistic concurrency: appends and overwrites read no table data,
+        so a write that loses the commit race rebases onto the winner
+        (Delta's WriteSerializable level) and a racing append's rows
+        survive.  It raises :class:`ConcurrentWriteError` when the winner
+        changed the layout metadata (schema, partitioning, constraints,
+        identity, ...) the data was written and validated under, or
+        replaced the same files (two racing overwrites).
         """
         if mode not in ("overwrite", "append"):
             raise ValueError(f"mode must be overwrite|append, got {mode!r}")
 
-        requested_pb = partition_by
         # CHECK constraints gate the incoming data before any files land
         # generated columns fill / validate and identity ids allocate
         # BEFORE the schema check (a source legitimately omits them)
@@ -791,21 +782,12 @@ class ManagedTable(TableLog):
                 # overwrite replaces the schema: generated/identity
                 # metadata survives only for columns the new data keeps
                 meta_extra = {
-                    "generated": {
+                    key: {
                         c: e
-                        for c, e in (cur.get("generated") or {}).items()
+                        for c, e in (cur.get(key) or {}).items()
                         if c in df.columns
-                    },
-                    "identity": {
-                        c: v
-                        for c, v in (cur.get("identity") or {}).items()
-                        if c in df.columns
-                    },
-                    "defaults": {
-                        c: e
-                        for c, e in (cur.get("defaults") or {}).items()
-                        if c in df.columns
-                    },
+                    }
+                    for key in ("generated", "identity", "defaults")
                 }
         if (txn_app is None) != (txn_batch is None):
             raise ValueError("txn_app and txn_batch must be passed together")
@@ -818,27 +800,20 @@ class ManagedTable(TableLog):
                 return self.latest_version()  # type: ignore[return-value]
         self._enforce_constraints(df, f"{mode} write")
 
-        def prep(read_version: int | None) -> tuple[
-            list[dict[str, Any]],
-            list[str] | None,
-            StructType,
-            dict[str, str] | None,
-        ]:
-            prev = None if read_version is None else self._entry(read_version)
+        try:
             prev_files: list[dict[str, Any]] = []
-            pb = requested_pb
             schema = df.schema
-            cur_map = None if prev is None else prev.get("column_mapping")
-            if mode == "append" and prev is not None:
-                prev_files = prev["files"]
-                existing_pb = prev.get("partition_by") or None
-                if pb is None:
-                    pb = existing_pb
-                elif pb != (existing_pb or []):
+            if mode == "append" and cur is not None:
+                prev_files = cur["files"]
+                existing_pb = cur.get("partition_by") or None
+                if partition_by is None:
+                    partition_by = existing_pb
+                elif partition_by != (existing_pb or []):
                     raise ValueError(
-                        f"append partition_by {pb} != table layout {existing_pb}"
+                        f"append partition_by {partition_by} != table layout "
+                        f"{existing_pb}"
                     )
-                existing = StructType.fromJson(prev["schema"])
+                existing = StructType.fromJson(cur["schema"])
                 if [f.name for f in df.schema.fields] != [
                     f.name for f in existing.fields
                 ] or any(
@@ -852,7 +827,8 @@ class ManagedTable(TableLog):
                             f"\n  data:  {df.schema.simpleString()}"
                         )
                     schema = _merge_schemas(existing, df.schema)
-            new_map: dict[str, str] | None = None
+            write_map: dict[str, str] | None = None
+            cur_map = None if cur is None else cur.get("column_mapping")
             if cur_map:
                 # column mapping active: carry physicals for known logicals;
                 # NEW columns get collision-free physical names (a physical
@@ -860,7 +836,7 @@ class ManagedTable(TableLog):
                 # ``__dropped_*`` tombstones — must never be reused, or old
                 # files' stale bytes would resurface under the new column)
                 used = set(cur_map.values())
-                new_map = {
+                write_map = {
                     k: v for k, v in cur_map.items() if k.startswith("__dropped_")
                 }
                 for f_ in schema.fields:
@@ -868,12 +844,8 @@ class ManagedTable(TableLog):
                     p = cur_map.get(
                         c, c if c not in used else f"col_{uuid.uuid4().hex[:8]}"
                     )
-                    new_map[c] = p
+                    write_map[c] = p
                     used.add(p)
-            return prev_files, pb, schema, new_map
-
-        try:
-            prev_files, partition_by, schema, write_map = prep(read_version)
             if optimize_write is None and cur is not None:
                 optimize_write = bool(cur.get("optimize_write"))
             if optimize_write and partition_by:
@@ -890,85 +862,26 @@ class ManagedTable(TableLog):
         finally:
             if ident_cache is not None:
                 ident_cache.unpersist()
-        attempts = 0
-        while True:
-            try:
-                version = self._commit(
-                    {
-                        "operation": mode,
-                        "read_version": read_version,
-                        **(
-                            {"txn": {"app": txn_app, "batch": int(txn_batch)}}
-                            if txn_app is not None
-                            else {}
-                        ),
-                        "files": prev_files + files,
-                        "partition_by": partition_by or [],
-                        "schema": json.loads(schema.json()),
-                        **meta_extra,
-                        **(
-                            {"column_mapping": write_map}
-                            if write_map is not None
-                            else {}
-                        ),
-                        **(
-                            {"identity": identity_update}
-                            if identity_update
-                            else {}
-                        ),
-                    }
-                )
-            except ConcurrentWriteError:
-                attempts += 1
-                if attempts > max_retries:
-                    raise
-                if identity_update is not None:
-                    # the losing writer's id range may overlap the
-                    # winner's allocation — identity makes appends
-                    # non-commutative, so the whole write must re-run
-                    raise ConcurrentWriteError(
-                        "concurrent write raced an identity-column "
-                        "allocation; re-run the write to allocate a fresh "
-                        "id range"
-                    ) from None
-                if txn_app is not None:
-                    last = self.last_txn_batch(txn_app)
-                    if last is not None and txn_batch <= last:
-                        # the RACING writer was our own replay twin: its
-                        # commit already carries this batch — drop ours
-                        return self.latest_version()  # type: ignore[return-value]
-                # re-validate against the winner's snapshot
-                read_version = self.latest_version()
-                new_prev, new_pb, schema, new_map = prep(read_version)
-                if write_map is not None or new_map is not None:
-                    stable = {
-                        k: v
-                        for k, v in (new_map or {}).items()
-                        if (write_map or {}).get(k) == v
-                    }
-                    if stable != (new_map or {}) or set(
-                        (write_map or {})
-                    ) - set(new_map or {}):
-                        # data files were written under OUR mapping; a
-                        # concurrent mapping change invalidates the layout
-                        raise ConcurrentWriteError(
-                            "column mapping changed concurrently; data "
-                            "files were written under the old mapping — "
-                            "re-run the write"
-                        ) from None
-                if (new_pb or []) != (partition_by or []):
-                    raise ConcurrentWriteError(
-                        "partition layout changed concurrently; data files "
-                        f"were written as {partition_by or []}, table is now "
-                        f"{new_pb or []}"
-                    ) from None
-                prev_files = new_prev
-            else:
-                # post-commit maintenance runs OUTSIDE the retry guard: the
-                # write is durable, and a compaction losing its own race
-                # must never re-run the append
-                self._maybe_auto_compact(files)
-                return version
+        version = self._commit(
+            {
+                "operation": mode,
+                "read_version": read_version,
+                "conflicts_with": _never,
+                **(
+                    {"txn": {"app": txn_app, "batch": int(txn_batch)}}
+                    if txn_app is not None
+                    else {}
+                ),
+                "files": prev_files + files,
+                "partition_by": partition_by or [],
+                "schema": json.loads(schema.json()),
+                **meta_extra,
+                **({"column_mapping": write_map} if write_map is not None else {}),
+                **({"identity": identity_update} if identity_update else {}),
+            }
+        )
+        self._maybe_auto_compact(files)
+        return version
 
     # ------------------------------------------------------------------ #
     # read paths
@@ -1101,6 +1014,13 @@ class ManagedTable(TableLog):
                             keep = False
             (live if keep else skipped).append(f)
         return skipped, live
+
+    def _may_match(
+        self, entry: dict[str, Any], filters: list[tuple[str, str, Any]]
+    ) -> Callable[[dict[str, Any]], bool]:
+        """``conflicts_with`` of a delete or update: whether a file could
+        hold a row matching ``filters`` (the :meth:`_split_files` test)."""
+        return lambda f: bool(self._split_files({**entry, "files": [f]}, filters)[1])
 
     def pruned_file_count(
         self, filters: list[tuple[str, str, Any]], version: int | None = None
@@ -1260,11 +1180,13 @@ class ManagedTable(TableLog):
         bysource = when_not_matched_by_source != "ignore"
         if (txn_app is None) != (txn_batch is None):
             raise ValueError("txn_app and txn_batch must be passed together")
+        # the snapshot is read BEFORE the txn check: a twin committing this
+        # batch after the check is then a winner _commit drops us for
+        entry = self._entry()
         if txn_app is not None:
             last = self.last_txn_batch(txn_app)
             if last is not None and txn_batch <= last:
                 return self.latest_version()  # type: ignore[return-value]
-        entry = self._entry()
         partition_by: list[str] = entry.get("partition_by") or []
         # a by-source clause touches target rows with NO source match, so
         # no file can be proven irrelevant by the source's keys — the merge
@@ -1307,8 +1229,12 @@ class ManagedTable(TableLog):
         # whole-row-updated data, the Delta write-path scope)
         self._enforce_constraints(src, "merge source")
         try:
+            # hit(f): whether file f could hold a row this merge matches —
+            # the split into carried-over and rewritten files, and the
+            # conflicts_with test of the commit
             if bysource:
-                keep_files, affected = [], list(entry["files"])
+                def hit(f: dict[str, Any]) -> bool:
+                    return True
             elif prune:
                 # driver-side partition pruning over log metadata (small),
                 # never over data rows; both sides normalized to the same
@@ -1333,16 +1259,14 @@ class ManagedTable(TableLog):
                     tuple(_hive_value_str(r[c]) for c in partition_by)
                     for r in part_rows
                 }
-                keep_files, affected = [], []
-                for f in entry["files"]:
-                    if all(c in f["partition"] for c in partition_by):
-                        part = tuple(
-                            _dir_value_str(f["partition"][c]) for c in partition_by
-                        )
-                        hit = part in touched
-                    else:  # un-layouted file (pre-partitioning commit): keep
-                        hit = True
-                    (affected if hit else keep_files).append(f)
+
+                def hit(f: dict[str, Any]) -> bool:
+                    if not all(c in f["partition"] for c in partition_by):
+                        return True  # un-layouted file (pre-partitioning commit)
+                    return (
+                        tuple(_dir_value_str(f["partition"][c]) for c in partition_by)
+                        in touched
+                    )
             else:  # not bysource, not partition-prunable
                 # file-level stats pruning (Delta data-skipping applied to
                 # MERGE): a file whose per-key min/max range is disjoint from
@@ -1360,9 +1284,12 @@ class ManagedTable(TableLog):
                     if lo is not None:
                         pk = self._phys(entry, k)
                         filters += [(pk, ">=", lo), (pk, "<=", hi)]
-                keep_files, affected = [], []
-                for f in entry["files"]:
-                    (affected if not filters or _file_may_match(f, filters) else keep_files).append(f)
+
+                def hit(f: dict[str, Any]) -> bool:
+                    return not filters or _file_may_match(f, filters)
+            keep_files, affected = [], []
+            for f in entry["files"]:
+                (affected if hit(f) else keep_files).append(f)
             target = self._read_scope(read_entry, affected)
 
             # WHEN NOT MATCHED BY SOURCE (Delta 2.3+ clause): transform the
@@ -1534,6 +1461,7 @@ class ManagedTable(TableLog):
             {
                 "operation": "merge",
                 "read_version": entry["version"],
+                "conflicts_with": hit,
                 **(
                     {"txn": {"app": txn_app, "batch": int(txn_batch)}}
                     if txn_app is not None
@@ -1812,6 +1740,7 @@ class ManagedTable(TableLog):
             {
                 "operation": "delete",
                 "read_version": entry["version"],
+                "conflicts_with": self._may_match(entry, filters),
                 **({"cdc_files": cdc_files} if cdc_files is not None else {}),
                 "files": keep_files + files,
                 "skipped_files": len(keep_files),
@@ -1916,6 +1845,7 @@ class ManagedTable(TableLog):
                 {
                     "operation": "delete" if assignments is None else "update",
                     "read_version": entry["version"],
+                    "conflicts_with": self._may_match(entry, filters),
                     **({"cdc_files": cdc_files} if cdc_files is not None else {}),
                     "mode": "merge_on_read",
                     "dv_added": dv_paths,
@@ -1950,6 +1880,7 @@ class ManagedTable(TableLog):
             {
                 "operation": "optimize",
                 "read_version": entry["version"],
+                "conflicts_with": _never,
                 "purged_dv_rows": sum(f.get("dv_rows", 0) for f in dirty),
                 "files": clean + files,
             }
@@ -2084,6 +2015,7 @@ class ManagedTable(TableLog):
             {
                 "operation": "update",
                 "read_version": entry["version"],
+                "conflicts_with": self._may_match(entry, filters),
                 **({"cdc_files": cdc_files} if cdc_files is not None else {}),
                 "files": keep_files + files,
                 "skipped_files": len(keep_files),
@@ -2312,6 +2244,7 @@ class ManagedTable(TableLog):
             {
                 "operation": "zorder" if (sort_by or zorder_by) else "optimize",
                 "read_version": entry["version"],
+                "conflicts_with": _never,
                 "files": untouched + files,
                 "sort_by": sort_by or [],
                 "zorder_by": zorder_by or [],
@@ -2820,8 +2753,9 @@ class ManagedTable(TableLog):
     def _maybe_auto_compact(self, new_files: list[dict[str, Any]]) -> None:
         """Post-write hook: partition-scoped compaction of every touched
         partition that crossed the small-file threshold.  Best-effort — a
-        lost compaction race is silently skipped (the data write itself is
-        already durable), exactly Delta's auto-compact contract."""
+        concurrent append is rebased over, a true conflict is silently
+        skipped (the data write itself is already durable), exactly
+        Delta's auto-compact contract."""
         entry = self._entry()
         cfg = entry.get("auto_compact")
         if not cfg:
@@ -3223,30 +3157,23 @@ class ManagedTable(TableLog):
             for rec in new_recs:
                 if _rec_dvs(rec):
                     rec["dvs"] = [dv_map[d] for d in _rec_dvs(rec)]
-        # Optimistic retry on a lost version race: the hard links are
-        # already durable and version-agnostic; only the files list (for
-        # append mode) must be recomputed against the winner's snapshot.
-        for _attempt in range(10):
-            cur = self._entry()
-            try:
-                return self._commit(
-                    {
-                        "operation": mode,
-                        "read_version": cur["version"],
-                        "files": (
-                            new_recs
-                            if mode == "overwrite"
-                            else list(cur["files"]) + new_recs
-                        ),
-                        "partition_by": s_entry.get("partition_by") or [],
-                        "schema": s_entry["schema"],
-                        "published_from": staging.path,
-                    }
-                )
-            except ConcurrentWriteError:
-                continue
-        raise ConcurrentWriteError(
-            f"publish_from lost 10 commit races on {self.path}; giving up"
+        # committed against the snapshot validated above (schema,
+        # constraints): a racing metadata change then raises, a racing
+        # append is kept
+        return self._commit(
+            {
+                "operation": mode,
+                "read_version": t_entry["version"],
+                "conflicts_with": _never,
+                "files": (
+                    new_recs
+                    if mode == "overwrite"
+                    else list(t_entry["files"]) + new_recs
+                ),
+                "partition_by": s_entry.get("partition_by") or [],
+                "schema": s_entry["schema"],
+                "published_from": staging.path,
+            }
         )
 
     def describe_extended(self) -> dict[str, Any]:
@@ -3301,13 +3228,14 @@ class ManagedTable(TableLog):
         # and commits within seconds).
         staging_cutoff = time.time() - max(retain_hours, 1.0) * 3600.0
         for dirpath, _dirs, names in os.walk(self.path):
-            if _LOG_DIR in dirpath:
+            top = os.path.relpath(dirpath, self.path).split(os.sep)[0]
+            if top == _LOG_DIR:
                 continue
             # publish_from links files into a `-pub-` commit dir BEFORE its
             # atomic log commit — same momentarily-unreferenced window as
             # streaming staging, so it gets the same mtime grace (the links
             # carry the staged write's recent mtime)
-            in_staging = "_streaming_staging" in dirpath or "-pub-" in dirpath
+            in_staging = top == "_streaming_staging" or "-pub-" in top
             for name in names:
                 full = os.path.join(dirpath, name)
                 rel = os.path.relpath(full, self.path)
@@ -3806,18 +3734,17 @@ class ManagedTable(TableLog):
         max_retries: int = 3,
         **merge_kwargs: Any,
     ) -> int:
-        """Merge with optimistic-concurrency retry.  A merge commits
-        against the version it read, so any commit that landed while it ran
-        raises :class:`ConcurrentWriteError`; this re-runs the WHOLE merge
-        against the new snapshot, up to ``max_retries`` times, and ends
-        with both writers' changes.
+        """Merge with optimistic-concurrency retry.  A commit that landed
+        while the merge ran and touched none of its files or keys is
+        rebased over; a true conflict raises :class:`ConcurrentWriteError`
+        and this re-runs the WHOLE merge against the new snapshot, up to
+        ``max_retries`` times, ending with both writers' changes.
 
-        A full re-run — not a commit retry — because a competing commit
-        logically invalidates the merge's read snapshot (its anti-join and
+        A full re-run — not a commit retry — because the conflicting
+        commit invalidates the merge's read snapshot (its anti-join and
         pruning were computed against the old file list).  This is Delta's
-        documented conflict-resolution recipe for concurrent MERGE; blind
-        appends/overwrites already retry inside :meth:`write`.  Persisting
-        an expensive source before calling keeps retries cheap.
+        documented conflict-resolution recipe for concurrent MERGE.
+        Persisting an expensive source before calling keeps retries cheap.
         """
         attempts = 0
         while True:
@@ -3832,13 +3759,12 @@ class ManagedTable(TableLog):
         self, max_retries: int = 3, **optimize_kwargs: Any
     ) -> int:
         """OPTIMIZE with optimistic-concurrency retry — the maintenance
-        twin of :meth:`merge_with_retry`.  OPTIMIZE commits against the
-        version it read, so a writer's commit that landed during the pass
-        raises :class:`ConcurrentWriteError` instead of being dropped; the
-        pass then RE-PLANS against the new snapshot (its candidate file
-        list is stale) and keeps the writer's files.  With declared
-        clustering the re-run is incremental, so a lost race costs one
-        re-scan of the still-unclustered files, not a table rewrite.
+        twin of :meth:`merge_with_retry`.  An append that landed during the
+        pass is rebased over; a writer that rewrote or deleted from one of
+        its input files raises :class:`ConcurrentWriteError`, and the pass
+        RE-PLANS against the new snapshot and keeps the writer's changes.
+        With declared clustering the re-run is incremental, so a lost race
+        costs one re-scan of the still-unclustered files, not a rewrite.
         Safe to drive from a scheduler loop alongside live writers
         (auto-compact's silent-skip behavior is the fire-and-forget
         variant; this one guarantees the pass eventually lands)."""

@@ -56,7 +56,7 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-from delta_lake_spark.tables.log import ConcurrentWriteError, TableLog, _rec_dvs
+from delta_lake_spark.tables.log import TableLog, _never, _rec_dvs
 from delta_lake_spark.tables.managed import _CDC_COL, _CDC_VER, _DV_FILE, _DV_POS
 
 
@@ -415,6 +415,9 @@ class ManagedTableStreamWriter(DataSourceStreamWriter):
             f for m in messages if m is not None for f in m.files
         ]
         mt = TableLog(self.path)
+        # the snapshot is read BEFORE the txn check: a replay twin that
+        # commits this batch after the check is a winner _commit drops us for
+        entry = mt._entry()
         last = mt.last_txn_batch(self.app)
         if last is not None and batchId <= last:
             # replayed batch: already durably committed — drop the re-staged
@@ -422,6 +425,18 @@ class ManagedTableStreamWriter(DataSourceStreamWriter):
             self._drop_staged(staged)
             return
         pcols = self.partition_by
+        if (entry.get("partition_by") or []) != pcols:
+            # set_partitioning ran mid-stream: the staged shards follow
+            # the OLD Hive layout and committing would also re-record
+            # the stale spec as current, silently reverting the
+            # evolution for every later writer.  Fail the batch; a
+            # restart re-initializes the sink with the new spec.
+            raise ValueError(
+                "managed_stream sink: target partitioning changed "
+                f"mid-stream (sink initialized with {pcols}, table now "
+                f"{entry.get('partition_by') or []}); restart the "
+                "stream so the sink re-initializes with the new spec"
+            )
         records = [
             {
                 "path": rel,
@@ -439,34 +454,14 @@ class ManagedTableStreamWriter(DataSourceStreamWriter):
             for rel, rows in staged
             if rows
         ]
-        for _attempt in range(10):
-            entry = mt._entry()
-            if (entry.get("partition_by") or []) != pcols:
-                # set_partitioning ran mid-stream: the staged shards follow
-                # the OLD Hive layout and committing would also re-record
-                # the stale spec as current, silently reverting the
-                # evolution for every later writer.  Fail the batch; a
-                # restart re-initializes the sink with the new spec.
-                raise ValueError(
-                    "managed_stream sink: target partitioning changed "
-                    f"mid-stream (sink initialized with {pcols}, table now "
-                    f"{entry.get('partition_by') or []}); restart the "
-                    "stream so the sink re-initializes with the new spec"
-                )
-            try:
-                mt._commit(
-                    {
-                        "operation": "streaming_append",
-                        "read_version": entry["version"],
-                        "files": entry["files"] + records,
-                        "txn": {"app": self.app, "batch": int(batchId)},
-                    }
-                )
-                return
-            except ConcurrentWriteError:
-                continue
-        raise ConcurrentWriteError(
-            f"streaming commit of batch {batchId} lost 10 races; giving up"
+        mt._commit(
+            {
+                "operation": "streaming_append",
+                "read_version": entry["version"],
+                "conflicts_with": _never,
+                "files": entry["files"] + records,
+                "txn": {"app": self.app, "batch": int(batchId)},
+            }
         )
 
     def abort(self, messages, batchId: int) -> None:  # noqa: N802

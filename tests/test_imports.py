@@ -41,7 +41,8 @@ def test_every_module_imports():
 
 
 # Loads tables/log.py by file path with pyspark blocked, then commits and
-# replays a 12-version log (one checkpoint) through a second, cold handle.
+# replays a 12-version log (one checkpoint) through a second, cold handle,
+# and loses one commit race and rebases.
 _SPARK_FREE_LOG = """
 import importlib.util, sys
 sys.modules["pyspark"] = None
@@ -57,6 +58,13 @@ for v in range(12):
 snap = log.TableLog(sys.argv[2])._entry()
 assert (snap["version"], len(snap["files"])) == (11, 12), snap
 assert t._checkpoint_versions() == [10]
+winner = {"path": "c000012-w/part.parquet", "size": 1, "partition": {}}
+log.TableLog(sys.argv[2])._commit({"operation": "append", "read_version": 11,
+                                   "files": files + [winner]})
+v = t._commit({"operation": "append", "read_version": 11,
+               "files": files + [{**winner, "path": "c000012-x/part.parquet"}],
+               "conflicts_with": log._never})
+assert (v, len(log.TableLog(sys.argv[2])._entry()["files"])) == (13, 14)
 """
 
 

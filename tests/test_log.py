@@ -1,6 +1,7 @@
 """The commit log (``delta_lake_spark/tables/log.py``) without a JVM:
-checkpoint replay, put-if-absent commits and tags, the change classifier,
-the change-feed planner and the snapshot cache bound.  No SparkSession is
+checkpoint replay, put-if-absent commits and tags, the conflict rule of a
+lost commit race, the change classifier, the change-feed planner, the
+snapshot cache bound and vacuum's directory tests.  No SparkSession is
 started; the few data files are written with pyarrow."""
 
 from __future__ import annotations
@@ -11,11 +12,13 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from delta_lake_spark.tables import log
 from delta_lake_spark.tables.log import (
     _CHECKPOINT_INTERVAL,
     _SNAP_CACHE_SIZE,
     ConcurrentWriteError,
     TableLog,
+    _never,
 )
 
 SCHEMA = {
@@ -159,3 +162,140 @@ def test_snapshot_cache_stays_bounded_while_committing(tmp_path):
         _commit(t, v - 1 if v else None, files, operation="set_property")
     assert len(t._snap_cache) <= _SNAP_CACHE_SIZE == 4
     assert len(t._entry()["files"]) == 50
+
+
+def _paths(t: TableLog, version=None) -> list:
+    return [f["path"] for f in TableLog(t.path)._entry(version)["files"]]
+
+
+def _abc(t: TableLog) -> tuple:
+    """Three data-file records, and the table at v0 holding the first."""
+    a, b, c = (_rec(f"c00000{i}-x/{n}.parquet") for i, n in enumerate("abc"))
+    _commit(t, None, [a])
+    return a, b, c
+
+
+def test_lost_append_rebases_over_a_winning_append(tmp_path):
+    t = TableLog(str(tmp_path / "t"))
+    a, b, c = _abc(t)
+    assert _commit(TableLog(t.path), 0, [a, b]) == 1  # the winner
+    assert _commit(t, 0, [a, c], conflicts_with=_never) == 2
+    assert _paths(t) == [a["path"], b["path"], c["path"]]
+    raw = t._raw_entry(2)
+    assert (raw["add"], raw["remove"], raw["num_files"]) == ([c], [], 3)
+    assert _tmp_files(t) == []
+
+
+def test_compaction_rebases_over_an_append(tmp_path):
+    t = TableLog(str(tmp_path / "t"))
+    a, b, c = _abc(t)
+    _commit(t, 0, [a, b])
+    _commit(TableLog(t.path), 1, [a, b, _rec("c000002-x/w.parquet")])
+    assert _commit(t, 1, [c], operation="optimize", conflicts_with=_never) == 3
+    assert _paths(t) == ["c000002-x/w.parquet", c["path"]]
+
+
+@pytest.mark.parametrize("winner", ["remove", "deletion_vector", "overwrite"])
+def test_lost_commit_raises_when_a_winner_replaced_its_file(tmp_path, winner):
+    t = TableLog(str(tmp_path / "t"))
+    a, b, c = _abc(t)
+    _commit(TableLog(t.path), 0, {
+        "remove": [],
+        "deletion_vector": [{**a, "dvs": ["c000001-dv-x/dv.parquet"]}],
+        "overwrite": [b],
+    }[winner], operation="delete" if winner != "overwrite" else "overwrite")
+    with pytest.raises(ConcurrentWriteError, match="replaces"):
+        _commit(t, 0, [c], operation="overwrite", conflicts_with=_never)
+    assert t.latest_version() == 1 and _tmp_files(t) == []
+
+
+@pytest.mark.parametrize(
+    "change",
+    [
+        {"schema": {**SCHEMA, "fields": SCHEMA["fields"] * 2}},
+        {"constraints": {"small": "k < 5"}},
+    ],
+)
+def test_lost_commit_raises_on_a_layout_metadata_change(tmp_path, change):
+    t = TableLog(str(tmp_path / "t"))
+    a, b, _c = _abc(t)
+    _commit(TableLog(t.path), 0, [a], operation="alter", **change)
+    with pytest.raises(ConcurrentWriteError, match="layout metadata"):
+        _commit(t, 0, [a, b], conflicts_with=_never)
+    assert t.latest_version() == 1
+
+
+@pytest.mark.parametrize("read_p", ["1", "2"])
+def test_lost_commit_raises_when_a_winner_added_a_file_it_should_read(
+    tmp_path, read_p
+):
+    """A merge that read partition ``read_p`` against a winner that appended
+    into partition 1: a conflict only when the merge read partition 1."""
+    t = TableLog(str(tmp_path / "t"))
+    a, _b, c = _abc(t)
+    _commit(TableLog(t.path), 0, [a, _rec("c000001-x/w.parquet", partition={"p": "1"})])
+
+    def merge():
+        return _commit(
+            t,
+            0,
+            [c],
+            operation="merge",
+            conflicts_with=lambda rec: rec["partition"].get("p") == read_p,
+        )
+
+    if read_p == "1":
+        with pytest.raises(ConcurrentWriteError, match="should have read"):
+            merge()
+    else:
+        assert merge() == 2
+        assert _paths(t) == ["c000001-x/w.parquet", c["path"]]
+
+
+def test_rebase_reassigns_row_ids_from_the_winners_high_water_mark(tmp_path):
+    t = TableLog(str(tmp_path / "t"))
+    a, b, c = (_parquet(t, f"c00000{i}-x/{n}.parquet") for i, n in enumerate("abc"))
+    _commit(t, None, [a], row_tracking=True)  # 2 rows each
+    _commit(TableLog(t.path), 0, [a, b])
+    assert _commit(t, 0, [a, c], conflicts_with=_never) == 2
+    snap = TableLog(t.path)._entry()
+    assert [f["base_row_id"] for f in snap["files"]] == [0, 2, 4]
+    assert snap["row_id_hwm"] == 6
+
+
+def test_lost_commit_of_a_committed_txn_batch_is_dropped(tmp_path):
+    t = TableLog(str(tmp_path / "t"))
+    a, b, c = _abc(t)
+    _commit(TableLog(t.path), 0, [a, b], txn={"app": "s", "batch": 1})
+    replay = {"txn": {"app": "s", "batch": 1}, "conflicts_with": _never}
+    assert _commit(t, 0, [a, c], **replay) == 1
+    assert t.latest_version() == 1 and _paths(t) == [a["path"], b["path"]]
+    # an older batch of the app is no replay: the next batch rebases
+    _commit(TableLog(t.path), 1, [a, b, c], txn={"app": "s", "batch": 2})
+    d = _rec("c000003-x/d.parquet")
+    later = {"txn": {"app": "s", "batch": 3}, "conflicts_with": _never}
+    assert _commit(t, 1, [a, b, d], **later) == 3
+    assert _tmp_files(t) == []
+
+
+def test_commit_gives_up_after_the_attempt_limit(tmp_path, monkeypatch):
+    t = TableLog(str(tmp_path / "t"))
+    a, b, _c = _abc(t)
+    links = []
+    monkeypatch.setattr(log, "_put_if_absent", lambda final, doc: links.append(final))
+    with pytest.raises(ConcurrentWriteError, match="lost 10 commit races"):
+        _commit(t, 0, [a, b], conflicts_with=_never)
+    assert len(links) == 10 and set(links) == {t._log_path(1)}  # no winner seen
+
+
+@pytest.mark.parametrize("parent", ["plain", "event_logs", "a-pub-b"])
+def test_vacuum_tests_directory_names_relative_to_the_table(tmp_path, parent):
+    """Only the table's own ``_log`` and staging directories are special,
+    whatever the directories above the table are called."""
+    from delta_lake_spark.tables.managed import ManagedTable
+
+    t = ManagedTable(None, str(tmp_path / parent / "t"))
+    a = _parquet(t, "c000000-a/p.parquet")
+    _commit(t, None, [a])
+    _commit(t, 0, [])
+    assert t.vacuum(dry_run=True) == ["c000000-a/p.parquet"]

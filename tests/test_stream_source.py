@@ -190,6 +190,40 @@ def test_sink_replayed_batch_is_idempotent(spark, tmp_path):
     assert sorted(r["k"] for r in dest.read().collect()) == [0, 1, 2, 3]
 
 
+def test_sink_drops_a_batch_its_replay_twin_commits_first(
+    spark, tmp_path, monkeypatch
+):
+    """Two writers stage the same batch; the twin commits it while the
+    sink is between its txn check and its commit.  The sink's commit must
+    then be dropped as a replay, not land the batch twice."""
+    from pyspark.sql import Row
+
+    from delta_lake_spark.tables import managed
+    from delta_lake_spark.tables.stream_source import ManagedTableStreamWriter
+
+    p = str(tmp_path / "t")
+    mt = ManagedTable(spark, p)
+    mt.write(spark.createDataFrame([(0, "z")], "k long, s string"))
+    w, twin = (ManagedTableStreamWriter(mt.schema(), {"path": p}) for _ in "ab")
+    msg = w.write(iter([Row(k=1, s="a")]))
+    twin_msg = twin.write(iter([Row(k=1, s="a")]))
+
+    real_stats = managed._footer_stats
+    armed = [True]
+
+    def stats_then_twin(path):
+        if armed:
+            armed.pop()
+            twin.commit([twin_msg], batchId=1)
+        return real_stats(path)
+
+    monkeypatch.setattr(managed, "_footer_stats", stats_then_twin)
+    w.commit([msg], batchId=1)
+    assert not armed  # the twin really committed inside the window
+    assert sorted(r["k"] for r in mt.read().collect()) == [0, 1]
+    assert mt.latest_version() == 1
+
+
 def test_sink_guards(spark, tmp_path):
     from delta_lake_spark.tables.stream_source import ManagedTableStreamWriter
 

@@ -667,9 +667,8 @@ def test_table_catalog_persists_across_sessions(spark, tmp_path, base_df):
 
 def test_blind_append_retries_past_conflict(spark, tmp_path, base_df):
     """Optimistic concurrency: a blind append that loses the version race
-    re-prepares against the winner's snapshot and retries (Delta
-    WriteSerializable — appends never conflict), keeping BOTH writers'
-    rows."""
+    rebases onto the winner's snapshot (Delta WriteSerializable — appends
+    never conflict), keeping BOTH writers' rows."""
     from delta_lake_spark.tables import ConcurrentWriteError
 
     t = ManagedTable(spark, str(tmp_path / "oc"))
@@ -687,7 +686,6 @@ def test_blind_append_retries_past_conflict(spark, tmp_path, base_df):
                 spark.createDataFrame([Row(id=500, grp="z", val=0.5)]),
                 mode="append",
             )
-            raise ConcurrentWriteError("simulated version race")
         return orig(entry)
 
     t._commit = racing_commit
@@ -706,11 +704,10 @@ def test_blind_append_retries_past_conflict(spark, tmp_path, base_df):
         if not raced["done"]:
             raced["done"] = True
             t2.write(t2.read(), mode="overwrite", partition_by=["grp"])
-            raise ConcurrentWriteError("simulated version race")
         return orig(entry)
 
     t._commit = relayout_commit
-    with pytest.raises(ConcurrentWriteError, match="partition layout"):
+    with pytest.raises(ConcurrentWriteError, match="layout metadata"):
         t.write(
             spark.createDataFrame([Row(id=700, grp="z", val=0.7)]), mode="append"
         )
@@ -894,10 +891,10 @@ def test_commit_against_read_version_never_drops_a_racing_append(
 ):
     """Every operation commits against the snapshot version it read: a
     5-row append that lands while the operation runs is never silently
-    dropped.  A blind append retries and keeps both writers' rows; the
-    read-modify-write operations raise ConcurrentWriteError, and
-    merge_with_retry / optimize_with_retry re-run to keep both writers'
-    changes."""
+    dropped.  The append touches none of the files or keys merge,
+    delete_where, optimize and a blind append read, so each rebases over
+    it: it commits once, after the racer, with both writers' changes.
+    analyze declares no conflict test, so it raises ConcurrentWriteError."""
     from delta_lake_spark import quality
     from delta_lake_spark.tables import ConcurrentWriteError
 
@@ -938,19 +935,32 @@ def test_commit_against_read_version_never_drops_a_racing_append(
             spark.createDataFrame([Row(id=600, grp="z", val=0.6)]), mode="append"
         ),
     }[op]
-    if op == "write_append":
-        run()  # retried past the racer
-    else:
+    base_files = {f["path"] for f in t._entry(0)["files"]}
+    if op == "analyze":
         with pytest.raises(ConcurrentWriteError):
             run()
+    else:
+        assert run() == 2  # rebased past the racer's v1
+        own = {"delete_where": "delete", "optimize": "zorder"}.get(op, op)
+        assert [h["operation"] for h in t.history()] == [
+            own.replace("write_", ""), "append", "overwrite"
+        ]
 
     got = {r.id: r.val for r in t.read().collect()}
     assert set(range(1000, 1005)) <= set(got)  # the racer's rows survive
     if op == "write_append":
         assert set(got) == set(range(10)) | set(range(1000, 1005)) | {600}
+    if op == "merge":
+        assert got[0] == -1.0
+    if op == "delete_where":
+        assert set(got) == set(range(10)) - {3} | set(range(1000, 1005))
+    if op == "optimize":  # the base files were rewritten, the racer's kept
+        paths = {f["path"] for f in t._entry()["files"]}
+        assert not paths & base_files
+        assert paths & {f["path"] for f in t._entry(1)["files"]} - base_files
 
     if op in ("merge", "optimize"):
-        race["armed"] = 1  # the first re-run races a second append
+        race["armed"] = 1  # a second racing append is rebased over too
         if op == "merge":
             t.merge_with_retry(upsert, ["id"])
             assert t.history()[0]["operation"] == "merge"
@@ -961,6 +971,98 @@ def test_commit_against_read_version_never_drops_a_racing_append(
         assert set(got) == set(range(10)) | set(range(1000, 1010))
         assert got[0] == (-1.0 if op == "merge" else 0.0)
         assert t.read().count() == 20
+
+
+def _race_after_commit_dir(monkeypatch, t, racer):
+    """Run ``racer()`` once, right after ``t``'s operation writes its data."""
+    real = t._write_commit_dir
+    armed = [True]
+
+    def wrapped(*args, **kwargs):
+        out = real(*args, **kwargs)
+        if armed:
+            armed.pop()
+            racer()
+        return out
+
+    monkeypatch.setattr(t, "_write_commit_dir", wrapped)
+
+
+@pytest.mark.parametrize("racer", ["delete", "dv", "append_key", "add_column"])
+def test_merge_raises_on_a_true_conflict(
+    spark, tmp_path, base_df, monkeypatch, racer
+):
+    """A commit that lands while a merge runs and overlaps what the merge
+    read still raises: it rewrote or deletion-vectored a file the merge
+    rewrites, appended a key the merge source holds, or changed the
+    schema.  The racer's commit stays the head."""
+    from delta_lake_spark.tables import ConcurrentWriteError
+
+    t = ManagedTable(spark, str(tmp_path / "mc"))
+    t.write(base_df)
+    other = ManagedTable(spark, t.path)
+    _race_after_commit_dir(monkeypatch, t, {
+        "delete": lambda: other.delete_where([("id", "=", 1)]),
+        "dv": lambda: other.delete_where([("id", "=", 1)], mode="merge_on_read"),
+        "append_key": lambda: other.write(
+            spark.createDataFrame([Row(id=5, grp="r", val=0.0)]), mode="append"
+        ),
+        "add_column": lambda: other.add_column("extra", "int"),
+    }[racer])
+    src = spark.createDataFrame(
+        [Row(id=0, grp="a", val=-1.0), Row(id=5, grp="b", val=-5.0)]
+    )
+    with pytest.raises(ConcurrentWriteError, match="conflicts with version 1"):
+        t.merge(src, ["id"])
+    assert t.latest_version() == 1
+    ids = [r.id for r in t.read().collect()]
+    if racer in ("delete", "dv"):
+        assert sorted(ids) == [0, *range(2, 10)]
+    elif racer == "append_key":
+        assert sorted(ids) == [*range(6), *range(5, 10)]
+    else:
+        assert t.schema().names == ["id", "grp", "val", "extra"]
+
+
+@pytest.mark.parametrize(
+    "mode,racer",
+    [
+        ("append", "constraint"),
+        ("overwrite", "constraint"),
+        ("overwrite", "overwrite"),
+        ("overwrite", "append"),
+    ],
+)
+def test_write_racing_a_commit(spark, tmp_path, base_df, monkeypatch, mode, racer):
+    """A write commits against the snapshot it validated and laid its data
+    out under.  A racer that adds a CHECK constraint the data violates, or
+    overwrites the same files, makes it raise; a racing append is kept
+    under an overwrite (Delta's WriteSerializable level)."""
+    from delta_lake_spark.tables import ConcurrentWriteError
+
+    t = ManagedTable(spark, str(tmp_path / "wc"))
+    t.write(base_df)
+    other = ManagedTable(spark, t.path)
+
+    def one_row(i):
+        return spark.createDataFrame([Row(id=i, grp="z", val=0.0)])
+
+    _race_after_commit_dir(monkeypatch, t, {
+        "constraint": lambda: other.add_constraint("small", "id < 50"),
+        "overwrite": lambda: other.write(one_row(200)),
+        "append": lambda: other.write(one_row(300), mode="append"),
+    }[racer])
+    if racer == "append":
+        assert t.write(one_row(100), mode=mode) == 2
+        assert sorted(r.id for r in t.read().collect()) == [100, 300]
+        return
+    with pytest.raises(ConcurrentWriteError, match="conflicts with version 1"):
+        t.write(one_row(100), mode=mode)
+    ids = {r.id for r in t.read().collect()}
+    if racer == "constraint":
+        assert t.constraints() == {"small": "id < 50"} and ids == set(range(10))
+    else:
+        assert ids == {200}
 
 
 def test_history_counts_match_snapshot_and_written_files(spark, tmp_path, base_df):

@@ -81,8 +81,6 @@ def test_wap_schema_and_mode_guards(spark, tmp_path):
 
 
 def test_publish_retries_through_version_race(spark, tmp_path, monkeypatch):
-    from delta_lake_spark.tables.managed import ConcurrentWriteError
-
     t = ManagedTable(spark, str(tmp_path / "t"))
     t.write(_rows(spark, 0, 20))
     stage = t.clone(str(tmp_path / "stage"))
@@ -104,12 +102,45 @@ def test_publish_retries_through_version_race(spark, tmp_path, monkeypatch):
                     "schema": self._entry()["schema"],
                 },
             )
-            raise ConcurrentWriteError("simulated race")
         return real_commit(self, entry)
 
     monkeypatch.setattr(ManagedTable, "_commit", flaky_commit)
     t.publish_from(stage)
     assert t.read().count() == 30  # published despite the lost first race
+
+
+@pytest.mark.parametrize("racer", ["add_column", "add_constraint"])
+def test_publish_raises_when_target_metadata_changes_mid_publish(
+    spark, tmp_path, monkeypatch, racer
+):
+    """publish_from commits against the target snapshot whose schema and
+    constraints it validated the staged data under: a racing metadata
+    change makes it raise instead of being reverted or bypassed."""
+    from delta_lake_spark.tables.managed import ConcurrentWriteError
+
+    t = ManagedTable(spark, str(tmp_path / "t"))
+    t.write(_rows(spark, 0, 20))
+    stage = t.clone(str(tmp_path / "stage"))
+    stage.write(_rows(spark, 100, 103), mode="append")
+    other = ManagedTable(spark, t.path)
+    real_check = t._enforce_constraints
+
+    def check_then_race(df, context):
+        real_check(df, context)
+        if racer == "add_column":
+            other.add_column("extra", "int")
+        else:
+            other.add_constraint("small", "id < 50")
+
+    monkeypatch.setattr(t, "_enforce_constraints", check_then_race)
+    with pytest.raises(ConcurrentWriteError, match="layout metadata"):
+        t.publish_from(stage)
+    assert t.history()[0]["operation"] == racer
+    if racer == "add_column":
+        assert t.schema().names == ["id", "p", "v", "extra"]
+    else:
+        assert t.constraints() == {"small": "id < 50"}
+    assert sorted(r.id for r in t.read().collect()) == list(range(20))
 
 
 def test_vacuum_grace_protects_inflight_publish_links(spark, tmp_path):

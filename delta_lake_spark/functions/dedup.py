@@ -18,152 +18,138 @@ so the DuckDB oracle reproduces signatures bit-for-bit.
 
 from __future__ import annotations
 
-import random
+from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from delta_lake_spark.functions.text import normalize_text, tokens
+from delta_lake_spark.functions.dedup_sql import (
+    MINHASH_BAND_SIZE,
+    _shingle_transform_sql,
+    band_keys_sql,
+    hashed_shingles_sql,
+    minhash_sig_sql,
+    minhash_signature_sql,
+    shingle_hash_sql,
+    simhash32_sql,
+    sql_arg,
+    token_shingle_seq_sql,
+    token_shingles_sql,
+    winnow_sql,
+)
 
-MINHASH_PRIME = 1_000_003
-MINHASH_K = 16
-MINHASH_BAND_SIZE = 4
-
-# Fixed MinHash permutation coefficients (seeded; shared with the SQL oracle).
-_rng = random.Random(42)
-MINHASH_COEFFS: list[tuple[int, int]] = [
-    (_rng.randrange(1, MINHASH_PRIME), _rng.randrange(0, MINHASH_PRIME)) for _ in range(MINHASH_K)
-]
-
-_POLY_COEFS = [31**p for p in range(7, -1, -1)]  # 31^7 .. 31^0
-
-
-def shingle_hash(s: Column) -> Column:
-    """Closed-form polynomial hash of the first 8 chars: sum ascii(c_i)*31^(8-i).
-    ascii('') == 0 in both Spark and DuckDB, so short strings pad with zeros."""
-    total = F.lit(0).cast("long")
-    for i, coef in enumerate(_POLY_COEFS, start=1):
-        total = total + F.ascii(F.substring(s, i, 1)).cast("long") * F.lit(coef)
-    return total
+# The public builders take a column name or SQL expression (str) and parse
+# their one definition in dedup_sql.py with a single F.expr.
 
 
-def token_shingles(text: Column | str, n: int = 3) -> Column:
-    """Distinct n-token shingles (space-joined) of the normalized text.
-
-    A plain column name takes the single-``F.expr`` fast path (same
-    expression, one Py4J parse instead of hundreds of Column calls — see
-    dedup_sql.py)."""
-    if isinstance(text, str):
-        from delta_lake_spark.functions.dedup_sql import token_shingles_sql
-
-        return F.expr(token_shingles_sql(text, n))
-    toks = tokens(normalize_text(text))
-    # guard, not greatest(...,0): Spark's sequence(1, 0) yields a DESCENDING
-    # [1, 0] (unlike DuckDB's empty range(1, 1)), so a <n-token document
-    # crashed on element_at(toks, 0) under ANSI. <n tokens -> [].
-    idx = F.sequence(F.lit(1), F.size(toks) - (n - 1))
-    sh = F.array_distinct(
-        F.transform(idx, lambda i: F.concat_ws(" ", *[F.element_at(toks, i + j) for j in range(n)]))
-    )
-    return F.when(F.size(toks) >= n, sh).otherwise(F.array().cast("array<string>"))
+def shingle_hash(s: str) -> Column:
+    """Polynomial hash of the first 8 chars (``shingle_hash_sql``)."""
+    return F.expr(shingle_hash_sql(sql_arg(s, "shingle_hash")))
 
 
-def _perm(a: int, b: int):
-    # NB: plain single-arg lambdas only — PySpark reads the Python signature
-    # to decide the higher-order function's arity, so default-arg closures
-    # (lambda s, a=a: ...) break with NUM_ARGS_MISMATCH.
-    return lambda h: (F.lit(a) * h + F.lit(b)) % MINHASH_PRIME
+def token_shingles(text: str, n: int = 3) -> Column:
+    """Distinct n-token shingles of the normalized text (``token_shingles_sql``)."""
+    return F.expr(token_shingles_sql(sql_arg(text, "token_shingles"), n))
 
 
-def minhash_signature(shingles: Column) -> Column:
-    """Array of MINHASH_K minima of (a*h(s)+b) mod p over the shingle set.
-
-    The base hash is materialized ONCE per shingle (one transform), then each
-    permutation is plain integer arithmetic over the hashed array — 16x less
-    string work than hashing inside every permutation.
-    """
-    hashes = F.transform(shingles, shingle_hash)
-    mins = [F.array_min(F.transform(hashes, _perm(a, b))) for a, b in MINHASH_COEFFS]
-    return F.array(*mins)
+def token_shingle_seq(text: str, n: int = 3) -> Column:
+    """In-order n-token shingles, duplicates kept (``token_shingle_seq_sql``)."""
+    return F.expr(token_shingle_seq_sql(sql_arg(text, "token_shingle_seq"), n))
 
 
-def band_keys(sig: Column) -> Column:
-    """LSH band keys: array of (band_id, key) structs; docs sharing any band
-    key are near-dup candidates."""
-    n_bands = MINHASH_K // MINHASH_BAND_SIZE
-    bands = []
-    for b in range(n_bands):
-        parts = [
-            F.element_at(sig, b * MINHASH_BAND_SIZE + j + 1).cast("string")
-            for j in range(MINHASH_BAND_SIZE)
-        ]
-        bands.append(F.struct(F.lit(b).alias("band"), F.concat_ws("-", *parts).alias("key")))
-    return F.array(*bands)
+def minhash_signature(shingles: str) -> Column:
+    """MINHASH_K permutation minima over a shingle array (``minhash_signature_sql``)."""
+    return F.expr(minhash_signature_sql(sql_arg(shingles, "minhash_signature")))
 
 
-def minhash_candidate_pairs(
-    docs: DataFrame, id_col: str, text_col: str, tokens_col: str | None = None
+def band_keys(sig: str) -> Column:
+    """LSH (band, key) structs of a signature (``band_keys_sql``)."""
+    return F.expr(band_keys_sql(sql_arg(sig, "band_keys")))
+
+
+def simhash32(text: str) -> Column:
+    """32-bit SimHash over the distinct token set (``simhash32_sql``)."""
+    return F.expr(simhash32_sql(sql_arg(text, "simhash32")))
+
+
+def winnow_fingerprints(text: str, window: int = 4) -> Column:
+    """Winnowing fingerprint set of the token-shingle sequence (``winnow_sql``)."""
+    return F.expr(winnow_sql(sql_arg(text, "winnow_fingerprints"), window))
+
+
+# --------------------------------------------------------------------- #
+# MinHash-LSH stages.  Batch pairs (minhash_candidate_pairs, d14, d18,
+# d19), the incremental index (ops/dedup_index.py) and the dedup ingest
+# (tables/incremental.py) are all built from these.
+# --------------------------------------------------------------------- #
+
+
+def _signatures(
+    docs: DataFrame,
+    id_col: str,
+    text_col: str,
+    tokens_col: str | None = None,
+    keep: Sequence[str] = (),
 ) -> DataFrame:
-    """Full MinHash-LSH near-dup pipeline -> verified candidate pairs with
-    exact shingle-Jaccard (intersection/union sizes as integers).
+    """(_id, *keep, _sh, _sig): distinct 3-token shingles and MinHash
+    signature of each document in the dedup graph.
 
-    Returns columns: id_a, id_b, inter_size, union_size, jaccard_bp
-    (jaccard in basis points, floor(10000*|∩|/|∪|) — integer, oracle-stable).
+    The one graph gate: a document is in the graph iff it has a shingle,
+    i.e. >= 3 NORMALIZED tokens (the oracle's _SHINGLES_SQL).  Raw and
+    normalized counts diverge on punctuation ('a.b.c' is 1 raw token but 3
+    normalized, 'x !!! y' is 3 raw but 2), and a shingle-less document has
+    an all-NULL signature: its band keys all equal '' and its Jaccard with
+    another such document divides by a union of 0.  A caller whose
+    keep-set differs from the graph applies its own gate to its own rows.
 
-    ``tokens_col``: optional pre-tokenized array column (the normalized
-    whitespace tokens, i.e. ``tokens(normalize_text(text))``).  A pipeline
-    that already tokenized the corpus (p03 tokenizes ONCE for contamination
-    grams + dedup shingles + LM scoring) passes it to skip the
-    normalize+split regex pass here; shingle values are identical.
+    ``tokens_col``: an optional pre-tokenized column (the normalized
+    whitespace tokens, ``tokens(normalize_text(text))``) that skips the
+    normalize+split pass; shingle values are identical.
     """
-    from delta_lake_spark.functions.dedup_sql import (
-        _shingle_transform_sql,
-        band_keys_sql,
-        hashed_shingles_sql,
-        minhash_sig_sql,
-        token_shingles_sql,
-    )
-
     shingles = (
         f"array_distinct({_shingle_transform_sql(tokens_col, 3)})"
         if tokens_col is not None
         else token_shingles_sql(text_col)
     )
-    base = (
-        docs.select(
-            F.col(id_col).alias("_id"),
-            F.expr(shingles).alias("_sh"),
-        )
-        # internal graph gate: documents with no shingles (fewer than 3
-        # NORMALIZED tokens) are not in the dedup graph. This is the same
-        # membership rule as the oracle's _SHINGLES_SQL (normalized token
-        # count), so callers don't need — and must not rely on — raw-token
-        # pre-filters: raw and normalized counts diverge on punctuation-
-        # joined text ('a.b.c' is 1 raw token but 3 normalized).
+    return (
+        docs.select(F.col(id_col).alias("_id"), *keep, F.expr(shingles).alias("_sh"))
         .filter(F.size("_sh") > 0)
         # hash each shingle ONCE to a materialized column, then take the 16
-        # permutation minima over the hashed array (identical values to
-        # minhash_signature; columnar form keeps the build to 3 expr parses)
+        # permutation minima over the hashed array (3 expr parses in all)
         .withColumn("_hs", F.expr(hashed_shingles_sql("_sh")))
         .withColumn("_sig", F.expr(minhash_sig_sql("_hs")))
         .drop("_hs")
     )
-    # materialize once: the shingle+signature computation is the expensive
-    # map-side pass and feeds both sides of the bucket self-join.
-    base = base.persist()
-    banded = base.select("_id", F.explode(F.expr(band_keys_sql("_sig"))).alias("_bk"))
+
+
+def _band_rows(sigs: DataFrame, band_size: int = MINHASH_BAND_SIZE) -> DataFrame:
+    """(_id, _bk): one row per LSH band of each signature; only these tiny
+    rows shuffle for candidate generation."""
+    return sigs.select("_id", F.explode(F.expr(band_keys_sql("_sig", band_size))).alias("_bk"))
+
+
+def _band_pairs(banded: DataFrame, earlier: DataFrame | None = None) -> DataFrame:
+    """Distinct candidate pairs (id_a, id_b) sharing a band key: id_a < id_b
+    within ``banded``, plus, when given, each ``earlier`` doc (the band rows
+    of an index) as id_a against each ``banded`` doc as id_b."""
     a = banded.select(F.col("_bk").alias("_bka"), F.col("_id").alias("id_a"))
     b = banded.select(F.col("_bk").alias("_bkb"), F.col("_id").alias("id_b"))
-    cand = (
-        a.join(b, (a._bka == b._bkb) & (a.id_a < b.id_b))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    # verification join pulls the shingle arrays back only for candidates
-    pairs = (
-        cand.join(base.select(F.col("_id").alias("id_a"), F.col("_sh").alias("_sha")), "id_a")
-        .join(base.select(F.col("_id").alias("id_b"), F.col("_sh").alias("_shb")), "id_b")
-    )
+    cand = a.join(b, (a._bka == b._bkb) & (a.id_a < b.id_b)).select("id_a", "id_b")
+    if earlier is not None:
+        e = earlier.select(F.col("_bk").alias("_bke"), F.col("_id").alias("id_a"))
+        cand = cand.unionByName(e.join(b, e._bke == b._bkb).select("id_a", "id_b"))
+    return cand.dropDuplicates(["id_a", "id_b"])
+
+
+def _shingle_sets(sigs: DataFrame, side: str) -> DataFrame:
+    """(id_<side>, _sh<side>) from (_id, _sh) rows: one side of a pair."""
+    return sigs.select(F.col("_id").alias(f"id_{side}"), F.col("_sh").alias(f"_sh{side}"))
+
+
+def _jaccard(pairs: DataFrame) -> DataFrame:
+    """Exact shingle-Jaccard of pairs (id_a, id_b) carrying both sets (_sha,
+    _shb): adds inter_size, union_size and jaccard_bp = floor(10000*|∩|/|∪|),
+    an integer, oracle-stable.  |∪| > 0 because graph members have shingles."""
     inter = F.size(F.array_intersect("_sha", "_shb"))
     union = F.size("_sha") + F.size("_shb") - inter
     return pairs.select(
@@ -175,39 +161,48 @@ def minhash_candidate_pairs(
     )
 
 
-def simhash32(text: Column | str) -> Column:
-    """32-bit SimHash over the distinct token set (hash = polynomial-8).
-    Bit k of the result is 1 iff sum over tokens of (2*bit_k(h)-1) > 0.
+def _batch_losers(
+    sigs: DataFrame,
+    banded: DataFrame,
+    min_jaccard_bp: int,
+    earlier: tuple[DataFrame, DataFrame] | None = None,
+) -> DataFrame:
+    """``id_b`` of each batch doc (``sigs``, its band rows ``banded``) that
+    near-dups a lower-id batch doc or any ``earlier`` doc, given as (band
+    rows, (_id, _sh) rows) — d09's greedy rule applied to one batch."""
+    sha = _shingle_sets(sigs, "a")
+    if earlier is not None:
+        sha = sha.unionByName(_shingle_sets(earlier[1], "a"))
+    cand = _band_pairs(banded, earlier[0] if earlier is not None else None)
+    # the verification joins pull shingle sets back for candidates only
+    pairs = cand.join(sha, "id_a").join(_shingle_sets(sigs, "b"), "id_b")
+    return (
+        _jaccard(pairs)
+        .filter(F.col("jaccard_bp") >= min_jaccard_bp)
+        .select("id_b")
+        .distinct()
+    )
 
-    Single pass: ONE ``aggregate`` fold over the token-hash array carrying
-    an ``array<long>[32]`` of per-bit counters (each step zips the
-    accumulator with the bit-position constants), instead of 32 separate
-    folds — same per-bit integer sums (addition is associative and the
-    token order is unchanged), 32x less array traversal.
+
+def minhash_candidate_pairs(
+    docs: DataFrame, id_col: str, text_col: str, tokens_col: str | None = None
+) -> DataFrame:
+    """Full MinHash-LSH near-dup pipeline -> verified candidate pairs with
+    exact shingle-Jaccard (intersection/union sizes as integers).
+
+    Returns columns: id_a, id_b, inter_size, union_size, jaccard_bp
+    (jaccard in basis points, floor(10000*|∩|/|∪|) — integer, oracle-stable).
+    ``tokens_col`` forwards a pre-tokenized column to ``_signatures`` (p03
+    tokenizes ONCE for contamination grams, dedup shingles and LM scoring).
     """
-    if isinstance(text, str):
-        from delta_lake_spark.functions.dedup_sql import simhash32_sql
-
-        return F.expr(simhash32_sql(text))
-    # bit positions 0..31 and place values 2^k, zipped against the
-    # 32-counter accumulator (Column constants — built per call, cheap)
-    bit_idx = F.array(*[F.lit(k) for k in range(32)])
-    pow2 = F.array(*[F.lit(1 << k).cast("long") for k in range(32)])
-    toks = F.array_distinct(tokens(normalize_text(text)))
-    hashes = F.transform(toks, shingle_hash)
-    sums = F.aggregate(
-        hashes,
-        F.array_repeat(F.lit(0).cast("long"), 32),
-        lambda acc, h: F.zip_with(
-            acc, bit_idx, lambda s, k: s + F.getbit(h, k) * 2 - 1
-        ),
+    # materialize once: the shingle+signature computation is the expensive
+    # map-side pass and feeds both sides of the bucket self-join.
+    base = _signatures(docs, id_col, text_col, tokens_col).persist()
+    cand = _band_pairs(_band_rows(base))
+    # the verification joins pull shingle sets back for candidates only
+    return _jaccard(
+        cand.join(_shingle_sets(base, "a"), "id_a").join(_shingle_sets(base, "b"), "id_b")
     )
-    weighted = F.zip_with(
-        sums,
-        pow2,
-        lambda s, p: F.when(s > 0, p).otherwise(F.lit(0).cast("long")),
-    )
-    return F.aggregate(weighted, F.lit(0).cast("long"), lambda a, x: a + x)
 
 
 def ngram_jaccard_pairs(
@@ -244,39 +239,6 @@ def ngram_jaccard_pairs(
             F.floor(inter * 10000 / union).cast("long").alias("jaccard_bp"),
         )
         .filter(F.col("jaccard_bp") >= min_jaccard_bp)
-    )
-
-
-def token_shingle_seq(text: Column | str, n: int = 3) -> Column:
-    """n-token shingles in document order, duplicates KEPT — the rolling
-    sequence winnowing needs (and order-stable across engines, unlike
-    distinct sets)."""
-    toks = tokens(normalize_text(text))
-    # <n tokens -> [] (sequence(1, 0) descends in Spark — see token_shingles)
-    idx = F.sequence(F.lit(1), F.size(toks) - (n - 1))
-    seq = F.transform(
-        idx, lambda i: F.concat_ws(" ", *[F.element_at(toks, i + j) for j in range(n)])
-    )
-    return F.when(F.size(toks) >= n, seq).otherwise(F.array().cast("array<string>"))
-
-
-def winnow_fingerprints(text: Column | str, window: int = 4) -> Column:
-    """Winnowing document fingerprint set (Schleimer et al., MOSS): the
-    distinct minima of a rolling window over the in-order token-shingle
-    hash sequence.  Robust to local edits — shared fingerprints localize
-    near-duplicate regions; integer-only, oracle-reproducible."""
-    if isinstance(text, str):
-        from delta_lake_spark.functions.dedup_sql import winnow_sql
-
-        return F.expr(winnow_sql(text, window))
-    hashes = F.transform(token_shingle_seq(text), shingle_hash)
-    # <window shingles -> [] (sequence(1, 0) descends in Spark)
-    idx = F.sequence(F.lit(1), F.size(hashes) - (window - 1))
-    fps = F.array_distinct(
-        F.transform(idx, lambda i: F.array_min(F.slice(hashes, i, window)))
-    )
-    return F.when(F.size(hashes) >= window, fps).otherwise(
-        F.array().cast("array<bigint>")
     )
 
 
@@ -429,18 +391,8 @@ def prefix_filter_jaccard_join(
     # shingles hash to longs up front (d06/d09 verification convention:
     # the oracle applies the same closed-form hash, so Jaccard over hash
     # sets is the shared exact semantic) — long keys shuffle and compare
-    # several times cheaper than bigram strings.  Built as ONE SQL string
-    # (dedup_sql fast path): the Column form inlines the normalize+split
-    # tree into every element_at and costs seconds of driver build time.
-    from delta_lake_spark.functions.dedup_sql import (
-        shingle_hash_sql,
-        token_shingles_sql,
-    )
-
-    toks_sql = (
-        f"array_distinct(transform({token_shingles_sql(text_col, n)}, "
-        f"s -> {shingle_hash_sql('s')}))"
-    )
+    # several times cheaper than bigram strings.
+    toks_sql = f"array_distinct({hashed_shingles_sql(token_shingles_sql(text_col, n))})"
     # NO size()>0 filter here: Catalyst pushes such a filter below
     # table_parallel's exchange, re-running the whole shingle pipeline
     # single-threaded in the scan stage (measured 24 s vs 1.3 s at sf0.1).

@@ -1,41 +1,59 @@
-"""SQL-text twins of the expression-heavy dedup builders.
+"""The generated dedup expressions, as Spark SQL text.
 
-Why this exists: the MinHash/SimHash/winnowing constructors assemble large
-expression trees (16 permutations x polynomial hashes, 32-counter folds).
-Built Column-by-Column through the Python API, one query build costs
-hundreds of Py4J round-trips (~0.5-1.0 s of driver latency per build at
-this box's ~1.3 ms/call).  Emitting the SAME expression as one SQL string
-through a single ``F.expr`` parse keeps the semantics bit-identical (the
-oracle sweep checks this) while cutting the build to a handful of calls.
+Each MinHash, SimHash, winnowing and shingle expression is defined once,
+here, as a string that the public builders in ``functions/dedup.py`` (and
+``similarity.hyperplane_signature``) parse with a single ``F.expr``.  Built
+Column by Column through the Python API, one of these trees (16
+permutations x polynomial hashes, 32-counter folds) cost hundreds of Py4J
+round-trips per query build; one SQL string costs one.
 
-These builders mirror ``functions/dedup.py`` term for term — any semantic
-change must land in BOTH (and in the DuckDB oracle mirrors in
-``queries/dedup.py``).
+Only the DuckDB oracle mirrors in ``queries/dedup.py`` restate these
+definitions, so a semantic change here must land there too.
+``tests/test_dedup_builders.py`` pins these against a Python reference;
+the oracle sweep compares them with the DuckDB mirrors.
 """
 
 from __future__ import annotations
 
-from delta_lake_spark.functions.dedup import (
-    MINHASH_BAND_SIZE,
-    MINHASH_COEFFS,
-    MINHASH_K,
-    MINHASH_PRIME,
-    _POLY_COEFS,
-)
+import random
+
+MINHASH_PRIME = 1_000_003
+MINHASH_K = 16
+MINHASH_BAND_SIZE = 4
+
+# Fixed MinHash permutation coefficients (seeded; shared with the SQL oracle).
+_rng = random.Random(42)
+MINHASH_COEFFS: list[tuple[int, int]] = [
+    (_rng.randrange(1, MINHASH_PRIME), _rng.randrange(0, MINHASH_PRIME)) for _ in range(MINHASH_K)
+]
+
+_POLY_COEFS = [31**p for p in range(7, -1, -1)]  # 31^7 .. 31^0
+
+
+def sql_arg(arg: str, builder: str) -> str:
+    """A builder's input: a column name or SQL expression string."""
+    if not isinstance(arg, str):
+        raise TypeError(
+            f"{builder}() takes a column name or SQL expression as str, "
+            f"not {type(arg).__name__}"
+        )
+    return arg
+
 
 # Spark SQL text for \s+ : backslash must survive the SQL string literal.
 _WS = r"'\\s+'"
 
 
 def normalize_sql(col: str) -> str:
-    """Mirror of text.normalize_text."""
+    """Lower-case, every non-[a-z0-9] run to one space, trimmed (the
+    SQL form of text.normalize_text)."""
     return (
         f"trim(regexp_replace(regexp_replace(lower({col}), '[^a-z0-9]+', ' '), {_WS}, ' '))"
     )
 
 
 def tokens_sql(expr: str) -> str:
-    """Mirror of text.tokens: empty string -> empty array (not [''])."""
+    """Whitespace tokens; empty string -> empty array (not [''])."""
     return (
         f"CASE WHEN trim({expr}) = '' THEN CAST(array() AS array<string>) "
         f"ELSE split(trim({expr}), {_WS}) END"
@@ -43,7 +61,9 @@ def tokens_sql(expr: str) -> str:
 
 
 def shingle_hash_sql(var: str) -> str:
-    """Mirror of dedup.shingle_hash: sum ascii(c_i) * 31^(8-i) as bigint."""
+    """Polynomial hash of the first 8 chars: sum ascii(c_i) * 31^(8-i) as
+    bigint.  ascii('') == 0 in both Spark and DuckDB, so short strings pad
+    with zeros."""
     terms = " + ".join(
         f"CAST(ascii(substring({var}, {i}, 1)) AS BIGINT) * {coef}"
         for i, coef in enumerate(_POLY_COEFS, start=1)
@@ -75,7 +95,7 @@ def _shingle_transform_sql(toks: str, n: int) -> str:
 
 
 def token_shingles_sql(col: str, n: int = 3) -> str:
-    """Mirror of dedup.token_shingles (distinct n-token shingles).  The
+    """Distinct n-token shingles (space-joined) of the normalized text.  The
     tokens array is let-bound so normalize+split runs once per row, not
     once per element_at inside the shingle lambda."""
     toks = tokens_sql(normalize_sql(col))
@@ -85,7 +105,9 @@ def token_shingles_sql(col: str, n: int = 3) -> str:
 
 
 def token_shingle_seq_sql(col: str, n: int = 3) -> str:
-    """Mirror of dedup.token_shingle_seq (in-order, duplicates kept)."""
+    """n-token shingles in document order, duplicates kept — the rolling
+    sequence winnowing needs (order-stable across engines, unlike distinct
+    sets)."""
     return let_sql(
         tokens_sql(normalize_sql(col)),
         _shingle_transform_sql("__tk", n),
@@ -98,7 +120,8 @@ def hashed_shingles_sql(shingles: str) -> str:
 
 
 def minhash_sig_sql(hashes: str) -> str:
-    """Mirror of dedup.minhash_signature given a pre-hashed array column."""
+    """Array of MINHASH_K minima of (a*h + b) mod p over a pre-hashed
+    shingle array."""
     mins = ", ".join(
         f"array_min(transform({hashes}, h -> ({a} * h + {b}) % {MINHASH_PRIME}))"
         for a, b in MINHASH_COEFFS
@@ -106,10 +129,16 @@ def minhash_sig_sql(hashes: str) -> str:
     return f"array({mins})"
 
 
+def minhash_signature_sql(shingles: str) -> str:
+    """MinHash signature of a shingle array; each shingle is hashed once
+    (let-bound), then the 16 minima are integer arithmetic."""
+    return let_sql(hashed_shingles_sql(shingles), minhash_sig_sql("__hs"), "__hs")
+
+
 def band_keys_sql(sig: str, band_size: int = MINHASH_BAND_SIZE) -> str:
-    """Mirror of dedup.band_keys: array of (band, key) structs.  The
-    ``band_size`` knob trades candidate fan-out for recall (d14 measures
-    this empirically)."""
+    """LSH band keys: array of (band, key) structs; docs sharing any band
+    key are near-dup candidates.  The ``band_size`` knob trades candidate
+    fan-out for recall (d14 measures this empirically)."""
     n_bands = MINHASH_K // band_size
     bands = []
     for b in range(n_bands):
@@ -122,7 +151,13 @@ def band_keys_sql(sig: str, band_size: int = MINHASH_BAND_SIZE) -> str:
 
 
 def simhash32_sql(col: str) -> str:
-    """Mirror of dedup.simhash32: single-pass 32-counter fold."""
+    """32-bit SimHash over the distinct token set (hash = polynomial-8).
+    Bit k of the result is 1 iff sum over tokens of (2*bit_k(h)-1) > 0.
+
+    Single pass: ONE ``aggregate`` fold over the token-hash array carrying
+    an ``array<long>[32]`` of per-bit counters (each step zips the
+    accumulator with the bit-position constants), instead of 32 separate
+    folds — same per-bit integer sums, 32x less array traversal."""
     bit_idx = "array(" + ", ".join(str(k) for k in range(32)) + ")"
     pow2 = "array(" + ", ".join(f"CAST({1 << k} AS BIGINT)" for k in range(32)) + ")"
     toks = f"array_distinct({tokens_sql(normalize_sql(col))})"
@@ -139,10 +174,14 @@ def simhash32_sql(col: str) -> str:
 
 
 def winnow_sql(col: str, window: int = 4) -> str:
-    """Mirror of dedup.winnow_fingerprints.  The hash array is let-bound:
-    the windowed-minima lambda references it per window position, which
-    without the binding re-ran the whole tokenize+hash pipeline per
-    position (quadratic in document length)."""
+    """Winnowing document fingerprint set (Schleimer et al., MOSS): the
+    distinct minima of a rolling window over the in-order token-shingle
+    hash sequence.  Robust to local edits — shared fingerprints localize
+    near-duplicate regions; integer-only, oracle-reproducible.
+
+    The hash array is let-bound: the windowed-minima lambda references it
+    per window position, which without the binding re-ran the whole
+    tokenize+hash pipeline per position (quadratic in document length)."""
     hashes = hashed_shingles_sql(token_shingle_seq_sql(col))
     return let_sql(
         hashes,

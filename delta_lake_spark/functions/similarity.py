@@ -18,6 +18,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from delta_lake_spark.functions.dedup_sql import let_sql, sql_arg
+
 N_HYPERPLANES = 16
 
 
@@ -67,19 +69,12 @@ def hyperplanes(dim: int, seed: int = 7) -> list[list[float]]:
     return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(N_HYPERPLANES)]
 
 
-def hyperplane_signature(vec: Column | str, dim: int, seed: int = 7) -> Column:
+def hyperplane_signature(vec: str, dim: int, seed: int = 7) -> Column:
     """Random-hyperplane LSH signature (bigint bitmask): bit i = 1 iff
     dot(vec, h_i) > 0 for N_HYPERPLANES fixed seeded hyperplanes.  The sign
-    test is bit-stable across engines because ``dot`` folds strictly
-    left-to-right in both."""
-    if isinstance(vec, str):
-        return F.expr(hyperplane_signature_sql(vec, dim, seed))
-    v = as_double(vec)
-    out = F.lit(0).cast("long")
-    for i, plane in enumerate(hyperplanes(dim, seed)):
-        d = dot(v, F.array(*[F.lit(x) for x in plane]))
-        out = out + F.when(d > 0, F.lit(2**i).cast("long")).otherwise(F.lit(0).cast("long"))
-    return out
+    test is bit-stable across engines because the dot folds strictly
+    left-to-right in both.  ``vec`` is a column name or SQL expression."""
+    return F.expr(hyperplane_signature_sql(sql_arg(vec, "hyperplane_signature"), dim, seed))
 
 
 Q_SCALE = 127
@@ -127,13 +122,11 @@ def qdot(a: Column, b: Column) -> Column:
 
 
 def hyperplane_signature_sql(col: str, dim: int, seed: int = 7) -> str:
-    """SQL-text twin of ``hyperplane_signature`` (single ``F.expr`` parse vs
+    """SQL text of ``hyperplane_signature`` (one ``F.expr`` parse instead of
     ~1,000 Py4J calls for 16 planes x 64 double literals — same rationale as
     functions/dedup_sql.py).  Python float ``repr`` round-trips exactly
     through Spark's double-literal parser, so the sign tests are
-    bit-identical with the Column builder and the DuckDB oracle."""
-    from delta_lake_spark.functions.dedup_sql import let_sql
-
+    bit-identical with the DuckDB oracle."""
     # let-bind the double-cast vector: embedded per plane it would be
     # re-cast 16x per row (half the signature's work for a 64-dim vector)
     v = f"transform({col}, x -> CAST(x AS DOUBLE))"

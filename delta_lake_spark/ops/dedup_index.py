@@ -7,17 +7,22 @@ document near-dup anything already seen?" touching only the new batch plus
 bucket-matched candidates.  This is that index, persisted as two managed
 tables:
 
-- ``sigs``   — (doc id, hashed shingle set) for EVERY document ever seen,
+- ``sigs``   — (doc id, shingle set, signature) for EVERY graph document
+  ever seen,
 - ``bands``  — (doc id, LSH band key) rows, the join-reducer.
 
-``add_batch`` computes signatures for the new batch only, finds candidates
-via band-key equi-joins (batch x batch and batch x index — never all-pairs),
-verifies exact shingle Jaccard on candidates only, and appends the batch's
-signatures (dropped docs included).  Semantics match d09's greedy rule
-exactly: a document is dropped iff it near-dups ANY lower-id document, even
-one that was itself dropped — so processing the corpus in id-ordered batches
-provably yields the same survivor set as the one-shot query
-(tests/test_dedup_index.py proves batchwise == d09).
+``add_batch`` runs the batch through the MinHash-LSH stages of
+functions/dedup.py: signatures for the new batch only, candidates via
+band-key equi-joins (batch x batch and batch x index — never all-pairs),
+exact shingle Jaccard on candidates only; then it appends the batch's
+signatures (dropped docs included).  Semantics are d09's greedy rule with
+d09's two gates.  The dedup GRAPH is every document with a shingle (>= 3
+normalized tokens, the one gate of ``_signatures``); the KEEP set is every
+document with >= 3 raw tokens.  A document is dropped iff it near-dups ANY
+lower-id graph document, even one that was itself dropped or is outside
+the keep set — so processing the corpus in id-ordered batches yields the
+same survivor set as the one-shot query (tests/test_dedup_index.py checks
+batchwise == d09).
 
 Scale notes: per batch, the expensive map-side shingling runs over new docs
 only; the index side is touched through (a) one band-key equi-join against
@@ -33,20 +38,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from delta_lake_spark.functions.dedup import _band_rows, _batch_losers, _signatures
 from delta_lake_spark.tables.managed import ManagedTable
 
 
 class IncrementalDedupIndex:
-    def __init__(
-        self,
-        spark: SparkSession,
-        path: str,
-        min_jaccard_bp: int = 8000,
-        min_tokens: int = 3,
-    ) -> None:
+    def __init__(self, spark: SparkSession, path: str, min_jaccard_bp: int = 8000) -> None:
         self.spark = spark
         self.min_jaccard_bp = min_jaccard_bp
-        self.min_tokens = min_tokens
         self.sigs = ManagedTable(spark, f"{path}/sigs")
         self.bands = ManagedTable(spark, f"{path}/bands")
 
@@ -54,7 +53,7 @@ class IncrementalDedupIndex:
         return ManagedTable.is_managed_table(self.sigs.path)
 
     def seen_hwm(self):
-        """Highest doc id ever ingested (None for an empty index)."""
+        """Highest doc id in the dedup graph so far (None for an empty index)."""
         if not self._exists():
             return None
         row = self.sigs.read().agg(F.max("_id").alias("h")).first()
@@ -64,35 +63,16 @@ class IncrementalDedupIndex:
         self, docs: DataFrame, id_col: str, text_col: str
     ) -> DataFrame:
         """Ingest one id-ordered batch; returns the batch's surviving rows
-        (original columns).  Appends ALL batch signatures to the index —
-        the greedy rule drops against every earlier doc, surviving or not."""
-        from delta_lake_spark.functions.dedup_sql import (
-            band_keys_sql,
-            hashed_shingles_sql,
-            minhash_sig_sql,
-            token_shingles_sql,
-        )
-
-        eligible = docs.filter(
-            F.size(F.split(F.trim(F.col(text_col)), r"\s+")) >= self.min_tokens
-        )
+        (original columns): those with >= 3 raw tokens that near-dup no
+        earlier doc.  Appends the signatures of ALL the batch's graph docs
+        to the index — the greedy rule drops against every earlier doc,
+        surviving or not."""
         # a landing batch is typically one file = one input split; the
         # shingle+minhash map is the expensive stage, so spread it across
         # the cluster first (the catalog.table_parallel discipline)
         par = self.spark.sparkContext.defaultParallelism
-        base = (
-            eligible.repartition(par, id_col).select(
-                F.col(id_col).alias("_id"),
-                F.expr(token_shingles_sql(text_col)).alias("_sh"),
-            )
-            .withColumn("_hs", F.expr(hashed_shingles_sql("_sh")))
-            .withColumn("_sig", F.expr(minhash_sig_sql("_hs")))
-            .drop("_hs")
-            .persist()
-        )
-        banded = base.select(
-            "_id", F.explode(F.expr(band_keys_sql("_sig"))).alias("_bk")
-        ).persist()
+        base = _signatures(docs.repartition(par, id_col), id_col, text_col).persist()
+        banded = _band_rows(base).persist()
 
         hwm = self.seen_hwm()
         if hwm is not None:
@@ -104,46 +84,10 @@ class IncrementalDedupIndex:
                     "ingestion changes greedy-dedup semantics — rebuild "
                     "instead"
                 )
-
-        a = banded.select(F.col("_bk").alias("_bka"), F.col("_id").alias("id_a"))
-        b = banded.select(F.col("_bk").alias("_bkb"), F.col("_id").alias("id_b"))
-        cand = (
-            a.join(b, (F.col("_bka") == F.col("_bkb")) & (F.col("id_a") < F.col("id_b")))
-            .select("id_a", "id_b")
-        )
-        if hwm is not None:
-            idx_b = self.bands.read().select(
-                F.col("_bk").alias("_bki"), F.col("_id").alias("id_a")
-            )
-            cross = (
-                idx_b.join(banded, F.col("_bki") == F.col("_bk"))
-                .select("id_a", F.col("_id").alias("id_b"))
-            )
-            cand = cand.unionByName(cross)
-        cand = cand.dropDuplicates(["id_a", "id_b"])
-
-        # exact-Jaccard verification pulls shingle sets for candidates only;
-        # the earlier side may live in the index, the newer side is batch-local
-        sha = base.select(F.col("_id").alias("id_a"), F.col("_sh").alias("_sha"))
-        if hwm is not None:
-            sha = sha.unionByName(
-                self.sigs.read().select(
-                    F.col("_id").alias("id_a"), F.col("_sh").alias("_sha")
-                )
-            )
-        shb = base.select(F.col("_id").alias("id_b"), F.col("_sh").alias("_shb"))
-        inter = F.size(F.array_intersect("_sha", "_shb"))
-        union = F.size("_sha") + F.size("_shb") - inter
-        dropped = (
-            cand.join(sha, "id_a")
-            .join(shb, "id_b")
-            .filter(F.floor(inter * 10000 / union) >= self.min_jaccard_bp)
-            .select(F.col("id_b").alias("_dropped_id"))
-            .distinct()
-        )
-        survivors = eligible.join(
-            dropped, eligible[id_col] == F.col("_dropped_id"), "left_anti"
-        )
+        earlier = None if hwm is None else (self.bands.read(), self.sigs.read())
+        dropped = _batch_losers(base, banded, self.min_jaccard_bp, earlier)
+        keep = docs.filter(F.size(F.split(F.trim(F.col(text_col)), r"\s+")) >= 3)
+        survivors = keep.join(dropped, keep[id_col] == dropped["id_b"], "left_anti")
 
         mode = "append" if self._exists() else "overwrite"
         self.sigs.write(base.select("_id", "_sh", "_sig"), mode=mode)

@@ -1,7 +1,7 @@
 """Near-duplicate detection queries: MinHash+LSH and SimHash over documents.
 
 The oracle SQL is *generated* from the same seeded MinHash coefficients and
-polynomial shingle hash as functions/dedup.py, so DuckDB reproduces the
+polynomial shingle hash as functions/dedup_sql.py, so DuckDB reproduces the
 signatures, buckets, and verified Jaccard values exactly (integer-only math).
 """
 
@@ -12,14 +12,21 @@ from pyspark.sql import functions as F
 
 from delta_lake_spark.catalog import table, table_parallel
 from delta_lake_spark.functions.dedup import (
+    _band_pairs,
+    _band_rows,
+    _jaccard,
+    _shingle_sets,
+    _signatures,
+    minhash_candidate_pairs,
+    simhash32,
+)
+from delta_lake_spark.functions.dedup_sql import (
     MINHASH_BAND_SIZE,
     MINHASH_COEFFS,
     MINHASH_K,
     MINHASH_PRIME,
-    minhash_candidate_pairs,
-    shingle_hash,
-    simhash32,
-    token_shingles,
+    hashed_shingles_sql,
+    token_shingles_sql,
 )
 from delta_lake_spark.queries.registry import register
 from delta_lake_spark.queries.text import _NORM_SQL, _NTOK_SQL
@@ -28,7 +35,7 @@ _POLY = [31**p for p in range(7, -1, -1)]
 
 
 def _hash_sql(var: str) -> str:
-    """Mirror of functions.dedup.shingle_hash for DuckDB."""
+    """DuckDB mirror of dedup_sql.shingle_hash_sql."""
     return "(" + " + ".join(
         f"ascii(substr({var}, {i}, 1))::BIGINT * {c}" for i, c in enumerate(_POLY, start=1)
     ) + ")"
@@ -370,6 +377,9 @@ def d12_simhash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 _D13_N = 5
 _D13_CONTAMINATED_BP = 2000
+# distinct hashes of the distinct 5-token shingles — distinct AFTER hashing
+# so a collision can't double-count an overlap (the oracle does the same)
+_D13_HASHES = f"array_distinct({hashed_shingles_sql(token_shingles_sql('text', _D13_N))})"
 
 _D13_GRAM = " || ' ' || ".join(f"toks[i+{j}]" for j in range(_D13_N))
 _D13_HS_SQL = f"""
@@ -419,13 +429,8 @@ def d13_contamination_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table_parallel(spark, sf_dir, "documents", "doc_id").filter(
         F.size(_toks(normalize_text("text"))) >= _D13_N
     )
-    # distinct 5-gram hashes per doc — distinct AFTER hashing so a collision
-    # can't double-count an overlap (the oracle does the same)
     hs = d.select(
-        "doc_id",
-        F.array_distinct(
-            F.transform(token_shingles("text", _D13_N), shingle_hash)
-        ).alias("hs"),
+        "doc_id", F.expr(_D13_HASHES).alias("hs")
     ).persist()  # two consumers (benchmark + corpus sides), one computation
     bench = hs.filter(F.col("doc_id") % 40 == 0).select(
         F.col("doc_id").alias("b_doc"),
@@ -493,12 +498,7 @@ ORDER BY g.doc_id
 def t10_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table_parallel(spark, sf_dir, "documents", "doc_id")
     hs = (
-        d.select(
-            "doc_id",
-            F.array_distinct(
-                F.transform(token_shingles("text", _D13_N), shingle_hash)
-            ).alias("hs"),
-        )
+        d.select("doc_id", F.expr(_D13_HASHES).alias("hs"))
         # >=1 gram == >=_D13_N NORMALIZED tokens, the oracle's gate — a
         # raw-token pre-filter diverges on punctuation-joined text
         .filter(F.size("hs") > 0)
@@ -594,33 +594,12 @@ ORDER BY band_size
 
 @register("d14_lsh_band_tuning", oracle=_d14_oracle())
 def d14_lsh_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from delta_lake_spark.functions.dedup_sql import (
-        band_keys_sql,
-        hashed_shingles_sql,
-        minhash_sig_sql,
-        token_shingles_sql,
-    )
-
-    # graph membership = >=1 shingle (>=3 NORMALIZED tokens, the oracle's
-    # _SHINGLES_SQL gate); raw-token pre-filters diverge on punctuation
     docs = table_parallel(spark, sf_dir, "documents", "doc_id")
-    base = (
-        docs.select(
-            F.col("doc_id").alias("_id"), F.expr(token_shingles_sql("text")).alias("_sh")
-        )
-        .filter(F.size("_sh") > 0)  # graph gate: >=3 normalized tokens
-        .withColumn("_hs", F.expr(hashed_shingles_sql("_sh")))
-        .withColumn("_sig", F.expr(minhash_sig_sql("_hs")))
-        .drop("_hs")
-        .persist()
-    )
-    x = base.select(F.col("_id").alias("id_a"), F.col("_sh").alias("_sha"))
-    y = base.select(F.col("_id").alias("id_b"), F.col("_sh").alias("_shb"))
-    inter = F.size(F.array_intersect("_sha", "_shb"))
-    union = F.size("_sha") + F.size("_shb") - inter
+    base = _signatures(docs, "doc_id", "text").persist()
+    x, y = _shingle_sets(base, "a"), _shingle_sets(base, "b")
     truth = (
-        x.join(y, F.col("id_a") < F.col("id_b"))
-        .filter(F.floor(inter * 10000 / union).cast("long") >= _D14_TH)
+        _jaccard(x.join(y, F.col("id_a") < F.col("id_b")))
+        .filter(F.col("jaccard_bp") >= _D14_TH)
         .select("id_a", "id_b")
         .persist()
     )
@@ -628,16 +607,7 @@ def d14_lsh_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     rows = []
     for bs in _D14_CONFIGS:
-        banded = base.select(
-            "_id", F.explode(F.expr(band_keys_sql("_sig", bs))).alias("_bk")
-        )
-        a = banded.select(F.col("_bk").alias("_bka"), F.col("_id").alias("id_a"))
-        b = banded.select(F.col("_bk").alias("_bkb"), F.col("_id").alias("id_b"))
-        cand = (
-            a.join(b, (a._bka == b._bkb) & (a.id_a < b.id_b))
-            .select("id_a", "id_b")
-            .dropDuplicates(["id_a", "id_b"])
-        )
+        cand = _band_pairs(_band_rows(base, bs))
         hit = truth.withColumn("_hit", F.lit(1))
         stats = (
             cand.join(hit, ["id_a", "id_b"], "left")
@@ -831,43 +801,11 @@ ORDER BY id_a, id_b
 """,
 )
 def d18_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from delta_lake_spark.functions.dedup_sql import (
-        band_keys_sql,
-        hashed_shingles_sql,
-        minhash_sig_sql,
-        token_shingles_sql,
-    )
-
-    # graph membership = >=1 shingle (>=3 NORMALIZED tokens, the oracle's
-    # _SHINGLES_SQL gate); raw-token pre-filters diverge on punctuation
     docs = table_parallel(spark, sf_dir, "documents", "doc_id")
-    base = (
-        docs.select(
-            F.col("doc_id").alias("_id"),
-            F.expr(token_shingles_sql("text")).alias("_sh"),
-        )
-        .filter(F.size("_sh") > 0)  # graph gate: >=3 normalized tokens
-        .withColumn("_hs", F.expr(hashed_shingles_sql("_sh")))
-        .withColumn("_sig", F.expr(minhash_sig_sql("_hs")))
-        .drop("_hs")
-        .persist()
-    )
-    banded = base.select(
-        "_id", F.explode(F.expr(band_keys_sql("_sig"))).alias("_bk")
-    )
-    a = banded.select(F.col("_bk").alias("_bka"), F.col("_id").alias("id_a"))
-    b = banded.select(F.col("_bk").alias("_bkb"), F.col("_id").alias("id_b"))
-    cand = (
-        a.join(b, (a._bka == b._bkb) & (a.id_a < b.id_b))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    pairs = cand.join(
-        base.select(F.col("_id").alias("id_a"), F.col("_sh").alias("_sha")),
-        "id_a",
-    ).join(
-        base.select(F.col("_id").alias("id_b"), F.col("_sh").alias("_shb")),
-        "id_b",
+    base = _signatures(docs, "doc_id", "text").persist()
+    cand = _band_pairs(_band_rows(base))
+    pairs = cand.join(_shingle_sets(base, "a"), "id_a").join(
+        _shingle_sets(base, "b"), "id_b"
     )
     inter = F.size(F.array_intersect("_sha", "_shb"))
     smaller = F.least(F.size("_sha"), F.size("_shb"))
@@ -921,38 +859,10 @@ ORDER BY id_a, id_b
 """,
 )
 def d19_edit_distance_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from delta_lake_spark.functions.dedup_sql import (
-        band_keys_sql,
-        hashed_shingles_sql,
-        minhash_sig_sql,
-        token_shingles_sql,
-    )
     from delta_lake_spark.functions.text import normalize_text
 
-    # graph membership = >=1 shingle (>=3 NORMALIZED tokens, the oracle's
-    # _SHINGLES_SQL gate); raw-token pre-filters diverge on punctuation
     docs = table_parallel(spark, sf_dir, "documents", "doc_id")
-    base = (
-        docs.select(
-            F.col("doc_id").alias("_id"),
-            F.expr(token_shingles_sql("text")).alias("_sh"),
-        )
-        .filter(F.size("_sh") > 0)  # graph gate: >=3 normalized tokens
-        .withColumn("_hs", F.expr(hashed_shingles_sql("_sh")))
-        .withColumn("_sig", F.expr(minhash_sig_sql("_hs")))
-        .drop("_hs")
-        .persist()
-    )
-    banded = base.select(
-        "_id", F.explode(F.expr(band_keys_sql("_sig"))).alias("_bk")
-    )
-    a = banded.select(F.col("_bk").alias("_bka"), F.col("_id").alias("id_a"))
-    b = banded.select(F.col("_bk").alias("_bkb"), F.col("_id").alias("id_b"))
-    cand = (
-        a.join(b, (a._bka == b._bkb) & (a.id_a < b.id_b))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    cand = _band_pairs(_band_rows(_signatures(docs, "doc_id", "text").persist()))
     # prefixes join back against candidates only — the expensive O(L^2)
     # metric touches |cand| rows, never the corpus square
     n = table_parallel(spark, sf_dir, "documents", "doc_id").select(

@@ -26,6 +26,12 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from delta_lake_spark.functions.dedup import (
+    _band_rows,
+    _batch_losers,
+    _signatures,
+    token_shingles,
+)
 from delta_lake_spark.tables.managed import ManagedTable
 
 
@@ -243,99 +249,42 @@ def near_dedup_ingest(
 
     The survivors table CARRIES its MinHash signature column (``_sig``,
     16 ints/row) — new batches candidate-join against stored signatures,
-    so the existing corpus is never re-tokenized; exact-Jaccard
-    verification re-shingles only the candidate doc pairs.  Per batch the
-    cost is O(batch) map-side + band-bucket joins + O(candidates)
-    verification — the corpus-scale incremental dedup shape.
+    so candidate generation never re-tokenizes the existing corpus; the
+    exact-Jaccard verification joins the candidates to shingle sets
+    computed from the existing rows' text.  Per batch the cost is
+    O(batch) map-side + band-bucket joins + the verification joins.
 
-    Invariants (tested): single-batch ingest == the batch ``near_dedup``;
-    re-ingest is a no-op; the table NEVER contains a verified near-dup
-    pair.  NOTE the greedy rule is order-dependent across batches (a doc
-    admitted yesterday keeps out today's near-dup, even if a global rerun
-    would have picked today's) — the standard streaming-dedup contract.
+    Invariants (tested): single-batch ingest == the batch ``near_dedup``
+    minus the shingle-less docs (see Gate); re-ingest is a no-op; the
+    table NEVER contains a verified near-dup pair.  NOTE the greedy rule
+    is order-dependent across batches (a doc admitted yesterday keeps out
+    today's near-dup, even if a global rerun would have picked today's) —
+    the standard streaming-dedup contract.
 
-    Docs with fewer than 3 tokens have no shingles and are excluded (route
-    them through :func:`insert_only_merge` on an exact fingerprint).
-    Returns the number of rows appended.
+    Gate: the one rule of the MinHash-LSH stages (``_signatures``) — a
+    doc takes part iff it has a shingle, i.e. >= 3 NORMALIZED tokens;
+    docs without one are neither admitted nor compared (route them through
+    :func:`insert_only_merge` on an exact fingerprint).  Returns the
+    number of rows appended.
     """
-    from delta_lake_spark.functions.dedup_sql import (
-        band_keys_sql,
-        hashed_shingles_sql,
-        minhash_sig_sql,
-        token_shingles_sql,
-    )
-
-    def sig_of(df: DataFrame) -> DataFrame:
-        return (
-            df.withColumn("_sh", F.expr(token_shingles_sql(text_col)))
-            .withColumn("_hs", F.expr(hashed_shingles_sql("_sh")))
-            .withColumn("_sig", F.expr(minhash_sig_sql("_hs")))
-            .drop("_hs")
-        )
-
-    def bands_of(df: DataFrame, idc: str) -> DataFrame:
-        return df.select(
-            F.col(idc), F.explode(F.expr(band_keys_sql("_sig"))).alias("_bk")
-        )
-
-    def verified(cand: DataFrame, left: DataFrame, right: DataFrame) -> DataFrame:
-        """cand(_new, _old) pairs whose exact shingle-Jaccard clears the
-        threshold; shingles come from the (small) candidate sides only."""
-        pairs = cand.join(
-            left.select(F.col(id_col).alias("_new"), F.col("_sh").alias("_sha")), "_new"
-        ).join(
-            right.select(F.col(id_col).alias("_old"), F.col("_sh").alias("_shb")), "_old"
-        )
-        inter = F.size(F.array_intersect("_sha", "_shb"))
-        union = F.size("_sha") + F.size("_shb") - inter
-        return pairs.filter(
-            F.floor(inter * 10000 / union).cast("long") >= min_jaccard_bp
-        ).select("_new")
-
-    prepped = sig_of(
-        batch.filter(F.size(F.split(F.trim(F.col(text_col)), r"\s+")) >= 3)
-    ).persist()
-    empty = table.latest_version() is None
-    if not empty:
+    new = _signatures(batch, id_col, text_col, keep=batch.columns)
+    earlier = None
+    if table.latest_version() is not None:
         existing = table.read()
-        prepped_new = prepped.join(
-            existing.select(id_col), id_col, "left_anti"
-        ).persist()
-    else:
-        prepped_new = prepped
-    nb = bands_of(prepped_new, id_col)
-
-    losers = None
-    if not empty:
-        eb = bands_of(existing, id_col)
-        cand_ext = (
-            nb.alias("n")
-            .join(eb.alias("e"), F.col("n._bk") == F.col("e._bk"))
-            .select(
-                F.col(f"n.{id_col}").alias("_new"), F.col(f"e.{id_col}").alias("_old")
-            )
-            .dropDuplicates(["_new", "_old"])
+        new = new.join(existing.select(F.col(id_col).alias("_id")), "_id", "left_anti")
+        earlier = (
+            _band_rows(existing.select(F.col(id_col).alias("_id"), "_sig")),
+            existing.select(
+                F.col(id_col).alias("_id"), token_shingles(text_col).alias("_sh")
+            ),
         )
-        ex_sh = existing.withColumn("_sh", F.expr(token_shingles_sql(text_col)))
-        losers = verified(cand_ext, prepped_new, ex_sh)
-    cand_int = (
-        nb.alias("a")
-        .join(
-            nb.alias("b"),
-            (F.col("a._bk") == F.col("b._bk"))
-            & (F.col(f"a.{id_col}") > F.col(f"b.{id_col}")),
-        )
-        .select(F.col(f"a.{id_col}").alias("_new"), F.col(f"b.{id_col}").alias("_old"))
-        .dropDuplicates(["_new", "_old"])
+    new = new.persist()
+    losers = _batch_losers(new, _band_rows(new), min_jaccard_bp, earlier)
+    survivors = new.join(losers, new["_id"] == losers["id_b"], "left_anti").select(
+        *batch.columns, "_sig"
     )
-    int_losers = verified(cand_int, prepped_new, prepped_new)
-    losers = int_losers if losers is None else losers.unionByName(int_losers)
-
-    survivors = prepped_new.join(
-        losers.distinct().withColumnRenamed("_new", id_col), id_col, "left_anti"
-    ).drop("_sh")
     n = survivors.count()
     if n:
         table.write(survivors, mode="append")
-    prepped.unpersist()
+    new.unpersist()
     return n

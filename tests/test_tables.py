@@ -1639,6 +1639,47 @@ def test_near_dedup_ingest_incremental(spark, tmp_path):
     assert pairs.count() == 0
 
 
+def test_near_dedup_ingest_gates_on_shingles(spark, tmp_path):
+    """The ingest's one gate is the graph's: a doc takes part iff it has a
+    shingle (>= 3 normalized tokens).  Doc 1 is one raw token but six
+    normalized ones and evicts its dup 2; doc 3 ('x !!! y') has 3 raw
+    tokens but no shingle, so it is not admitted.  A single-batch ingest
+    therefore equals near_dedup minus the shingle-less docs: {1}."""
+    from delta_lake_spark.functions.dedup import near_dedup, token_shingles
+    from delta_lake_spark.tables.incremental import near_dedup_ingest
+
+    batch = spark.createDataFrame(
+        [
+            (1, "alpha.beta.gamma.delta.epsilon.zeta"),
+            (2, "alpha beta gamma delta epsilon zeta"),
+            (3, "x !!! y"),
+        ],
+        "doc_id long, text string",
+    )
+    t = ManagedTable(spark, str(tmp_path / "corpus"))
+    assert near_dedup_ingest(t, batch) == 1
+    kept = near_dedup(batch, "doc_id", "text").filter(F.size(token_shingles("text")) > 0)
+    want = {r.doc_id for r in kept.collect()}
+    assert want == {1}
+    assert {r.doc_id for r in t.read().collect()} == want
+
+
+def test_near_dedup_ingest_skips_shingle_less_docs(spark, tmp_path):
+    """Docs with >= 3 raw but < 3 normalized tokens have all-NULL
+    signatures; paired, their Jaccard union is 0 (DIVIDE_BY_ZERO under
+    ANSI).  They stay out of the dedup and out of the table."""
+    from delta_lake_spark.tables.incremental import near_dedup_ingest
+
+    batch = spark.createDataFrame(
+        [(1, "x !!! y"), (2, "p ??? q"), (3, "one two three four")],
+        "doc_id long, text string",
+    )
+    t = ManagedTable(spark, str(tmp_path / "corpus"))
+    assert near_dedup_ingest(t, batch) == 1
+    assert near_dedup_ingest(t, batch.filter("doc_id < 3")) == 0
+    assert [r.doc_id for r in t.read().collect()] == [3]
+
+
 # --------------------------------------------------------------------- #
 # column mapping: rename/drop without rewrites (Delta columnMapping=name)
 # --------------------------------------------------------------------- #

@@ -165,15 +165,26 @@ def _batch_losers(
     sigs: DataFrame,
     banded: DataFrame,
     min_jaccard_bp: int,
-    earlier: tuple[DataFrame, DataFrame] | None = None,
+    earlier: tuple[DataFrame, DataFrame, str] | None = None,
 ) -> DataFrame:
     """``id_b`` of each batch doc (``sigs``, its band rows ``banded``) that
-    near-dups a lower-id batch doc or any ``earlier`` doc, given as (band
-    rows, (_id, _sh) rows) — d09's greedy rule applied to one batch."""
+    near-dups a lower-id batch doc or any ``earlier`` doc — d09's greedy
+    rule applied to one batch.  ``earlier`` is (band rows, rows with
+    ``_id``, SQL text of a row's shingle set: a stored ``_sh`` column or
+    ``token_shingles_sql`` of its text).  Only the earlier rows whose ids
+    are candidates are semi-joined through, so only they are shingled."""
     sha = _shingle_sets(sigs, "a")
-    if earlier is not None:
-        sha = sha.unionByName(_shingle_sets(earlier[1], "a"))
-    cand = _band_pairs(banded, earlier[0] if earlier is not None else None)
+    if earlier is None:
+        cand = _band_pairs(banded)
+    else:
+        bands, rows, shingles = earlier
+        cand = _band_pairs(banded, bands)
+        ids = cand.select(F.col("id_a").alias("_id"))
+        sha = sha.unionByName(
+            rows.join(ids, "_id", "left_semi").select(
+                F.col("_id").alias("id_a"), F.expr(shingles).alias("_sha")
+            )
+        )
     # the verification joins pull shingle sets back for candidates only
     pairs = cand.join(sha, "id_a").join(_shingle_sets(sigs, "b"), "id_b")
     return (

@@ -84,7 +84,7 @@ class IncrementalDedupIndex:
                     "ingestion changes greedy-dedup semantics — rebuild "
                     "instead"
                 )
-        earlier = None if hwm is None else (self.bands.read(), self.sigs.read())
+        earlier = None if hwm is None else (self.bands.read(), self.sigs.read(), "_sh")
         dropped = _batch_losers(base, banded, self.min_jaccard_bp, earlier)
         keep = docs.filter(F.size(F.split(F.trim(F.col(text_col)), r"\s+")) >= 3)
         survivors = keep.join(dropped, keep[id_col] == dropped["id_b"], "left_anti")

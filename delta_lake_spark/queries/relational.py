@@ -100,12 +100,11 @@ ORDER BY total_amount DESC, client_id
 """,
 )
 def q02_client_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from delta_lake_spark.pipeline.marts import client_stats_mart
+    from delta_lake_spark.pipeline.marts import client_stats_mart, conformed_customer
 
     return client_stats_mart(
         table(spark, sf_dir, "orders"),
-        table(spark, sf_dir, "customer"),
-        table(spark, sf_dir, "nation"),
+        conformed_customer(table(spark, sf_dir, "customer"), table(spark, sf_dir, "nation")),
     ).orderBy(F.desc("total_amount"), "client_id")
 
 
@@ -184,13 +183,12 @@ ORDER BY category, country
 """,
 )
 def q04_fraud_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from delta_lake_spark.pipeline.marts import fraud_analysis_mart
+    from delta_lake_spark.pipeline.marts import conformed_customer, fraud_analysis_mart
 
     return fraud_analysis_mart(
         table(spark, sf_dir, "lineitem"),
         table(spark, sf_dir, "orders"),
-        table(spark, sf_dir, "customer"),
-        table(spark, sf_dir, "nation"),
+        conformed_customer(table(spark, sf_dir, "customer"), table(spark, sf_dir, "nation")),
     ).orderBy("category", "country")
 
 

@@ -26,12 +26,8 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from delta_lake_spark.functions.dedup import (
-    _band_rows,
-    _batch_losers,
-    _signatures,
-    token_shingles,
-)
+from delta_lake_spark.functions.dedup import _band_rows, _batch_losers, _signatures
+from delta_lake_spark.functions.dedup_sql import token_shingles_sql
 from delta_lake_spark.tables.managed import ManagedTable
 
 
@@ -251,8 +247,11 @@ def near_dedup_ingest(
     16 ints/row) — new batches candidate-join against stored signatures,
     so candidate generation never re-tokenizes the existing corpus; the
     exact-Jaccard verification joins the candidates to shingle sets
-    computed from the existing rows' text.  Per batch the cost is
-    O(batch) map-side + band-bucket joins + the verification joins.
+    computed from the text of the existing rows whose ids are candidates
+    (no others are shingled).  The plan runs once per batch: the
+    survivors are materialized by their count and appended from there.
+    Per batch the cost is O(batch) map-side + band-bucket joins + the
+    verification joins.
 
     Invariants (tested): single-batch ingest == the batch ``near_dedup``
     minus the shingle-less docs (see Gate); re-ingest is a no-op; the
@@ -274,17 +273,19 @@ def near_dedup_ingest(
         new = new.join(existing.select(F.col(id_col).alias("_id")), "_id", "left_anti")
         earlier = (
             _band_rows(existing.select(F.col(id_col).alias("_id"), "_sig")),
-            existing.select(
-                F.col(id_col).alias("_id"), token_shingles(text_col).alias("_sh")
-            ),
+            existing.select(F.col(id_col).alias("_id"), text_col),
+            token_shingles_sql(text_col),
         )
     new = new.persist()
     losers = _batch_losers(new, _band_rows(new), min_jaccard_bp, earlier)
-    survivors = new.join(losers, new["_id"] == losers["id_b"], "left_anti").select(
-        *batch.columns, "_sig"
+    survivors = (
+        new.join(losers, new["_id"] == losers["id_b"], "left_anti")
+        .select(*batch.columns, "_sig")
+        .persist()
     )
     n = survivors.count()
     if n:
         table.write(survivors, mode="append")
+    survivors.unpersist()
     new.unpersist()
     return n

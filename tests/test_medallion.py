@@ -21,6 +21,22 @@ def rowset(df):
     return sorted(tuple(r) for r in df.collect())
 
 
+def assert_gold_equals_recompute(pipe):
+    """Every Gold mart equals its mart recomputed from the current Silver
+    tables."""
+    orders = pipe.read("silver", "orders")
+    customer = pipe.read("silver", "customer")
+    assert rowset(pipe.read("gold", "client_stats")) == rowset(
+        client_stats_mart(orders, customer)
+    )
+    assert rowset(pipe.read("gold", "daily_metrics")) == rowset(
+        daily_metrics_mart(orders, pipe.read("silver", "rates"))
+    )
+    assert rowset(pipe.read("gold", "fraud_analysis")) == rowset(
+        fraud_analysis_mart(pipe.read("silver", "lineitem"), orders, customer)
+    )
+
+
 @pytest.fixture(scope="module")
 def pipe(spark, tmp_path_factory):
     p = MedallionPipeline(spark, str(tmp_path_factory.mktemp("lake")), SF_SMOKE)
@@ -72,25 +88,10 @@ def test_incremental_refresh_matches_full_rebuild(spark, pipe):
     )
     pipe.ingest_orders_increment(increment, n_batches=2)
 
-    merged_orders = pipe.read("silver", "orders")
-    assert merged_orders.count() == base.count() + 20
-
-    customer = pipe.read("silver", "customer")
-    nation = pipe.read("silver", "nation")
-    rates = pipe.read("silver", "rates")
-    assert rowset(pipe.read("gold", "client_stats")) == rowset(
-        client_stats_mart(merged_orders, customer, nation)
-    )
-    assert rowset(pipe.read("gold", "daily_metrics")) == rowset(
-        daily_metrics_mart(merged_orders, rates)
-    )
+    assert pipe.read("silver", "orders").count() == base.count() + 20
     # fraud mart must track the refreshed orders too (ADVICE r3: refresh_gold
     # previously skipped it)
-    assert rowset(pipe.read("gold", "fraud_analysis")) == rowset(
-        fraud_analysis_mart(
-            pipe.read("silver", "lineitem"), merged_orders, customer, nation
-        )
-    )
+    assert_gold_equals_recompute(pipe)
 
 
 def test_upsert_moving_orders_keeps_gold_equal_to_recompute(pipe):
@@ -131,18 +132,66 @@ def test_upsert_moving_orders_keeps_gold_equal_to_recompute(pipe):
     assert orders.count() == n_before
     assert orders.filter(F.col("o_custkey") == emptied).count() == 0
     assert orders.filter(F.col("o_orderdate") == F.lit(moved_date)).count() == 0
+    assert_gold_equals_recompute(pipe)
 
-    customer = pipe.read("silver", "customer")
-    nation = pipe.read("silver", "nation")
-    assert rowset(pipe.read("gold", "client_stats")) == rowset(
-        client_stats_mart(orders, customer, nation)
+
+def test_small_silver_facts_make_one_stage_marts(pipe):
+    """Under the broadcast threshold each Silver fact is read as one
+    partition, so no Gold mart plans a hash exchange: each mart is one
+    stage, with no separate shuffle-map job for its groupBy."""
+    from tests.test_plans import plan_of
+
+    for name, mart in pipe._gold_marts().items():
+        assert "Exchange hashpartitioning" not in plan_of(mart, "simple"), name
+
+
+def test_gold_without_broadcast_keeps_exchange_and_equals_recompute(spark, pipe):
+    """With ``spark.sql.autoBroadcastJoinThreshold`` at -1 no fact is read
+    as one partition: the marts keep their hash exchange, and the Gold a
+    refresh writes still equals a recompute from Silver."""
+    from tests.test_plans import plan_of
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        for name, mart in pipe._gold_marts().items():
+            assert "Exchange hashpartitioning" in plan_of(mart, "simple"), name
+        pipe.refresh_gold()
+    finally:
+        spark.conf.set(key, prev)
+    assert_gold_equals_recompute(pipe)
+
+
+def test_silver_facts_over_the_cap_keep_exchange(pipe, monkeypatch):
+    """The one-partition rule takes both facts or neither: with a cap that
+    orders alone fits under but orders + lineitem do not, every mart keeps
+    its hash exchange."""
+    from delta_lake_spark.pipeline import medallion
+    from tests.test_plans import plan_of
+
+    orders = pipe._t("silver", "orders")._entry()["files"]
+    monkeypatch.setattr(
+        medallion, "_ONE_PARTITION_MAX_BYTES", sum(f["size"] for f in orders)
     )
-    assert rowset(pipe.read("gold", "daily_metrics")) == rowset(
-        daily_metrics_mart(orders, pipe.read("silver", "rates"))
-    )
-    assert rowset(pipe.read("gold", "fraud_analysis")) == rowset(
-        fraud_analysis_mart(pipe.read("silver", "lineitem"), orders, customer, nation)
-    )
+    for name, mart in pipe._gold_marts().items():
+        assert "Exchange hashpartitioning" in plan_of(mart, "simple"), name
+
+
+@pytest.mark.parametrize(
+    "value,want",
+    [("10485760b", 10485760), ("10m", 10485760), ("20MB", 20971520), ("1g", 1 << 30), ("-1", -1)],
+)
+def test_broadcast_threshold_reads_spark_byte_strings(spark, value, want):
+    from delta_lake_spark.pipeline.medallion import _broadcast_threshold
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        assert _broadcast_threshold(spark) == want
+    finally:
+        spark.conf.set(key, prev)
 
 
 def test_quarantine_catches_bad_bronze_rows(spark, tmp_path):

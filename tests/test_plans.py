@@ -84,7 +84,7 @@ def test_managed_table_mart_still_broadcasts(spark, tmp_path):
     """Gold marts built FROM managed tables (union-of-commit-dir scans)
     must keep the broadcast dim join — the snapshot wrapper must not push
     Catalyst into a sort-merge plan."""
-    from delta_lake_spark.pipeline.marts import client_stats_mart
+    from delta_lake_spark.pipeline.marts import client_stats_mart, conformed_customer
     from delta_lake_spark.tables import ManagedTable
 
     o = ManagedTable(spark, str(tmp_path / "o"))
@@ -94,7 +94,7 @@ def test_managed_table_mart_still_broadcasts(spark, tmp_path):
     c.write(table(spark, SF_SMOKE, "customer"))
     n = ManagedTable(spark, str(tmp_path / "n"))
     n.write(table(spark, SF_SMOKE, "nation"))
-    plan = executed_plan_of(client_stats_mart(o.read(), c.read(), n.read()))
+    plan = executed_plan_of(client_stats_mart(o.read(), conformed_customer(c.read(), n.read())))
     assert "BroadcastHashJoin" in plan and "SortMergeJoin" not in plan
 
 

@@ -1680,6 +1680,52 @@ def test_near_dedup_ingest_skips_shingle_less_docs(spark, tmp_path):
     assert [r.doc_id for r in t.read().collect()] == [3]
 
 
+def test_near_dedup_ingest_shingles_each_candidate_once(spark, tmp_path, monkeypatch):
+    """A batch over an existing table shingles each existing row whose id
+    is a candidate exactly once, and no other existing row: the
+    verification semi-joins the existing rows to the candidate ids before
+    shingling, and the survivors' count and append share one run of the
+    plan.  A Python UDF tapped into the ingest's shingle expression counts
+    the existing rows shingled."""
+    from delta_lake_spark.functions.dedup import _band_pairs, _band_rows, _signatures
+    from delta_lake_spark.functions.dedup_sql import token_shingles_sql
+    from delta_lake_spark.tables import incremental
+    from tests.conftest import SF_CORRECT
+
+    docs = spark.read.parquet(f"{SF_CORRECT}/documents.parquet").select("doc_id", "text")
+    t = ManagedTable(spark, str(tmp_path / "corpus"))
+    incremental.near_dedup_ingest(t, docs.filter("doc_id < 250"))
+    existing = t.read()
+    copy_of = existing.agg(F.min("doc_id")).first()[0]
+    # a verbatim copy of an admitted doc plus a novel doc
+    batch = docs.filter(F.col("doc_id") == copy_of).select(
+        F.lit(990_000).cast("long").alias("doc_id"), "text"
+    ).unionByName(
+        spark.createDataFrame(
+            [(990_001, "zebra quokka platypus narwhal axolotl")], "doc_id long, text string"
+        )
+    )
+    cand = _band_pairs(
+        _band_rows(_signatures(batch, "doc_id", "text")),
+        _band_rows(existing.select(F.col("doc_id").alias("_id"), "_sig")),
+    )
+    n_cand = cand.filter(F.col("id_a") < 990_000).select("id_a").distinct().count()
+
+    acc = spark.sparkContext.accumulator(0)
+
+    def seen(text):
+        acc.add(1)
+        return text
+
+    spark.udf.register("shingle_tap", seen, "string")
+    monkeypatch.setattr(
+        incremental, "token_shingles_sql", lambda col: token_shingles_sql(f"shingle_tap({col})")
+    )
+    assert incremental.near_dedup_ingest(t, batch) == 1
+    assert 1 <= acc.value == n_cand < existing.count()
+    assert 990_000 not in {r.doc_id for r in t.read().collect()}
+
+
 # --------------------------------------------------------------------- #
 # column mapping: rename/drop without rewrites (Delta columnMapping=name)
 # --------------------------------------------------------------------- #

@@ -49,9 +49,10 @@ import re
 import shutil
 import time
 import uuid
-from typing import Any, Callable
+from functools import reduce
+from typing import Any, Callable, Iterable
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
@@ -280,6 +281,16 @@ _CDC_VER = "_commit_version"
 # two-tier design.
 _ROW_ID = "_row_id"
 
+# MERGE row outcomes (_merge_outcomes): the tag column of the one frame the
+# rewrite, the change-data sidecar and operationMetrics read, and the struct
+# of each target row's values as it was before the merge
+_OUT = "__merge_outcome"
+_PRE = "__merge_pre"
+_COPY, _MATCH, _UPDATE, _DELETE = "copied", "unchanged", "updated", "deleted"
+_BYS_UPDATE, _BYS_DELETE = "updated_by_source", "deleted_by_source"
+_INSERT, _SOURCE = "inserted", "source"
+_COUNTED = (_SOURCE, _COPY, _MATCH, _UPDATE, _DELETE, _INSERT, _BYS_UPDATE, _BYS_DELETE)
+
 
 # Per-file Bloom filters (point-lookup data skipping).  min/max stats prune
 # range predicates but are useless for `=` on high-cardinality unclustered
@@ -491,6 +502,131 @@ def _filters_expr(filters: list[tuple[str, str, Any]]) -> "Column":
     return out
 
 
+def _check_clause(
+    name: str,
+    action: str,
+    actions: tuple[str, ...],
+    condition: "Column | str | None",
+    assignments: "dict[str, Column | str] | None" = None,
+    set_name: str = "",
+    keys: "list[str] | tuple[()]" = (),
+) -> None:
+    """Validate one MERGE clause: its action, a condition only with an
+    action other than ``ignore``, and assignments (``set_name``) only with
+    an update and off the merge keys (a by-source update needs them)."""
+    if action not in actions:
+        raise ValueError(f"bad {name}: {action!r}")
+    if condition is not None and action == "ignore":
+        raise ValueError(f"a condition with {name}='ignore' is a no-op")
+    if action == "update" and not assignments:
+        raise ValueError(f"{name}='update' requires {set_name}")
+    if assignments and not action.startswith("update"):
+        raise ValueError(f"{set_name} implies an update, not {name}={action!r}")
+    bad = sorted(set(assignments or ()) & set(keys))
+    if bad:
+        raise ValueError(f"{set_name} cannot assign merge keys: {bad}")
+
+
+def _q(name: str) -> str:
+    """``name`` quoted as a SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _as_col(e: "Column | str") -> Column:
+    """A clause expression as a Column (a string parses with ``F.expr``)."""
+    return F.expr(e) if isinstance(e, str) else e
+
+
+def _merge_outcomes(
+    target: DataFrame,
+    src: DataFrame,
+    keys: list[str],
+    schema: StructType,
+    when_matched: str,
+    matched_condition: "Column | str | None",
+    update_set: "dict[str, Column | str] | None",
+    when_not_matched_by_source: str,
+    not_matched_by_source_set: "dict[str, Column | str] | None",
+    not_matched_by_source_condition: "Column | str | None",
+) -> DataFrame:
+    """One MERGE's target rows LEFT-joined once with the source (a small
+    source is broadcast), each tagged in ``_OUT`` with its outcome and
+    carrying its output values under the table's column names (plus the
+    target's ``_row_id`` when it has one) and its values before the merge
+    as the ``_PRE`` struct.  Clause expressions name the target ``t`` and
+    the source ``s``; the by-source clause, which sees no source row,
+    names target columns bare and is evaluated on the target alone."""
+    cols = schema.fieldNames()
+    by_source = when_not_matched_by_source != "ignore"
+    if by_source:
+        cond = not_matched_by_source_condition
+        target = target.select(
+            "*",
+            (F.lit(True) if cond is None else _as_col(cond)).alias("__merge_by_source"),
+            *[
+                _as_col(e).cast(schema[c].dataType).alias(f"__merge_set_{c}")
+                for c, e in (not_matched_by_source_set or {}).items()
+            ],
+        )
+    right = src.selectExpr(
+        *[f"{_q(k)} AS __merge_key{i}" for i, k in enumerate(keys)], *map(_q, cols)
+    ).alias("s")
+    on = [F.col(f"t.{k}") == F.col(f"__merge_key{i}") for i, k in enumerate(keys)]
+    joined = target.alias("t").join(right, on, "left")
+    matched = F.col("__merge_key0").isNotNull()
+    # CASE WHEN takes a NULL condition as false: where a clause condition
+    # is NULL the clause does not apply and the row is kept.  Every
+    # condition is evaluated here, on the rows' values before the merge.
+    if matched_condition is not None:
+        matched = matched & _as_col(matched_condition)
+    outcome = F.when(
+        matched,
+        F.lit({"update_all": _UPDATE, "delete": _DELETE, "ignore": _MATCH}[when_matched]),
+    )
+    if by_source:
+        outcome = outcome.when(
+            F.col("__merge_key0").isNull() & F.col("__merge_by_source"),
+            F.lit(_BYS_DELETE if when_not_matched_by_source == "delete" else _BYS_UPDATE),
+        )
+    # each column's post-image as SQL text: the source value (update_all),
+    # or an assigned value evaluated as an extra column of the row
+    extra, post = [], {}
+    if when_matched == "update_all" and update_set:
+        extra = [
+            _as_col(e).cast(schema[c].dataType).alias(f"__merge_new_{c}")
+            for c, e in update_set.items()
+        ]
+        post = {c: _q(f"__merge_new_{c}") for c in update_set}
+    elif when_matched == "update_all":
+        post = {
+            c: f"CAST(s.{_q(c)} AS {schema[c].dataType.simpleString()})" for c in cols
+        }
+    by_source_post = {c: _q(f"__merge_set_{c}") for c in not_matched_by_source_set or {}}
+    tagged = joined.select("*", outcome.otherwise(F.lit(_COPY)).alias(_OUT), *extra)
+    out = []
+    for c in cols:
+        cases = "".join(
+            f" WHEN {_OUT} = '{tag}' THEN {values[c]}"
+            for tag, values in ((_UPDATE, post), (_BYS_UPDATE, by_source_post))
+            if c in values
+        )
+        v = f"CASE{cases} ELSE t.{_q(c)} END" if cases else f"t.{_q(c)}"
+        out.append(f"{v} AS {_q(c)}")
+    if _ROW_ID in target.columns:
+        out.append(f"t.{_ROW_ID} AS {_ROW_ID}")
+    pre = ", ".join(f"t.{_q(c)}" for c in cols)
+    return tagged.selectExpr(*out, _OUT, f"struct({pre}) AS {_PRE}")
+
+
+def _observed(obs: Observation, names: "Iterable[str]") -> dict[str, int]:
+    """The counts ``names`` that ``obs`` took on its frame's first action.
+    Spark drops the metrics of a plan part it proves empty and then
+    reports no row: every count is 0."""
+    # getRow waits for the query's listener to deliver the row
+    got = obs.get if obs._jo.getRow().size() else {}
+    return {name: int(got.get(name) or 0) for name in names}
+
+
 def _assigned(
     df: DataFrame,
     schema: StructType,
@@ -501,7 +637,7 @@ def _assigned(
     parses with ``F.expr``) cast to the table type — on every row, or only
     where ``cond`` holds."""
     for col, e in assignments.items():
-        val = (F.expr(e) if isinstance(e, str) else e).cast(schema[col].dataType)
+        val = _as_col(e).cast(schema[col].dataType)
         df = df.withColumn(
             col, val if cond is None else F.when(cond, val).otherwise(F.col(col))
         )
@@ -1052,7 +1188,6 @@ class ManagedTable(TableLog):
         merge_schema: bool = False,
         txn_app: str | None = None,
         txn_batch: int | None = None,
-        with_metrics: bool = False,
     ) -> int:
         """Upsert ``source`` into the table on equality of ``keys``.
 
@@ -1065,12 +1200,6 @@ class ManagedTable(TableLog):
         drops NULL-business-key changes (tables/scd.py), and the
         incremental except-date append compares null-safely
         (tables/incremental.py).
-
-        ``with_metrics=True`` records Delta-style ``operationMetrics``
-        (source rows, matched/updated/deleted/inserted row counts,
-        clause conditions applied) into the commit entry — read them back
-        via ``history()[0]["operation_metrics"]``.  Opt-in because the
-        counts cost two extra join jobs over the affected files.
 
         ``txn_app``/``txn_batch``: Delta txnAppId/txnVersion analog — a
         replayed foreachBatch merge (same app, batch id <= the committed
@@ -1107,6 +1236,9 @@ class ManagedTable(TableLog):
         - ``not_matched_condition``: only source rows satisfying this
           ``s`` predicate insert.
 
+        Every condition is evaluated on the rows before the merge, and a
+        NULL condition does not apply its clause.
+
         WHEN NOT MATCHED BY SOURCE (Delta 2.3+): target rows with no source
         match can be deleted or updated
         (``not_matched_by_source_set``, target-column expressions — the
@@ -1130,53 +1262,31 @@ class ManagedTable(TableLog):
         differ between source and target (e.g. a client changing country);
         skipping the old partition would strand the stale row (duplicate
         keys), so the merge falls back to file-stats pruning across the
-        whole table — Delta MERGE matches table-wide too.  The rewrite
-        itself is a distributed anti/union plan — with a small source, Spark
-        auto-broadcasts the anti-join side.
+        whole table — Delta MERGE matches table-wide too.
+
+        The plan is Delta's ``MergeIntoCommand``: the rows of the files
+        that may hold a match are joined once with the source and tagged
+        with their outcome (:func:`_merge_outcomes`); unmatched source rows
+        are the insert side.  The rewrite projects that frame, the
+        change-data sidecar filters it, and counts observed on the written
+        frame become every commit's Delta-style ``operationMetrics``, read
+        back via ``history()[0]["operation_metrics"]``.  An unconditional
+        ``update_all`` upsert (no by-source clause, row ids or change feed)
+        needs no outcomes: it writes the target rows no source row matches
+        (one broadcast anti-join) plus the source itself, replacing every
+        target row of a matched key with the source row, and counts as
+        updated the touched rows it did not keep.
         """
-        if when_matched not in ("update_all", "ignore", "delete"):
-            raise ValueError(f"bad when_matched: {when_matched!r}")
-        if when_not_matched not in ("insert_all", "ignore"):
-            raise ValueError(f"bad when_not_matched: {when_not_matched!r}")
-        if update_set:
-            if when_matched != "update_all":
-                raise ValueError(
-                    "update_set implies an update clause; "
-                    f"incompatible with when_matched={when_matched!r}"
-                )
-            bad_keys = sorted(set(update_set) & set(keys))
-            if bad_keys:
-                raise ValueError(f"update_set cannot assign merge keys: {bad_keys}")
-        if matched_condition is not None and when_matched == "ignore":
-            raise ValueError("matched_condition with when_matched='ignore' is a no-op")
-        if when_not_matched_by_source not in ("ignore", "delete", "update"):
-            raise ValueError(
-                f"bad when_not_matched_by_source: {when_not_matched_by_source!r}"
-            )
-        if when_not_matched_by_source == "update" and not not_matched_by_source_set:
-            raise ValueError(
-                "when_not_matched_by_source='update' requires "
-                "not_matched_by_source_set"
-            )
-        if not_matched_by_source_set:
-            if when_not_matched_by_source != "update":
-                raise ValueError(
-                    "not_matched_by_source_set implies "
-                    "when_not_matched_by_source='update'"
-                )
-            bad = sorted(set(not_matched_by_source_set) & set(keys))
-            if bad:
-                raise ValueError(
-                    f"not_matched_by_source_set cannot assign merge keys: {bad}"
-                )
-        if (
-            not_matched_by_source_condition is not None
-            and when_not_matched_by_source == "ignore"
+        for clause in (
+            ("when_matched", when_matched, ("update_all", "ignore", "delete"),
+             matched_condition, update_set, "update_set", keys),
+            ("when_not_matched", when_not_matched, ("insert_all", "ignore"),
+             not_matched_condition),
+            ("when_not_matched_by_source", when_not_matched_by_source,
+             ("ignore", "delete", "update"), not_matched_by_source_condition,
+             not_matched_by_source_set, "not_matched_by_source_set", keys),
         ):
-            raise ValueError(
-                "not_matched_by_source_condition with "
-                "when_not_matched_by_source='ignore' is a no-op"
-            )
+            _check_clause(*clause)
         bysource = when_not_matched_by_source != "ignore"
         if (txn_app is None) != (txn_batch is None):
             raise ValueError("txn_app and txn_batch must be passed together")
@@ -1290,160 +1400,54 @@ class ManagedTable(TableLog):
             keep_files, affected = [], []
             for f in entry["files"]:
                 (affected if hit(f) else keep_files).append(f)
-            target = self._read_scope(read_entry, affected)
-
-            # WHEN NOT MATCHED BY SOURCE (Delta 2.3+ clause): transform the
-            # unmatched-target branch BEFORE the standard matched/insert
-            # plan.  A row is matched XOR unmatched-by-source, and neither
-            # clause may assign merge keys, so pre-transforming unmatched
-            # rows cannot change what the matched plan below pairs up.
-            bysource_cdc: list[str] = []
-            bysource_touched = 0
-            if bysource:
-                hit = (
-                    src.select(*keys)
-                    .dropDuplicates(keys)
-                    .withColumn("_src_hit", F.lit(True))
-                )
-                cond = F.col("_src_hit").isNull()
-                if not_matched_by_source_condition is not None:
-                    c = not_matched_by_source_condition
-                    cond = cond & (F.expr(c) if isinstance(c, str) else c)
-                # materialize the clause decision BEFORE any assignment: the
-                # condition must evaluate against pre-update values (an
-                # update that falsifies its own condition would otherwise
-                # vanish from the postimage filter)
-                t2 = target.join(hit, keys, "left").withColumn("_bys", cond)
-                applies = F.col("_bys")
-                if cdf_on or with_metrics:
-                    bysource_touched = t2.filter(applies).count()
-                if when_not_matched_by_source == "delete":
-                    if cdf_on:
-                        bysource_cdc = self._write_cdc(
-                            t2.filter(applies).select(*table_cols)
-                        )
-                    # NULL condition = clause does NOT apply = row KEPT
-                    # (the raw ~applies is NULL there and would silently
-                    # drop the row — same hazard as delete_where's remaining)
-                    target = t2.filter(
-                        ~F.coalesce(applies, F.lit(False))
-                    ).drop("_src_hit", "_bys")
-                else:  # update
-                    upd = _assigned(
-                        t2, existing_schema, not_matched_by_source_set, applies
-                    )
-                    if cdf_on:
-                        bysource_cdc = self._write_cdc(
-                            t2.filter(applies).select(*table_cols),
-                            upd.filter(applies).select(*table_cols),
-                        )
-                    target = upd.drop("_src_hit", "_bys")
-
-            conditional = (
-                matched_condition is not None
-                or update_set
-                or not_matched_condition is not None
+            # update_all with no condition, no by-source clause and no row
+            # ids: the post-image is the whole source row, so updated plus
+            # inserted rows are exactly the source, and the rewrite is the
+            # target rows no source row matches (one broadcast anti-join)
+            # plus the source; the outcome join is not needed
+            whole_source = (
+                (when_matched, when_not_matched) == ("update_all", "insert_all")
+                and matched_condition is None and not_matched_condition is None
+                and not (update_set or row_tracked or cdf_on or bysource)
             )
-            if conditional or (row_tracked and when_matched == "update_all"):
-                merged = self._conditional_merge_plan(
-                    target,
-                    src,
-                    keys,
-                    table_cols,
-                    existing_schema,
-                    when_matched,
-                    when_not_matched,
-                    matched_condition,
-                    update_set,
-                    not_matched_condition,
-                    row_tracked=row_tracked,
+            # every source row is one branch of the written union, so one
+            # observation of the union counts source rows and outcomes; the
+            # branch is written only as the whole-source post-image
+            out_cols = table_cols + ([_ROW_ID] if row_tracked else [])
+            parts = [src.selectExpr(*map(_q, out_cols), f"'{_SOURCE}' AS {_OUT}")]
+            rows = inserts = None
+            target_seen = Observation()
+            if affected and whole_source:
+                target = self._read_scope(read_entry, affected)
+                kept = target.observe(target_seen, F.expr(f"count(1) AS {_UPDATE}"))
+                kept = kept.join(src, keys, "left_anti")
+                parts.append(kept.selectExpr(*map(_q, out_cols), f"'{_COPY}' AS {_OUT}"))
+            elif affected:
+                target = self._read_scope(read_entry, affected)
+                rows = _merge_outcomes(
+                    target, src, keys, existing_schema, when_matched,
+                    matched_condition, update_set, when_not_matched_by_source,
+                    not_matched_by_source_set, not_matched_by_source_condition,
                 )
-            elif when_matched == "update_all" and when_not_matched == "insert_all":
-                merged = src.unionByName(target.join(src, keys, "left_anti"))
-            elif when_matched == "ignore" and when_not_matched == "insert_all":
-                merged = target.unionByName(src.join(target, keys, "left_anti"))
-            elif when_matched == "delete":
-                merged = target.join(src, keys, "left_anti")
-                if when_not_matched == "insert_all":
-                    # only NOT-MATCHED source rows insert: a matched source
-                    # row's pair was consumed by the delete clause —
-                    # unioning ALL of src resurrected matched keys with the
-                    # source payload (r9 degenerate-tables sweep, R-delete)
-                    merged = merged.unionByName(
-                        src.join(target, keys, "left_anti")
-                    )
-            elif when_matched == "ignore":  # and when_not_matched == "ignore"
-                # both main clauses no-op: the merge is only its by-source
-                # effects (already applied to `target` above).  This combo
-                # previously fell into the update branch below and silently
-                # REPLACED matched rows (r9 degenerate-tables sweep, R-ignore)
-                merged = target
-            else:  # update_all matched rows only, no inserts
-                matched = src.join(target, keys, "left_semi")
-                merged = matched.unionByName(target.join(src, keys, "left_anti"))
-
-            op_metrics = None
-            if with_metrics:
-                on = None
-                for k in keys:
-                    c = F.col(f"t.{k}") == F.col(f"s.{k}")
-                    on = c if on is None else (on & c)
-
-                def as_cond(e):
-                    return F.expr(e) if isinstance(e, str) else e
-
-                pair = src.alias("s").join(target.alias("t"), on, "inner")
-                if matched_condition is not None:
-                    pair = pair.filter(as_cond(matched_condition))
-                n_matched = pair.count()
-                n_inserted = 0
-                if when_not_matched == "insert_all":
-                    anti = src.alias("s").join(target.alias("t"), on, "left_anti")
-                    if not_matched_condition is not None:
-                        anti = anti.filter(as_cond(not_matched_condition))
-                    n_inserted = anti.count()
-                op_metrics = {
-                    "num_source_rows": src.count(),
-                    **(
-                        {
-                            "num_target_rows_deleted_by_source": bysource_touched
-                            if when_not_matched_by_source == "delete"
-                            else 0,
-                            "num_target_rows_updated_by_source": bysource_touched
-                            if when_not_matched_by_source == "update"
-                            else 0,
-                        }
-                        if bysource
-                        else {}
-                    ),
-                    "num_target_rows_matched": n_matched,
-                    "num_target_rows_updated": n_matched
-                    if when_matched == "update_all"
-                    else 0,
-                    "num_target_rows_deleted": n_matched
-                    if when_matched == "delete"
-                    else 0,
-                    "num_target_rows_inserted": n_inserted,
-                }
-
-            cdc_files = None
-            if cdf_on:
-                cdc = self._merge_cdc(
-                    target,
-                    src,
-                    keys,
-                    table_cols,
-                    existing_schema,
-                    when_matched,
-                    when_not_matched,
-                    matched_condition,
-                    update_set,
-                    not_matched_condition,
+                parts.append(rows.select(*out_cols, _OUT))
+            if when_not_matched == "insert_all" and not whole_source:
+                ins = src.join(target, keys, "left_anti") if affected else src
+                ins = ins.alias("s")
+                if not_matched_condition is not None:
+                    ins = ins.filter(_as_col(not_matched_condition))
+                inserts = ins.selectExpr(*map(_q, out_cols), f"'{_INSERT}' AS {_OUT}")
+                parts.append(inserts)
+            dropped = [_DELETE, _BYS_DELETE, _UPDATE if whole_source else _SOURCE]
+            outcomes = Observation()
+            merged = (
+                reduce(DataFrame.unionByName, parts)
+                .observe(
+                    outcomes,
+                    *[F.expr(f"count_if({_OUT} = '{o}') AS {o}") for o in _COUNTED],
                 )
-                # by-source rows are invisible to the standard CDC join
-                # (deleted rows left the target; updated rows have no
-                # source match): their images are a sidecar of their own
-                cdc_files = self._write_sidecar_dir(cdc, "cdc") + bysource_cdc
+                .filter(f"{_OUT} NOT IN ({', '.join(repr(o) for o in dropped)})")
+                .drop(_OUT)
+            )
             if partition_by and bool(entry.get("optimize_write")):
                 # Delta optimizeWrite applies to MERGE rewrites too:
                 # without it every shuffle task of the rewrite writes a
@@ -1455,6 +1459,46 @@ class ManagedTable(TableLog):
                     *[F.col(c) for c in partition_by]
                 )
             _dir, files = self._write_commit_dir(merged, partition_by or None, entry)
+            n = _observed(outcomes, _COUNTED)
+            n_src = n[_SOURCE]
+            if whole_source:  # one target row per matched key, as for Delta
+                if affected:
+                    n[_UPDATE] = _observed(target_seen, [_UPDATE])[_UPDATE] - n[_COPY]
+                n[_INSERT] = n_src - n[_UPDATE]
+            reported = [_UPDATE, _DELETE, _INSERT] + (
+                [_BYS_UPDATE, _BYS_DELETE] if bysource else []
+            )
+            op_metrics = {
+                "num_source_rows": n_src,
+                "num_target_rows_matched": n[_MATCH] + n[_UPDATE] + n[_DELETE],
+                **{f"num_target_rows_{o}": n[o] for o in reported},
+            }
+            cdc_files = None
+            if cdf_on:
+                # pre-images: the target side of changed rows; post-images:
+                # their output side; inserts: the insert side
+                cdc = [] if inserts is None else [
+                    inserts.select(*table_cols, F.lit("insert").alias(_CDC_COL))
+                ]
+                if rows is not None:
+                    deleted = F.col(_OUT).isin(_DELETE, _BYS_DELETE)
+                    updated = F.col(_OUT).isin(_UPDATE, _BYS_UPDATE)
+                    cdc += [
+                        rows.filter(deleted | updated).select(
+                            f"{_PRE}.*",
+                            F.when(deleted, F.lit("delete"))
+                            .otherwise(F.lit("update_preimage"))
+                            .alias(_CDC_COL),
+                        ),
+                        rows.filter(updated).select(
+                            *table_cols, F.lit("update_postimage").alias(_CDC_COL)
+                        ),
+                    ]
+                cdc_files = (
+                    self._write_sidecar_dir(reduce(DataFrame.unionByName, cdc), "cdc")
+                    if cdc
+                    else []
+                )
         finally:
             src.unpersist()
         return self._commit(
@@ -1468,96 +1512,13 @@ class ManagedTable(TableLog):
                     else {}
                 ),
                 **({"cdc_files": cdc_files} if cdc_files is not None else {}),
-                **(
-                    {"operation_metrics": op_metrics}
-                    if op_metrics is not None
-                    else {}
-                ),
+                "operation_metrics": op_metrics,
                 "files": keep_files + files,
                 "schema": schema_json,
                 "pruned": prune,
                 "skipped_files": len(keep_files),
             }
         )
-
-    def _conditional_merge_plan(
-        self,
-        target: DataFrame,
-        src: DataFrame,
-        keys: list[str],
-        table_cols: list[str],
-        schema: StructType,
-        when_matched: str,
-        when_not_matched: str,
-        matched_condition: "Column | str | None",
-        update_set: "dict[str, Column | str] | None",
-        not_matched_condition: "Column | str | None",
-        row_tracked: bool = False,
-    ) -> DataFrame:
-        """General merge shape for conditional clauses: an inner join pairs
-        matched rows (aliased ``t``/``s`` so clause expressions can
-        reference both sides), a left-anti keeps unmatched target rows, a
-        second left-anti produces inserts.  Still one equi-join family on
-        the merge keys — with a small source Spark broadcasts it, same as
-        the unconditional fast paths.
-
-        ``row_tracked``: both frames carry ``_row_id`` (target real, source
-        null); matched rows keep the TARGET's id through update/keep, and
-        inserts stay null so the new file's base assigns them fresh ids.
-
-        Unlike the unconditional ``update_all`` path (which replaces all
-        rows of a key with the single source row), duplicate target keys
-        each pair with the source row and update independently — Delta
-        errors on multiple matches; here the documented unique-key
-        precondition makes the cases coincide.
-        """
-
-        def as_col(e: "Column | str") -> Column:
-            return F.expr(e) if isinstance(e, str) else e
-
-        cond = (
-            as_col(matched_condition)
-            if matched_condition is not None
-            else F.lit(True)
-        )
-        t, s = target.alias("t"), src.alias("s")
-        join_cond = None
-        for k in keys:
-            c = F.col(f"t.{k}") == F.col(f"s.{k}")
-            join_cond = c if join_cond is None else (join_cond & c)
-        matched = t.join(s, join_cond, "inner")
-        t_cols = [F.col(f"t.{c}").alias(c) for c in table_cols]
-        rid = [F.col(f"t.{_ROW_ID}").alias(_ROW_ID)] if row_tracked else []
-        if when_matched == "delete":
-            # a NULL matched_condition keeps the row (clause not applied);
-            # the raw ~cond complement would silently drop it instead
-            kept = matched.filter(~F.coalesce(cond, F.lit(False))).select(
-                *t_cols, *rid
-            )
-        elif when_matched == "ignore":
-            kept = matched.select(*t_cols, *rid)
-        else:  # update_all or partial update_set
-            out_cols = []
-            for c in table_cols:
-                if update_set and c in update_set:
-                    new_v = as_col(update_set[c])
-                elif update_set:
-                    new_v = F.col(f"t.{c}")  # untouched column of a partial update
-                else:
-                    new_v = F.col(f"s.{c}")  # update_all
-                new_v = new_v.cast(schema[c].dataType)
-                out_cols.append(
-                    F.when(cond, new_v).otherwise(F.col(f"t.{c}")).alias(c)
-                )
-            kept = matched.select(*out_cols, *rid)
-        merged = target.join(src, keys, "left_anti").unionByName(kept)
-        if when_not_matched == "insert_all":
-            ins = src.join(target, keys, "left_anti").alias("s")
-            if not_matched_condition is not None:
-                ins = ins.filter(as_col(not_matched_condition))
-            ins_cols = table_cols + ([_ROW_ID] if row_tracked else [])
-            merged = merged.unionByName(ins.select(*ins_cols))
-        return merged
 
     def _rel_path_expr(self) -> Column:
         """``_metadata.file_path`` (a percent-encoded ``file:/abs/path``
@@ -2458,94 +2419,6 @@ class ManagedTable(TableLog):
                 "cdf": False,
             }
         )
-
-    def _merge_cdc(
-        self,
-        target: DataFrame,
-        src: DataFrame,
-        keys: list[str],
-        table_cols: list[str],
-        schema: StructType,
-        when_matched: str,
-        when_not_matched: str,
-        matched_condition: "Column | str | None",
-        update_set: "dict[str, Column | str] | None",
-        not_matched_condition: "Column | str | None",
-    ) -> DataFrame:
-        """The exact CDC rows of one MERGE, mirroring the clause logic of
-        :meth:`_conditional_merge_plan`: matched-and-clause-applied rows
-        emit delete or update pre+post images, qualifying unmatched source
-        rows emit inserts.  Built on the same key equi-join family as the
-        merge itself (broadcast with a small source)."""
-
-        def as_col(e: "Column | str") -> Column:
-            return F.expr(e) if isinstance(e, str) else e
-
-        t, s = target.alias("t"), src.alias("s")
-        join_cond = None
-        for k in keys:
-            c = F.col(f"t.{k}") == F.col(f"s.{k}")
-            join_cond = c if join_cond is None else (join_cond & c)
-        matched = t.join(s, join_cond, "inner")
-        if matched_condition is not None:
-            matched = matched.filter(as_col(matched_condition))
-        t_cols = [F.col(f"t.{c}").alias(c) for c in table_cols]
-        s_cols = [
-            F.col(f"s.{c}").cast(schema[c].dataType).alias(c)
-            for c in table_cols
-        ]
-        frames: list[DataFrame] = []
-        if when_matched == "delete":
-            frames.append(
-                matched.select(*t_cols).withColumn(_CDC_COL, F.lit("delete"))
-            )
-        elif when_matched == "update_all" and update_set:
-            out_cols = [
-                (
-                    as_col(update_set[c]) if c in update_set else F.col(f"t.{c}")
-                ).cast(schema[c].dataType).alias(c)
-                for c in table_cols
-            ]
-            frames.append(
-                matched.select(*t_cols).withColumn(
-                    _CDC_COL, F.lit("update_preimage")
-                )
-            )
-            frames.append(
-                matched.select(*out_cols).withColumn(
-                    _CDC_COL, F.lit("update_postimage")
-                )
-            )
-        elif when_matched == "update_all":
-            frames.append(
-                matched.select(*t_cols).withColumn(
-                    _CDC_COL, F.lit("update_preimage")
-                )
-            )
-            frames.append(
-                matched.select(*s_cols).withColumn(
-                    _CDC_COL, F.lit("update_postimage")
-                )
-            )
-        # when_matched == "ignore": matched rows are untouched, no CDC
-        if when_not_matched == "insert_all":
-            ins = src.join(target, keys, "left_anti").alias("s")
-            if not_matched_condition is not None:
-                ins = ins.filter(as_col(not_matched_condition))
-            frames.append(
-                ins.select(*s_cols).withColumn(_CDC_COL, F.lit("insert"))
-            )
-        if not frames:
-            return (
-                src.alias("s")
-                .limit(0)
-                .select(*s_cols)
-                .withColumn(_CDC_COL, F.lit("insert"))
-            )
-        out = frames[0]
-        for fdf in frames[1:]:
-            out = out.unionByName(fdf)
-        return out
 
     def change_feed(
         self, from_version: int, to_version: int | None = None
@@ -3741,7 +3614,7 @@ class ManagedTable(TableLog):
         ``max_retries`` times, ending with both writers' changes.
 
         A full re-run — not a commit retry — because the conflicting
-        commit invalidates the merge's read snapshot (its anti-join and
+        commit invalidates the merge's read snapshot (its outcome join and
         pruning were computed against the old file list).  This is Delta's
         documented conflict-resolution recipe for concurrent MERGE.
         Persisting an expensive source before calling keeps retries cheap.

@@ -135,6 +135,42 @@ def test_upsert_moving_orders_keeps_gold_equal_to_recompute(pipe):
     assert_gold_equals_recompute(pipe)
 
 
+def test_upsert_merge_keeps_one_broadcast_join_and_its_jobs(spark, pipe, monkeypatch):
+    """The Silver orders upsert MERGE writes a frame that joins the touched
+    files with the broadcast source, and it runs no more Spark jobs than
+    the five the anti-join/union rewrite ran (bounds aggregate, broadcast,
+    write)."""
+    from tests.test_plans import plan_of
+
+    silver = pipe.read("silver", "orders")
+    cols = pipe.read("bronze", "orders").columns
+    old = silver.orderBy("o_orderkey").limit(200).select(*cols)
+    new = old.withColumn("o_orderkey", F.col("o_orderkey") + 20_000_000)
+    rows = old.withColumn("o_totalprice", F.col("o_totalprice") + 1.0).union(new.limit(100))
+    # a local source: the count below is the merge's jobs, not the batch's
+    batch = pipe.silver_orders_transform(spark.createDataFrame(rows.collect(), old.schema))
+    t = pipe._t("silver", "orders")
+    written = []
+    real = t._write_commit_dir
+
+    def spy(df, *args, **kwargs):
+        written.append(plan_of(df))  # planned while the merge source is cached
+        return real(df, *args, **kwargs)
+
+    monkeypatch.setattr(t, "_write_commit_dir", spy)
+    sc = spark.sparkContext
+    sc.setJobGroup("upsert-merge-jobs", "upsert merge")
+    try:
+        t.merge(batch, ["o_orderkey"])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("upsert-merge-jobs")
+    assert len(written) == 1
+    assert "BroadcastHashJoin" in written[0]
+    assert len(jobs) <= 5, len(jobs)
+    assert t.read().count() == silver.count() + 100
+
+
 def test_small_silver_facts_make_one_stage_marts(pipe):
     """Under the broadcast threshold each Silver fact is read as one
     partition, so no Gold mart plans a hash exchange: each mart is one

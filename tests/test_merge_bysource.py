@@ -123,12 +123,7 @@ def test_by_source_cdc_images(spark, tmp_path):
 def test_by_source_metrics(spark, tmp_path):
     t = _seed(spark, tmp_path)
     src = spark.createDataFrame([Row(id=2, val="b2", status="active")])
-    t.merge(
-        src,
-        ["id"],
-        when_not_matched_by_source="delete",
-        with_metrics=True,
-    )
+    t.merge(src, ["id"], when_not_matched_by_source="delete")
     m = t.history()[0]["operation_metrics"]
     assert m["num_target_rows_deleted_by_source"] == 2
     assert m["num_target_rows_matched"] == 1

@@ -988,14 +988,17 @@ def _race_after_commit_dir(monkeypatch, t, racer):
     monkeypatch.setattr(t, "_write_commit_dir", wrapped)
 
 
-@pytest.mark.parametrize("racer", ["delete", "dv", "append_key", "add_column"])
+@pytest.mark.parametrize(
+    "racer", ["delete", "dv", "append_key", "add_column", "bysource_append"]
+)
 def test_merge_raises_on_a_true_conflict(
     spark, tmp_path, base_df, monkeypatch, racer
 ):
     """A commit that lands while a merge runs and overlaps what the merge
     read still raises: it rewrote or deletion-vectored a file the merge
     rewrites, appended a key the merge source holds, or changed the
-    schema.  The racer's commit stays the head."""
+    schema; a by-source merge reads every row, so any racing append
+    conflicts with it.  The racer's commit stays the head."""
     from delta_lake_spark.tables import ConcurrentWriteError
 
     t = ManagedTable(spark, str(tmp_path / "mc"))
@@ -1008,18 +1011,24 @@ def test_merge_raises_on_a_true_conflict(
             spark.createDataFrame([Row(id=5, grp="r", val=0.0)]), mode="append"
         ),
         "add_column": lambda: other.add_column("extra", "int"),
+        "bysource_append": lambda: other.write(
+            spark.createDataFrame([Row(id=50, grp="r", val=0.0)]), mode="append"
+        ),
     }[racer])
     src = spark.createDataFrame(
         [Row(id=0, grp="a", val=-1.0), Row(id=5, grp="b", val=-5.0)]
     )
+    by_source = "delete" if racer == "bysource_append" else "ignore"
     with pytest.raises(ConcurrentWriteError, match="conflicts with version 1"):
-        t.merge(src, ["id"])
+        t.merge(src, ["id"], when_not_matched_by_source=by_source)
     assert t.latest_version() == 1
     ids = [r.id for r in t.read().collect()]
     if racer in ("delete", "dv"):
         assert sorted(ids) == [0, *range(2, 10)]
     elif racer == "append_key":
         assert sorted(ids) == [*range(6), *range(5, 10)]
+    elif racer == "bysource_append":
+        assert sorted(ids) == [*range(10), 50]
     else:
         assert t.schema().names == ["id", "grp", "val", "extra"]
 
@@ -2031,7 +2040,7 @@ def test_merge_operation_metrics_in_history(spark, tmp_path, base_df):
     src = spark.createDataFrame(
         [_R(id=i, grp="z", val=100.0 + i) for i in range(8, 13)]  # 8,9 match; 10-12 insert
     )
-    t.merge(src, ["id"], with_metrics=True)
+    t.merge(src, ["id"])
     m = t.history()[0]["operation_metrics"]
     assert m == {
         "num_source_rows": 5,
@@ -2050,17 +2059,21 @@ def test_merge_operation_metrics_in_history(spark, tmp_path, base_df):
         ["id"],
         matched_condition="s.val > t.val",  # 100+id beats id: never true
         not_matched_condition="s.id % 2 = 1",  # only 13 and 15 insert
-        with_metrics=True,
     )
     m2 = t.history()[0]["operation_metrics"]
     assert m2["num_source_rows"] == 5
     assert m2["num_target_rows_matched"] == 0
     assert m2["num_target_rows_inserted"] == 2
-    # rows untouched by metrics: merge result is unchanged by with_metrics
     assert t.read().count() == 15
-    # metrics absent when not requested
+    # a plain merge records metrics
     t.merge(src, ["id"])
-    assert "operation_metrics" not in t.history()[0]
+    assert t.history()[0]["operation_metrics"] == {
+        "num_source_rows": 5,
+        "num_target_rows_matched": 5,
+        "num_target_rows_updated": 5,
+        "num_target_rows_deleted": 0,
+        "num_target_rows_inserted": 0,
+    }
 
 
 def test_delete_keeps_null_predicate_rows(spark, tmp_path):
